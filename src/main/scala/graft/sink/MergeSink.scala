@@ -39,11 +39,15 @@ trait BatchEffect extends Serializable {
   *   - the table is `numBuckets` hash-buckets of the key; a manifest maps
   *     bucket → current data directory (Iceberg's manifest-of-data-files,
   *     one entry per bucket)
-  *   - merge(batch) touches ONLY the buckets containing batch keys: read
-  *     those buckets ∪ batch, keep newest per key (batch beats current;
-  *     within a batch, max `versionCol` wins), write replacement bucket
-  *     dirs, publish a new manifest that references the untouched buckets'
-  *     existing dirs — a partition-scoped merge, not a table rewrite
+  *   - merge(batch) touches ONLY the buckets containing batch keys. The
+  *     batch is persisted once (the touched-bucket lookup and the write
+  *     both read it); those buckets' rows ∪ batch go through ONE key-hash
+  *     shuffle into `n` parts, `n` dividing the bucket width so each part
+  *     holds whole buckets; one window keeps the newest row per key (batch
+  *     beats current; within a batch, max `versionCol` wins) and its sorted
+  *     output is written as one file per bucket. The new manifest
+  *     references the untouched buckets' existing dirs — a partition-scoped
+  *     merge, not a table rewrite
   *   - commit = write `_manifest.{N}`, atomically flip `_current`; the
   *     commit journal (one `_commits.d/<batchId>` marker per batch,
   *     periodically compacted into the `_commits` file) records applied
@@ -232,64 +236,41 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
             effects: Seq[BatchEffect] = Nil): Unit = tableLock.synchronized {
     if (isCommitted(batchId)) return
     effects.foreach(_.apply(batch, batchId))
-    val spark = batch.sparkSession
     val v = currentVersion
     val manifest = readManifest(v)
     val width = widthAt(v) // the width THIS manifest was written with
 
-    val keyed = batch
+    // persisted: the touched-bucket collect and the write both read it, so
+    // the upstream plan (a streaming job's state update) runs once per batch
+    val staged = batch
       .withColumn("__del",
         deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false)))
           .getOrElse(lit(false)))
       .drop(deleteCol.toSeq: _*)
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(keyCols.map(col): _*).orderBy(col(versionCol).desc)))
-      .filter(col("__rn") === 1).drop("__rn")
       .withColumn("__bucket", bucketCol(width))
+      .persist()
+    try {
+      val touched = staged.select("__bucket").distinct()
+        .collect().map(_.getInt(0)).toSet
+      if (touched.isEmpty) { recordCommit(batchId); return }
 
-    val touched = keyed.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    if (touched.isEmpty) { recordCommit(batchId); return }
+      // current rows of ONLY the touched buckets (partition-scoped read)
+      val touchedDirs = manifest.filter { case (b, _) => touched.contains(b) }
+        .values.toSeq.distinct
+      val rows = staged.withColumn("__gen", lit(1)) // batch row beats current row
+      val next = v + 1
+      val written = writeBuckets(
+        if (touchedDirs.isEmpty) rows
+        else current(batch.sparkSession, touchedDirs, width).unionByName(rows),
+        width, s"data_v$next")
 
-    // current rows of ONLY the touched buckets (partition-scoped read)
-    val touchedDirs = manifest.filter { case (b, _) => touched.contains(b) }
-      .values.toSeq.distinct.map(d => new HPath(root, d).toString)
-    val merged = {
-      val withCur =
-        if (touchedDirs.isEmpty) keyed
-        else {
-          // manifest entries point INSIDE __bucket=b partition dirs, so the
-          // read is already bucket-scoped; the partition column is not in
-          // the files — recompute it for the union/write
-          val cur = spark.read.parquet(touchedDirs: _*)
-            .withColumn("__bucket", bucketCol(width))
-            .withColumn("__del", lit(false))
-            .withColumn("__gen", lit(0))
-          cur.unionByName(keyed.withColumn("__gen", lit(1)))
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy(keyCols.map(col): _*)
-                .orderBy(col("__gen").desc))) // batch row beats current row
-            .filter(col("__rn") === 1).drop("__rn", "__gen")
-        }
-      // tombstone winners delete their key (WHEN MATCHED AND del THEN DELETE)
-      withCur.filter(!col("__del")).drop("__del")
-    }
-
-    val next = v + 1
-    val dataDir = s"data_v$next"
-    merged
-      .repartition(math.min(touched.size, width), col("__bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-      .parquet(new HPath(root, dataDir).toString)
-
-    // a tombstone batch can empty a touched bucket entirely — only buckets
-    // that actually wrote rows enter the manifest; emptied ones drop out
-    val written = writtenBuckets(dataDir)
-    val newManifest = manifest.filterNot { case (b, _) => touched.contains(b) } ++
-      (touched & written).map(b => b -> s"$dataDir/__bucket=$b")
-    writeVersion(next, newManifest, width)
-    recordCommit(batchId)
-    gc(newManifest)
+      // a tombstone batch can empty a touched bucket entirely — only buckets
+      // that actually wrote rows enter the manifest; emptied ones drop out
+      val newManifest = manifest -- touched ++ written
+      writeVersion(next, newManifest, width)
+      recordCommit(batchId)
+      gc(newManifest)
+    } finally staged.unpersist()
   }
 
   /** Admin migration: rewrite the WHOLE table at a new bucket width under
@@ -303,31 +284,56 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
     require(newBuckets > 0, "rebucket needs a positive bucket count")
     val v = currentVersion
     if (newBuckets == widthAt(v)) return
-    val all = read(spark)
+    val dirs = readManifest(v).values.toSeq.distinct
     val next = v + 1
     val newManifest =
-      if (readManifest(v).isEmpty) Map.empty[Int, String]
-      else {
-        val dataDir = s"data_v$next"
-        all.withColumn("__bucket", bucketCol(newBuckets))
-          .repartition(math.min(newBuckets, 512), col("__bucket"))
-          .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-          .parquet(new HPath(root, dataDir).toString)
-        writtenBuckets(dataDir).map(b => b -> s"$dataDir/__bucket=$b").toMap
-      }
+      if (dirs.isEmpty) Map.empty[Int, String]
+      else writeBuckets(current(spark, dirs, newBuckets), newBuckets, s"data_v$next")
     // nothing mutates until this atomic flip: a failed write above leaves
     // the old version (and old width) current
     writeVersion(next, newManifest, newBuckets)
     gc(newManifest)
   }
 
-  private def writtenBuckets(dataDir: String): Set[Int] = {
-    val p = new HPath(root, dataDir)
-    try fs.listStatus(p)
+  /** The table rows in `dirs` (bucket dirs relative to root), staged for
+    * [[writeBuckets]] at `width`: the files carry no partition column, so
+    * `__bucket` is recomputed; `__gen` 0 loses to a batch row. */
+  private def current(spark: SparkSession, dirs: Seq[String], width: Int): DataFrame =
+    spark.read.parquet(dirs.map(d => new HPath(root, d).toString): _*)
+      .withColumn("__bucket", bucketCol(width))
+      .withColumn("__del", lit(false))
+      .withColumn("__gen", lit(0))
+
+  /** The one bucketed write: keeps the newest row per key of `rows`
+    * (highest `__gen`, then highest `versionCol`) unless it is a tombstone,
+    * and writes it under `dataDir` as one file per `__bucket=b` dir; returns
+    * the manifest entries of the buckets written.
+    *
+    * One shuffle: `rows` are hash-partitioned on the key into `n` parts,
+    * where `n` divides `width`. Spark's partition id is
+    * pmod(murmur3(keys), n) and the bucket id pmod(murmur3(keys), width), so
+    * each part holds whole buckets; the window's sort on (`__bucket`, keys)
+    * then also serves the partitioned write, which needs no further
+    * exchange or sort and opens one file per bucket.
+    */
+  private def writeBuckets(rows: DataFrame, width: Int, dataDir: String): Map[Int, String] = {
+    val keys = keyCols.map(col)
+    val cores = rows.sparkSession.sparkContext.defaultParallelism
+    val n = (math.min(cores, width) to 1 by -1).find(width % _ == 0).get
+    rows.repartition(n, keys: _*)
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("__bucket") +: keys: _*)
+          .orderBy(col("__gen").desc, col(versionCol).desc)))
+      // tombstone winners delete their key (WHEN MATCHED AND del THEN DELETE)
+      .filter(col("__rn") === 1 && !col("__del"))
+      .drop("__rn", "__gen", "__del")
+      .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
+      .parquet(new HPath(root, dataDir).toString)
+    try fs.listStatus(new HPath(root, dataDir))
       .collect { case s if s.getPath.getName.startsWith("__bucket=") =>
-        s.getPath.getName.stripPrefix("__bucket=").toInt }
-      .toSet
-    catch { case _: FileNotFoundException => Set.empty }
+        s.getPath.getName.stripPrefix("__bucket=").toInt -> s"$dataDir/${s.getPath.getName}" }
+      .toMap
+    catch { case _: FileNotFoundException => Map.empty }
   }
 
   /** Manifest (with its journaled bucket width) + atomic `_current` flip.

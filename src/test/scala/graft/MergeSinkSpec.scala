@@ -4,7 +4,12 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sink.{BatchEffect, MergeSink, ProgressListener}
@@ -25,6 +30,69 @@ class MergeSinkSpec extends AnyFunSuite {
     sink.read(spark).collect()
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"), r.getAs[String]("text")))
       .toSet
+
+  /** Runs `f` and returns the executed plans of the parquet writes it ran;
+    * the listener bus is asynchronous, so this waits for the first one. */
+  private def writePlans(f: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (Plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Asserts one shuffle in the write and one data file per bucket dir of
+    * the current version's data dir. */
+  private def assertOneShuffleOneFilePerBucket(dir: String, plans: Seq[SparkPlan]): Unit = {
+    assert(plans.size == 1, s"expected one write, got ${plans.size}")
+    val shuffles = Plans.collect(plans.head) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1, s"expected one shuffle exchange in:\n${plans.head}")
+    val data = java.nio.file.Paths.get(dir, s"data_v${
+      Files.readString(java.nio.file.Paths.get(dir, "_current")).trim}")
+    val bucketDirs = Files.list(data).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("__bucket="))
+    assert(bucketDirs.nonEmpty)
+    bucketDirs.foreach { b =>
+      val files = Files.list(b).toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(n => !n.startsWith(".") && !n.startsWith("_"))
+      assert(files.length == 1, s"$b holds ${files.mkString(", ")}")
+    }
+  }
+
+  test("merge writes through one bucket-aligned shuffle, one file per bucket (widths 16 and 7)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("merge_plan").toString
+    val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos")
+    assert(sink.bucketCount == 16)
+    // two merges: the second unions the touched buckets' current rows
+    sink.merge((0 until 200).map(i => turn(s"c$i", 0, "v1", i)).toDF(), 0L)
+    val batch1 = (0 until 200 by 2).map(i => turn(s"c$i", 0, "v2", 1000 + i)) ++
+      (0 until 50).map(i => turn(s"n$i", 0, "v1", 2000 + i))
+    assertOneShuffleOneFilePerBucket(dir,
+      writePlans(sink.merge(batch1.toDF(), 1L)))
+    assert(tableOf(sink).size == 250)
+    // width 7 has no divisor near the core count: the whole merge is one part
+    assertOneShuffleOneFilePerBucket(dir, writePlans(sink.rebucket(spark, 7)))
+    assert(sink.bucketCount == 7)
+    val batch2 = (0 until 200 by 3).map(i => turn(s"c$i", 0, "v3", 3000 + i))
+    assertOneShuffleOneFilePerBucket(dir,
+      writePlans(sink.merge(batch2.toDF(), 2L)))
+    val table = tableOf(sink)
+    assert(table.size == 250)
+    assert(table.contains(("c0", 0, "v3")) && table.contains(("c2", 0, "v2")) &&
+      table.contains(("c1", 0, "v1")) && table.contains(("n7", 0, "v1")))
+  }
 
   test("rebucket migration: rows survive, width is journaled, reopening honors it") {
     import spark.implicits._
@@ -144,6 +212,11 @@ class MergeSinkSpec extends AnyFunSuite {
     val b1 = Seq(turn("a", 1, "v2", 10), turn("a", 1, "stale", 5), turn("b", 0, "v1", 11)).toDF()
     sink.merge(b1, 1L)
     assert(tableOf(sink) == Set(("a", 0, "v1"), ("a", 1, "v2"), ("b", 0, "v1")))
+
+    // a batch row beats the table row even at a LOWER version: recency of
+    // the batch is ordered before `pos`
+    sink.merge(Seq(turn("b", 0, "v2", 3)).toDF(), 2L)
+    assert(tableOf(sink) == Set(("a", 0, "v1"), ("a", 1, "v2"), ("b", 0, "v2")))
   }
 
   test("merge is partition-scoped: untouched buckets' data dirs are reused, not rewritten") {

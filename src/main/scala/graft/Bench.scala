@@ -8,10 +8,9 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
-import graft.stream.{OrderRepair, ToolPair}
-import graft.transform._
+import graft.jobs.TranscriptPipeline
+import graft.stream.ToolPair
 
 /** Driver-contract benchmark: one JSON line with per-query batch timings on
   * SPARK_GRAFT_SF_DIR plus the north-rule streaming metrics — end-to-end
@@ -54,12 +53,7 @@ object Bench {
     // off-heap state store (RocksDB) — opt-in experiment knob: moves the
     // per-conversation repair state out of the GC'd heap
     sys.env.get("SPARK_GRAFT_STATESTORE").map(p =>
-      "spark.sql.streaming.stateStore.providerClass" -> p).toSeq ++
-    // tmpfs shuffle is memory-to-memory — compressing it is a CPU/bandwidth
-    // tradeoff knob worth A/B-ing on a bandwidth-starved box (a cluster
-    // with network shuffle keeps compression on)
-    sys.env.get("SPARK_GRAFT_SHUFFLE_COMPRESS").map(v =>
-      "spark.shuffle.compress" -> v).toSeq
+      "spark.sql.streaming.stateStore.providerClass" -> p).toSeq
 
   private def newSession(cores: Int): SparkSession = {
     val b = SparkSession.builder()
@@ -77,12 +71,6 @@ object Bench {
     s
   }
 
-  private val turnSchema = StructType(Seq(
-    StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
-    StructField("role", StringType), StructField("text", StringType),
-    StructField("tool", StringType), StructField("ts", TimestampType),
-    StructField("pos", LongType)))
-
   /** (throughput rows/sec, p95 batch ms, wall sec, peak state-store rows). */
   private type RunResult = (Double, Double, Double, Long)
 
@@ -97,15 +85,6 @@ object Bench {
 
   private def statsOf(q: StreamingQuery): ProgressStats = {
     val ps = q.recentProgress.filter(_.numInputRows > 0)
-    if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
-      ps.foreach { p =>
-        // scalastyle:off println
-        println(s"GRAFT_BATCH rows=${p.numInputRows} durations=${p.durationMs} " +
-          s"state=${p.stateOperators.toSeq.map(s =>
-            s"keys=${s.numRowsTotal} upd=${s.numRowsUpdated} " +
-            s"rm=${s.numRowsRemoved} commitMs=${s.commitTimeMs} mem=${s.memoryUsedBytes}")}")
-        // scalastyle:on println
-      }
     val durs = ps.map(_.durationMs.getOrDefault("triggerExecution", 0L).toDouble).sorted
     val p95 =
       if (durs.isEmpty) 0.0
@@ -116,31 +95,21 @@ object Bench {
       ps.length)
   }
 
-  /** The streaming CEP pipeline under test: validation transforms
-    * (stop-guarded, flag-don't-drop) → watermark → per-conversation order
-    * repair → counting sink. `check = false` (warm-up runs) skips the
-    * emitted-rows gate — the warm-up subset's count is not plumbed through.
+  /** The streaming CEP pipeline under test: the production job's repair
+    * stream (`TranscriptPipeline.repaired`: validation → watermark →
+    * per-conversation order repair) into a counting sink. `check = false`
+    * (warm-up runs) skips the emitted-rows gate — the warm-up subset's
+    * count is not plumbed through.
     */
   private def streamOnce(spark: SparkSession, inputDir: String,
                          filesPerTrigger: Int, totalRows: Long,
                          check: Boolean = true): RunResult = {
-    val src = spark.readStream.schema(turnSchema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-    val transformed = Pipeline(src, Seq(
-        Required(Seq("conv_id", "turn_idx")),
-        DefaultValue(Map("tool" -> "none")),
-        Required(Seq("text")),
-        Truncate(Map("text" -> 256))))
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts", "pos")
-      .withWatermark("ts", "10 minutes")
-    // packed hot path: watermark BEFORE pack; binary payload + Long micros
-    // cross the typed boundary instead of decoded Strings + Timestamps
-    val repaired = OrderRepair.streamingPacked(OrderRepair.pack(transformed),
-      strict = false, gapMs = 600000L)
-
+    // the job's defaults (watermark, gap, strictness); `repaired` reads no
+    // sink, checkpoint or progress dir
+    val cfg = TranscriptPipeline.Config(inputDir, "", "", "", "",
+      maxFilesPerTrigger = filesPerTrigger)
     var emitted = 0L
-    val q = repaired.writeStream
+    val q = TranscriptPipeline.repaired(spark, cfg).writeStream
       .option("checkpointLocation",
         Files.createTempDirectory(java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.stream.TurnPacked], _: Long) =>
@@ -172,7 +141,7 @@ object Bench {
   private def joinOnce(spark: SparkSession, inputDir: String,
                        filesPerTrigger: Int, totalRows: Long,
                        expectedPairs: Long, check: Boolean = true): RunResult = {
-    val src = spark.readStream.schema(turnSchema)
+    val src = spark.readStream.schema(TranscriptPipeline.turnSchema)
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(inputDir)
     val paired = ToolPair.streaming(src, maxDelay = "5 MINUTES",
@@ -209,14 +178,11 @@ object Bench {
       // ~0.5 s serial per warm batch vs ~10 s parallel work) for BOTH
       // pipelines — the join's state scales with batch size, so bigger
       // batches (192 → 13.1M peak state rows) GC-crush the run (round-4
-      // A/B; env knob kept for re-running that experiment). When the
-      // noise-adaptive scale shrinks the staged file count, the parent
-      // shrinks fpt proportionally so the batch COUNT (fixed-cost
-      // amortization) survives; batch size shrinks with it, which is the
-      // safe direction for join state.
-      case "toolpair" => joinOnce(spark, inputDir,
-        sys.env.get("SPARK_GRAFT_FPT_TOOLPAIR").map(_.toInt).getOrElse(fpt),
-        rows, expected, check)
+      // A/B, BASELINE.md). When the noise-adaptive scale shrinks the staged
+      // file count, the parent shrinks fpt proportionally so the batch
+      // COUNT (fixed-cost amortization) survives; batch size shrinks with
+      // it, which is the safe direction for join state.
+      case "toolpair" => joinOnce(spark, inputDir, fpt, rows, expected, check)
       case _ => streamOnce(spark, inputDir, fpt, rows, check)
     }
 
@@ -879,7 +845,7 @@ object Bench {
       "\"" + k + "\":" + (if (err.isEmpty) f"$v%.3f" else "-1")
     }.mkString("{", ",", "}")
     val qerrs = results.collect { case (k, _, Some(m)) =>
-      "\"" + k + "\":\"" + m.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      "\"" + k + "\":" + Json.str(m)
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, v, None) => v }.sum
     val phasesJson = phases.map { case (k, v) => "\"" + k + "\":" + f"$v%.1f" }

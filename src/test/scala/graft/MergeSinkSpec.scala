@@ -307,33 +307,31 @@ class MergeSinkSpec extends AnyFunSuite {
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos")
 
     val progressDir = Files.createTempDirectory("progress").toString
-    val listener = new ProgressListener(progressDir)
-    spark.streams.addListener(listener)
-    try {
-      val ms = MemoryStream[TurnPos](enc, spark)
-      def start() = ms.toDS().writeStream
+    val ms = MemoryStream[TurnPos](enc, spark)
+    def start() = ProgressListener.logging(spark, progressDir) {
+      ms.toDS().writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[TurnPos], id: Long) =>
           sink.merge(batch.toDF(), id)
         }.start()
+    }
 
-      val q1 = start()
-      ms.addData(Seq(turn("a", 0, "v1", 1), turn("a", 1, "v1", 2)))
-      q1.processAllAvailable()
-      q1.stop()
+    val q1 = start()
+    ms.addData(Seq(turn("a", 0, "v1", 1), turn("a", 1, "v1", 2)))
+    q1.processAllAvailable()
+    q1.stop()
 
-      // "crash": restart from the same checkpoint, old data replays plus new
-      val q2 = start()
-      ms.addData(Seq(turn("a", 1, "v2", 10), turn("b", 0, "v1", 11)))
-      q2.processAllAvailable()
-      q2.stop()
+    // "crash": restart from the same checkpoint, old data replays plus new
+    val q2 = start()
+    ms.addData(Seq(turn("a", 1, "v2", 10), turn("b", 0, "v1", 11)))
+    q2.processAllAvailable()
+    q2.stop()
 
-      assert(tableOf(sink) == Set(("a", 0, "v1"), ("a", 1, "v2"), ("b", 0, "v1")))
+    assert(tableOf(sink) == Set(("a", 0, "v1"), ("a", 1, "v2"), ("b", 0, "v1")))
 
-      // the progress log captured per-batch lineage lines
-      val log = Files.readString(java.nio.file.Paths.get(progressDir, "progress.jsonl"))
-      assert(log.contains("\"event\":\"progress\""))
-      assert(log.contains("\"numInputRows\""))
-    } finally spark.streams.removeListener(listener)
+    // the progress log captured per-batch lineage lines
+    val log = Files.readString(java.nio.file.Paths.get(progressDir, "progress.jsonl"))
+    assert(log.contains("\"event\":\"progress\""))
+    assert(log.contains("\"numInputRows\""))
   }
 }

@@ -3,8 +3,15 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.jobs.TranscriptPipeline
 import graft.stream.{OrderRepair, TurnPos}
@@ -133,5 +140,84 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     val expected = rows(OrderRepair.batch((file1 ++ file2 ++ sentinel).toDS(), strict = false).toDF())
     assert(expected.exists(r => r.conv_id == "d" && r.turn_idx == 1))
     assert(rows(sink.read(spark)) == expected)
+  }
+
+  test("two concurrent jobs: each progress log is valid JSONL of its own query, listeners leave on stop") {
+    // a tab and a CR in one input dir reach its source description
+    val jobs = Seq("tp_in\t\r", "tp_in").map { inName =>
+      val in = Files.createTempDirectory(inName).toString
+      writeBatchFile(in, Seq(
+        TurnPos("a", 0, "user", "q0", null, ts(1), 1),
+        TurnPos("a", 1, "assistant", "r1", "search", ts(2), 2)), 1)
+      TranscriptPipeline.Config(in, Files.createTempDirectory("tpc_out").toString,
+        Files.createTempDirectory("tpc_errs").toString,
+        Files.createTempDirectory("tpc_ckpt").toString,
+        Files.createTempDirectory("tpc_progress").toString)
+    }
+    val before = spark.streams.listListeners().toSet
+    val (qa, _) = TranscriptPipeline.start(spark, jobs(0))
+    val (qb, _) = TranscriptPipeline.startStateful(spark, jobs(1))
+    val added = spark.streams.listListeners().toSet -- before
+    assert(added.size == 2)
+    Seq(qa, qb).foreach(_.processAllAvailable())
+    Seq(qa, qb).foreach(_.stop())
+    // each listener leaves after its run's terminated event, which the
+    // listener bus delivers asynchronously
+    eventually(timeout(30.seconds)) {
+      assert(spark.streams.listListeners().toSet.intersect(added).isEmpty)
+    }
+
+    val json = new ObjectMapper()
+    Seq(qa -> jobs(0), qb -> jobs(1)).foreach { case (q, cfg) =>
+      val lines = Files.readAllLines(java.nio.file.Paths.get(cfg.progressDir, "progress.jsonl"))
+        .asScala.toSeq
+      val parsed = lines.map(json.readTree) // throws on an invalid line
+      assert(parsed.map(_.get("id").asText()).toSet == Set(q.id.toString), lines.mkString("\n"))
+      val events = parsed.map(_.get("event").asText())
+      assert(events.head == "started" && events.last == "terminated" && events.contains("progress"),
+        events)
+      val sources = parsed.filter(_.has("sources")).flatMap(_.get("sources").asScala)
+      assert(sources.exists(_.get("description").asText().contains(cfg.inputDir)))
+    }
+  }
+
+  test("stateful job plan: one micro-batch runs one state operator over one scan of the input dir") {
+    val in = Files.createTempDirectory("tpp_in").toString
+    val cfg = TranscriptPipeline.Config(in, Files.createTempDirectory("tpp_out").toString,
+      Files.createTempDirectory("tpp_errs").toString,
+      Files.createTempDirectory("tpp_ckpt").toString,
+      Files.createTempDirectory("tpp_progress").toString)
+    // every turn is in order: all five leave the repair in this batch.
+    // Event time stays under the 10-minute watermark delay, so the
+    // watermark does not move, no further batch runs, and the data batch
+    // is the query's last execution.
+    val turns = Seq(
+      TurnPos("a", 0, "user", "q0", "none", ts(1), 1),
+      TurnPos("a", 1, "assistant", "r1", "none", ts(2), 2),
+      TurnPos("a", 2, "user", "q2", "none", ts(3), 3),
+      TurnPos("b", 0, "user", "q0", "none", ts(1), 4),
+      TurnPos("b", 1, "assistant", "r1", "none", ts(2), 5))
+    writeBatchFile(in, turns, 1)
+
+    val (q, sink) = TranscriptPipeline.startStateful(spark, cfg)
+    q.processAllAvailable()
+    val last = q.lastProgress
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    q.stop()
+    assert(last.batchId == 0 && last.numInputRows == turns.size)
+    assert(sink.read(spark).count() == turns.size)
+
+    val state = plan.collect { case p if p.nodeName == "FlatMapGroupsWithState" => p }
+    assert(state.size == 1, s"expected one state operator in:\n$plan")
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"expected one file scan in:\n$plan")
+    assert(scans.head.relation.location.inputFiles.forall(_.contains(in)))
+    // the SQL metrics sum over every run of the batch's plan: a second run
+    // of the state operator or the scan would double them
+    assert(state.head.metrics("numOutputRows").value == turns.size)
+    assert(scans.head.metrics("numOutputRows").value == turns.size)
+    // the one grouping shuffle on the conversation key feeds the repair
+    val shuffles = state.head.collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1, s"shuffle exchanges before the state operator in:\n$plan")
   }
 }

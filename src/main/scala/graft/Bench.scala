@@ -104,8 +104,7 @@ object Bench {
   private def streamOnce(spark: SparkSession, inputDir: String,
                          filesPerTrigger: Int, totalRows: Long,
                          check: Boolean = true): RunResult = {
-    // the job's defaults (watermark, gap, strictness); `repaired` reads no
-    // sink, checkpoint or progress dir
+    // `repaired` reads only the input dir and the files per trigger
     val cfg = TranscriptPipeline.Config(inputDir, "", "", "", "",
       maxFilesPerTrigger = filesPerTrigger)
     var emitted = 0L

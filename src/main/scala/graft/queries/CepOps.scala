@@ -39,7 +39,7 @@ object CepOps {
     // hashpartitioning(conv_id) survives into the dirty frame and the
     // dedup window (conv_id, turn_idx) reuses it instead of re-shuffling
     // (the fMGWS consumers still exchange on their opaque groupByKey value).
-    val rest = Seq("turn_idx", "role", "text", "tool", "ts", "pos")
+    val rest = t.columns.toSeq.filterNot(_ == "conv_id")
     val orig = struct(rest.map(col): _*)
     val dup = struct(col("turn_idx"), col("role"), lit("DUP").as("text"),
       col("tool"), col("ts"), (col("pos") + 1000000000L).as("pos"))

@@ -92,11 +92,11 @@ trait EventSink extends Serializable {
 }
 
 class ConsoleEventSink(minimumLevel: String = "WARN") extends EventSink {
-  private val order = Map("DEBUG" -> 0, "INFO" -> 1, "WARN" -> 2, "ERROR" -> 3, "CRITICAL" -> 4)
+  import EventLevels.order
   require(order.contains(minimumLevel), // sink validation decorator analog
     s"Unknown minimum level [$minimumLevel]; expected one of ${order.keys.mkString(", ")}")
   def notify(level: String, message: String): Unit =
-    if (order.getOrElse(level, 1) >= order.getOrElse(minimumLevel, 2))
+    if (order.getOrElse(level, order("INFO")) >= order(minimumLevel))
       // scalastyle:off println
       println(s"[$level] $message")
       // scalastyle:on println

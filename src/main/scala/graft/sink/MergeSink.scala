@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * DbCommand.cs:118-144 executes any INSERT/UPDATE/stored-proc; the sink
   * itself realizes only the keyed upsert/tombstone contract).
   *
-  * Contract: the sink runs the effect once per batchId it commits — a
+  * Contract: the sink runs the effect once per batchId it commits, after
+  * the batch's rows are in the table and before its journal entry — a
   * re-delivered (already journaled) micro-batch skips the effect, so under
   * checkpointed `foreachBatch` the effect is exactly-once EXCEPT for the
   * crash window between effect execution and journal write, where replay
@@ -39,9 +40,9 @@ trait BatchEffect extends Serializable {
   *   - the table is `numBuckets` hash-buckets of the key; a manifest maps
   *     bucket → current data directory (Iceberg's manifest-of-data-files,
   *     one entry per bucket)
-  *   - merge(batch) touches ONLY the buckets containing batch keys. The
-  *     batch is persisted once (the touched-bucket lookup and the write
-  *     both read it); those buckets' rows ∪ batch go through ONE key-hash
+  *   - merge(batch) touches ONLY the buckets containing batch keys (the
+  *     lookup and the write both read the batch, so a caller persists a
+  *     costly one); those buckets' rows ∪ batch go through ONE key-hash
   *     shuffle into `n` parts, `n` dividing the bucket width so each part
   *     holds whole buckets; one window keeps the newest row per key (batch
   *     beats current; within a batch, max `versionCol` wins) and its sorted
@@ -227,50 +228,49 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
     * `versionCol`) decides whether the key survives. Replays converge:
     * deleting an absent key is a no-op.
     *
-    * `effects`: [[BatchEffect]]s run under the same journal guard — a
-    * re-delivered batchId skips them along with the merge (see the
-    * BatchEffect idempotence contract for the crash window).
+    * `effects`: [[BatchEffect]]s run under the same journal guard, after
+    * the batch's rows are in the table — a re-delivered batchId skips them
+    * along with the merge (see the BatchEffect idempotence contract for the
+    * crash window).
     */
   def merge(batch: DataFrame, batchId: Long,
             deleteCol: Option[String] = None,
             effects: Seq[BatchEffect] = Nil): Unit = tableLock.synchronized {
     if (isCommitted(batchId)) return
-    effects.foreach(_.apply(batch, batchId))
+    def journal(): Unit = { effects.foreach(_.apply(batch, batchId)); recordCommit(batchId) }
     val v = currentVersion
     val manifest = readManifest(v)
     val width = widthAt(v) // the width THIS manifest was written with
 
-    // persisted: the touched-bucket collect and the write both read it, so
-    // the upstream plan (a streaming job's state update) runs once per batch
+    // the touched-bucket lookup and the write both read `batch`: a caller
+    // whose batch is costly to compute (a streaming job's state update)
+    // persists it first, so that runs once per batch
     val staged = batch
       .withColumn("__del",
         deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false)))
           .getOrElse(lit(false)))
       .drop(deleteCol.toSeq: _*)
       .withColumn("__bucket", bucketCol(width))
-      .persist()
-    try {
-      val touched = staged.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (touched.isEmpty) { recordCommit(batchId); return }
+    val touched = staged.select("__bucket").distinct()
+      .collect().map(_.getInt(0)).toSet
+    if (touched.isEmpty) return journal()
 
-      // current rows of ONLY the touched buckets (partition-scoped read)
-      val touchedDirs = manifest.filter { case (b, _) => touched.contains(b) }
-        .values.toSeq.distinct
-      val rows = staged.withColumn("__gen", lit(1)) // batch row beats current row
-      val next = v + 1
-      val written = writeBuckets(
-        if (touchedDirs.isEmpty) rows
-        else current(batch.sparkSession, touchedDirs, width).unionByName(rows),
-        width, s"data_v$next")
+    // current rows of ONLY the touched buckets (partition-scoped read)
+    val touchedDirs = manifest.filter { case (b, _) => touched.contains(b) }
+      .values.toSeq.distinct
+    val rows = staged.withColumn("__gen", lit(1)) // batch row beats current row
+    val next = v + 1
+    val written = writeBuckets(
+      if (touchedDirs.isEmpty) rows
+      else current(batch.sparkSession, touchedDirs, width).unionByName(rows),
+      width, s"data_v$next")
 
-      // a tombstone batch can empty a touched bucket entirely — only buckets
-      // that actually wrote rows enter the manifest; emptied ones drop out
-      val newManifest = manifest -- touched ++ written
-      writeVersion(next, newManifest, width)
-      recordCommit(batchId)
-      gc(newManifest)
-    } finally staged.unpersist()
+    // a tombstone batch can empty a touched bucket entirely — only buckets
+    // that actually wrote rows enter the manifest; emptied ones drop out
+    val newManifest = manifest -- touched ++ written
+    writeVersion(next, newManifest, width)
+    journal()
+    gc(newManifest)
   }
 
   /** Admin migration: rewrite the WHOLE table at a new bucket width under

@@ -2,9 +2,11 @@ package graft.stream
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.model.{Events, LogEvent}
 
 /** A turn with source position (provenance, the reference's
   * `Record.Position`) — the friendly typed record for the stateful
@@ -29,16 +31,19 @@ case class TurnPos(
   * for ASCII text. `conv_id` stays String (it is the grouping key; byte
   * arrays compare by reference) and `ts` stays a timestamp — the watermark
   * tag must survive into the operator's child output for event-time
-  * timeouts, which rules out projecting it to epoch micros.
+  * timeouts, which rules out projecting it to epoch micros. `turn_idx` is
+  * nullable like its column and `events` carries the validation events, so
+  * error rows cross the repair too.
   */
 case class TurnPacked(
     conv_id: String,
-    turn_idx: Int,
+    turn_idx: java.lang.Integer,
     role: Array[Byte],
     text: Array[Byte],
     tool: Array[Byte],
     ts: Timestamp,
-    pos: Long
+    pos: Long,
+    events: Array[LogEvent]
 )
 
 /** Per-conversation order-repair state: next contiguous index to emit plus
@@ -46,14 +51,22 @@ case class TurnPacked(
   * turn_idx"). Duplicates resolve min-pos-first — deterministic under any
   * partitioning, matching the reference Unique handler's sequential
   * first-wins (reference: src/Shipwright.Core/Dataflows/Transformations/
-  * Unique.cs:89-93) without depending on arrival order.
+  * Unique.cs:89-93) without depending on arrival order. `stoppedIdx`: the
+  * emitted slots whose occupant was stop-flagged, which a valid turn may fill.
   */
-case class RepairState[T](nextIdx: Int, buffer: Map[Int, T], maxTs: Long)
+case class RepairState[T](nextIdx: Int, buffer: Map[Int, T], maxTs: Long,
+                          stoppedIdx: Set[Int])
 
 /** Per-conversation stateful validation + turn-order repair
   * (`flatMapGroupsWithState`): buffers out-of-order turns in a per-key
   * sorted map, emits contiguous runs of `turn_idx` from 0, dedups by
   * (conv_id, turn_idx) keeping the min-pos occurrence.
+  *
+  * Error rows (packed flavour): a row with a null `conv_id` or `turn_idx`
+  * leaves at once, touching no state. A stop-flagged turn takes its slot,
+  * but a valid turn for it wins, even one arriving after the stop-flagged
+  * turn was emitted (it then leaves at once, out of order). Every
+  * stop-flagged turn is emitted; a losing valid turn is dropped.
   *
   * Streaming: `EventTimeTimeout` — when the watermark passes the
   * conversation's last activity + `gapMs`, the state times out; `strict`
@@ -75,13 +88,15 @@ case class RepairState[T](nextIdx: Int, buffer: Map[Int, T], maxTs: Long)
   */
 object OrderRepair {
 
-  /** The single repair algorithm, generic in the record type; `idxOf` /
-    * `posOf` / `tsOf` are the only record accesses. The buffer is a
+  /** The single repair algorithm, generic in the record type; `keyed`
+    * (the row may enter the state) / `stopped` / `idxOf` / `posOf` /
+    * `tsOf` are the only record accesses. The buffer is a
     * `LongMap` (specialized keys — no Integer boxing per row on the hot
     * loop); it converts to the immutable state map only at state-commit
     * time, and only when non-empty.
     */
-  private def repairCore[T](strict: Boolean, streaming: Boolean, gapMs: Long,
+  private def repairCore[T](strict: Boolean, gapMs: Option[Long],
+                            keyed: T => Boolean, stopped: T => Boolean,
                             idxOf: T => Int, posOf: T => Long, tsOf: T => Long)(
       key: String, rows: Iterator[T],
       state: GroupState[RepairState[T]]): Iterator[T] = {
@@ -89,68 +104,77 @@ object OrderRepair {
     if (state.hasTimedOut) {
       val st = state.get
       state.remove()
-      return if (strict) Iterator.empty
-      else st.buffer.toSeq.sortBy(_._1).map(_._2).iterator
+      return if (strict) Iterator.empty else st.buffer.toSeq.sortBy(_._1).map(_._2).iterator
     }
 
-    val st = state.getOption.getOrElse(RepairState[T](0, Map.empty, Long.MinValue))
+    val st = state.getOption.getOrElse(
+      RepairState[T](0, Map.empty, Long.MinValue, Set.empty))
     val buf = scala.collection.mutable.LongMap.empty[T]
     st.buffer.foreach { case (k, v) => buf.update(k.toLong, v) }
+    val late = scala.collection.mutable.LongMap.empty[T] // valid turns for stoppedIdx slots
     var maxTs = st.maxTs
     val nextIdx = st.nextIdx
-    rows.foreach { r =>
-      val t = tsOf(r)
-      if (t > maxTs) maxTs = t
-      val idx = idxOf(r)
-      if (idx >= nextIdx) {
-        val prev = buf.getOrNull(idx.toLong)
-        if (prev == null || posOf(prev) > posOf(r)) buf.update(idx.toLong, r) // min-pos wins
-      } // else: duplicate of an already-emitted turn — reference flags these
-        // via UniqueFlag; the repair operator simply never re-emits a key.
-    }
-
+    var stoppedIdx = st.stoppedIdx
     val emitted = Vector.newBuilder[T]
+    // puts r in slot idx of m unless the occupant beats it (valid beats
+    // stopped, then min pos wins); returns the loser, or null
+    def place(m: scala.collection.mutable.LongMap[T], idx: Int, r: T): T = {
+      val prev = m.getOrNull(idx.toLong)
+      if (prev != null &&
+          (if (stopped(r) == stopped(prev)) posOf(r) >= posOf(prev) else stopped(r))) r
+      else { m.update(idx.toLong, r); prev }
+    }
+    var anyKeyed = false
+    rows.foreach { r =>
+      if (!keyed(r)) emitted += r
+      else {
+        anyKeyed = true
+        maxTs = math.max(maxTs, tsOf(r))
+        val idx = idxOf(r)
+        // below nextIdx the key was emitted — reference flags these via
+        // UniqueFlag; the repair never re-emits a valid key, but a valid
+        // turn may still fill an emitted stop-flagged slot
+        val loser =
+          if (idx >= nextIdx) place(buf, idx, r)
+          else if (!stopped(r) && stoppedIdx.contains(idx)) place(late, idx, r)
+          else r
+        if (loser != null && stopped(loser)) emitted += loser
+      }
+    }
+    late.foreach { case (idx, r) => stoppedIdx -= idx.toInt; emitted += r }
+
     var next = nextIdx
-    var run = true
-    while (run) {
-      val t = buf.getOrNull(next.toLong)
-      if (t != null) { buf.remove(next.toLong); emitted += t; next += 1 }
-      else run = false
+    var t = buf.getOrNull(next.toLong)
+    while (t != null) {
+      buf.remove(next.toLong); emitted += t
+      if (stopped(t)) stoppedIdx += next
+      next += 1; t = buf.getOrNull(next.toLong)
     }
 
-    if (streaming) {
-      val remaining =
-        if (buf.isEmpty) Map.empty[Int, T]
-        else buf.iterator.map { case (k, v) => k.toInt -> v }.toMap
-      state.update(RepairState(next, remaining, maxTs))
-      // Evict once the watermark passes last activity + gap. A conversation
-      // whose last event is already behind the advanced watermark (possible
-      // with unordered file ingestion) must still get a FUTURE timeout —
-      // Spark rejects timestamps at or before the current watermark.
-      state.setTimeoutTimestamp(
-        math.max(maxTs + gapMs, state.getCurrentWatermarkMs() + 1))
-      emitted.result().iterator
-    } else {
-      // Batch: single invocation — end-of-data == final watermark.
-      state.remove()
-      val tail =
-        if (strict) Iterator.empty
-        else buf.toSeq.sortBy(_._1).map(_._2).iterator
-      emitted.result().iterator ++ tail
+    gapMs match {
+      // only keyed rows create state: a batch of malformed rows for a key
+      // (or the null key) without one creates none. Existing state is
+      // rewritten below even so — Spark clears its timeout on every call.
+      case Some(_) if !anyKeyed && !state.exists => emitted.result().iterator
+      case Some(gap) =>
+        val remaining =
+          if (buf.isEmpty) Map.empty[Int, T]
+          else buf.iterator.map { case (k, v) => k.toInt -> v }.toMap
+        state.update(RepairState(next, remaining, maxTs, stoppedIdx))
+        // Evict once the watermark passes last activity + gap. A conversation
+        // whose last event is already behind the advanced watermark (possible
+        // with unordered file ingestion) must still get a FUTURE timeout —
+        // Spark rejects timestamps at or before the current watermark.
+        state.setTimeoutTimestamp(
+          math.max(maxTs + gap, state.getCurrentWatermarkMs() + 1))
+        emitted.result().iterator
+      case None =>
+        // Batch: single invocation — end-of-data == final watermark.
+        state.remove()
+        val tail = if (strict) Iterator.empty else buf.toSeq.sortBy(_._1).map(_._2).iterator
+        emitted.result().iterator ++ tail
     }
   }
-
-  def repairFn(strict: Boolean, streaming: Boolean, gapMs: Long)(
-      key: String, rows: Iterator[TurnPos],
-      state: GroupState[RepairState[TurnPos]]): Iterator[TurnPos] =
-    repairCore[TurnPos](strict, streaming, gapMs,
-      _.turn_idx, _.pos, _.ts.getTime)(key, rows, state)
-
-  private def repairFnPacked(strict: Boolean, streaming: Boolean, gapMs: Long)(
-      key: String, rows: Iterator[TurnPacked],
-      state: GroupState[RepairState[TurnPacked]]): Iterator[TurnPacked] =
-    repairCore[TurnPacked](strict, streaming, gapMs,
-      _.turn_idx, _.pos, _.ts.getTime)(key, rows, state)
 
   private implicit val turnPosEnc = Encoders.product[TurnPos]
   private implicit val stateEnc = Encoders.product[RepairState[TurnPos]]
@@ -161,41 +185,32 @@ object OrderRepair {
   /** Pack the boundary: payload strings → raw bytes (cast, no decode).
     * `ts` is projected UNTOUCHED so a watermark tag applied upstream
     * survives (NTZ sources get the encoder's upcast, same as [[TurnPos]]).
+    * `events` is carried when `df` has it, else empty.
     */
   def pack(df: DataFrame): Dataset[TurnPacked] =
-    df.select(col("conv_id"), col("turn_idx"),
-      col("role").cast("binary").as("role"),
-      col("text").cast("binary").as("text"),
-      col("tool").cast("binary").as("tool"),
-      col("ts"),
-      col("pos")).as[TurnPacked]
+    df.select(turnCols("binary") :+ (if (df.columns.contains(Events.col)) col(Events.col)
+      else Events.empty).as(Events.col): _*).as[TurnPacked]
 
-  /** Inverse of [[pack]] (UTF-8 round-trip is exact). */
-  def unpack(ds: Dataset[TurnPacked]): DataFrame =
-    ds.toDF().select(col("conv_id"), col("turn_idx"),
-      col("role").cast("string").as("role"),
-      col("text").cast("string").as("text"),
-      col("tool").cast("string").as("tool"),
-      col("ts"),
-      col("pos"))
+  /** Inverse of [[pack]] (UTF-8 round-trip is exact), without `events`. */
+  def unpack(ds: Dataset[_]): DataFrame = ds.toDF().select(turnCols("string"): _*)
+
+  // the turn columns in schema order, payload strings cast to `payloadType`
+  private def turnCols(payloadType: String): Seq[Column] =
+    Seq(col("conv_id"), col("turn_idx")) ++
+      Seq("role", "text", "tool").map(c => col(c).cast(payloadType).as(c)) ++
+      Seq(col("ts"), col("pos"))
 
   /** Batch flavor (also the oracle target). */
   def batch(ds: Dataset[TurnPos], strict: Boolean): Dataset[TurnPos] =
-    ds.groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        repairFn(strict, streaming = false, gapMs = 0L))
+    repairPos(ds, strict, None)
 
   /** Streaming flavor: caller must have applied `withWatermark("ts", …)`. */
   def streaming(ds: Dataset[TurnPos], strict: Boolean, gapMs: Long): Dataset[TurnPos] =
-    ds.groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        repairFn(strict, streaming = true, gapMs = gapMs))
+    repairPos(ds, strict, Some(gapMs))
 
   /** Hot-path batch flavor over the packed record. */
   def batchPacked(ds: Dataset[TurnPacked], strict: Boolean): Dataset[TurnPacked] =
-    ds.groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        repairFnPacked(strict, streaming = false, gapMs = 0L))
+    repairPacked(ds, strict, None)
 
   /** Hot-path streaming flavor: apply `withWatermark` BEFORE [[pack]] (the
     * watermark node survives the packing projection; the timeout uses the
@@ -203,7 +218,21 @@ object OrderRepair {
     */
   def streamingPacked(ds: Dataset[TurnPacked], strict: Boolean,
                       gapMs: Long): Dataset[TurnPacked] =
-    ds.groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        repairFnPacked(strict, streaming = true, gapMs = gapMs))
+    repairPacked(ds, strict, Some(gapMs))
+
+  // the core per record type; no gap = batch
+  private def repairPos(ds: Dataset[TurnPos], strict: Boolean,
+                        gapMs: Option[Long]): Dataset[TurnPos] =
+    ds.groupByKey(_.conv_id).flatMapGroupsWithState(OutputMode.Append, timeout(gapMs))(
+      repairCore[TurnPos](strict, gapMs, _ => true, _ => false,
+        _.turn_idx, _.pos, _.ts.getTime))
+
+  private def repairPacked(ds: Dataset[TurnPacked], strict: Boolean,
+                           gapMs: Option[Long]): Dataset[TurnPacked] =
+    ds.groupByKey(_.conv_id).flatMapGroupsWithState(OutputMode.Append, timeout(gapMs))(
+      repairCore[TurnPacked](strict, gapMs, r => r.conv_id != null && r.turn_idx != null,
+        _.events.exists(_.stop), _.turn_idx.intValue, _.pos, _.ts.getTime))
+
+  private def timeout(gapMs: Option[Long]): GroupStateTimeout =
+    if (gapMs.isEmpty) GroupStateTimeout.NoTimeout else GroupStateTimeout.EventTimeTimeout
 }

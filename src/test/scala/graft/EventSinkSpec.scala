@@ -62,7 +62,7 @@ class EventSinkSpec extends AnyFunSuite {
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "pos")
       .write.parquet(in)
     val captured = new CollectingEventSink
-    val (q, _) = graft.jobs.TranscriptPipeline.start(spark,
+    val (q, _) = graft.jobs.TranscriptPipeline.startStateful(spark,
       graft.jobs.TranscriptPipeline.Config(in, s"$base/out", s"$base/errs",
         s"$base/ckpt", s"$base/progress", eventSink = captured,
         perRecordLevel = Some("WARN")))

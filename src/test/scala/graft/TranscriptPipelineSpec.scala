@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
@@ -16,8 +17,8 @@ import org.scalatest.time.SpanSugar._
 import graft.jobs.TranscriptPipeline
 import graft.stream.{OrderRepair, TurnPos}
 
-/** End-to-end flagship job: file stream → validation → error split → order
-  * repair → exactly-once merge + progress log, including kill-and-resume
+/** End-to-end flagship job: file stream → validation → order repair →
+  * error split → exactly-once merge + progress log, including kill-and-resume
   * with re-delivery converging to the same output table (FIXTURES.md §5).
   */
 class TranscriptPipelineSpec extends AnyFunSuite {
@@ -44,7 +45,7 @@ class TranscriptPipelineSpec extends AnyFunSuite {
       TurnPos("a", 0, "user", "q0", null, ts(1), 1),
       TurnPos("a", 2, "tool", "   ", "search", ts(3), 3)), 1)
 
-    val (q1, sink1) = TranscriptPipeline.start(spark, cfg)
+    val (q1, sink1) = TranscriptPipeline.startStateful(spark, cfg)
     q1.processAllAvailable()
     q1.stop()
 
@@ -55,35 +56,122 @@ class TranscriptPipelineSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"), r.getAs[String]("text")))
     assert(t1.toSeq == Seq(("a", 0, "q0"), ("a", 1, "r1")))
 
-    val errRows = spark.read.parquet(errs).collect()
+    def errRows = spark.read.parquet(errs).collect()
     assert(errRows.length == 1)
     assert(errRows.head.getAs[String]("description").contains("required for the field [text]"))
+    assert(errRows.head.getAs[Int]("turn_idx") == 2)
 
     // "crash", add file 2, restart from the same checkpoint — file 1 is NOT
-    // reprocessed (offsets) and the merge journal makes any replay a no-op
+    // reprocessed (offsets) and the merge journal makes any replay a no-op.
+    // A re-sent turn of an already emitted key is dropped: the first turn
+    // per key stays.
     writeBatchFile(in, Seq(
       TurnPos("a", 1, "assistant", "r1-amended", "search", ts(10), 10),
       TurnPos("b", 0, "user", "hello", null, ts(11), 11)), 2)
-    val (q2, sink2) = TranscriptPipeline.start(spark, cfg)
+    val (q2, sink2) = TranscriptPipeline.startStateful(spark, cfg)
     q2.processAllAvailable()
     q2.stop()
 
     val t2 = sink2.read(spark).orderBy("conv_id", "turn_idx").collect()
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"), r.getAs[String]("text")))
-    assert(t2.toSeq == Seq(
-      ("a", 0, "q0"), ("a", 1, "r1-amended"), ("b", 0, "hello")))
+    assert(t2.toSeq == Seq(("a", 0, "q0"), ("a", 1, "r1"), ("b", 0, "hello")))
+    assert(errRows.length == 1)
 
     // progress log captured batches from both runs
     val log = Files.readString(java.nio.file.Paths.get(progress, "progress.jsonl"))
     assert(log.linesIterator.count(_.contains("\"event\":\"progress\"")) >= 2)
   }
 
+  private def dirs(prefix: String): TranscriptPipeline.Config =
+    TranscriptPipeline.Config(Files.createTempDirectory(s"${prefix}_in").toString,
+      Files.createTempDirectory(s"${prefix}_out").toString,
+      Files.createTempDirectory(s"${prefix}_errs").toString,
+      Files.createTempDirectory(s"${prefix}_ckpt").toString,
+      Files.createTempDirectory(s"${prefix}_progress").toString)
+
+  /** (conv_id, turn_idx, pos, description) of every row in the errors dir. */
+  private def errorRows(cfg: TranscriptPipeline.Config): Set[(String, Integer, Long, String)] =
+    spark.read.parquet(cfg.errorsDir).collect().map(r => (r.getAs[String]("conv_id"),
+      r.getAs[Integer]("turn_idx"), r.getAs[Long]("pos"), r.getAs[String]("description"))).toSet
+
+  test("malformed keys: rows with a null conv_id or turn_idx become error rows, not a crash") {
+    val cfg = dirs("tpm")
+    val rows = Seq(
+      Row("a", 0, "user", "q0", "none", ts(1), 1L),
+      Row("a", null, "user", "no index", "none", ts(2), 2L),
+      Row(null, 0, "user", "no conversation", "none", ts(3), 3L),
+      Row("a", 1, "assistant", "r1", "none", ts(4), 4L))
+    spark.createDataFrame(rows.asJava, TranscriptPipeline.turnSchema)
+      .coalesce(1).write.mode("append").parquet(cfg.inputDir)
+    val (q, sink) = TranscriptPipeline.startStateful(spark, cfg)
+    q.processAllAvailable()
+    val last = q.lastProgress
+    q.stop()
+    assert(q.exception.isEmpty)
+    assert(sink.read(spark).select("conv_id", "turn_idx").as[(String, Int)].collect().toSet ==
+      Set(("a", 0), ("a", 1)))
+    assert(errorRows(cfg) == Set(
+      ("a", null, 2L, "A value is required for the field [turn_idx]"),
+      (null, 0, 3L, "A value is required for the field [conv_id]")))
+    // the malformed rows hold no state: only conversation a does
+    assert(last.stateOperators(0).numRowsTotal == 1)
+  }
+
+  test("duplicates: every stop-flagged turn reaches the errors dir; the table is the valid turns' repair") {
+    val cfg = dirs("tpd").copy(maxFilesPerTrigger = 1)
+    val t0 = 1000000L
+    def t(conv: String, idx: Int, pos: Long, text: String = "ok") =
+      TurnPos(conv, idx, "user", text, "none", ts(t0 + pos), pos)
+    val file1 = Seq(
+      t("a", 0, 5), t("a", 0, 1, " "),  // a stopped turn at a lower pos loses the slot
+      t("a", 1, 6), t("a", 1, 9, " "),  // ... and at a higher pos
+      t("b", 1, 7, " "), t("b", 1, 8, " "),  // two stopped turns for one slot
+      t("b", 0, 2),
+      t("c", 0, 3, " "), t("c", 1, 4))  // a stopped turn emitted in its slot
+    // a stopped duplicate of a key emitted in the first micro-batch, and two
+    // valid turns for the slot the stopped c/0 took there (min pos wins)
+    val file2 = Seq(t("a", 0, 20, " "), t("b", 2, 21), t("c", 0, 23), t("c", 0, 22))
+    val now = System.currentTimeMillis() / 1000
+    writeFileAt(cfg.inputDir, "f1", file1.toDF(), now - 2)
+    writeFileAt(cfg.inputDir, "f2", file2.toDF(), now - 1)
+    val (q, sink) = TranscriptPipeline.startStateful(spark, cfg)
+    q.processAllAvailable()
+    q.stop()
+
+    val stopped = (file1 ++ file2).filter(_.text.trim.isEmpty)
+    assert(errorRows(cfg).map(e => (e._1, e._2.intValue, e._3)) ==
+      stopped.map(s => (s.conv_id, s.turn_idx, s.pos)).toSet)
+    val valid = (file1 ++ file2).filterNot(stopped.contains)
+    val expected = OrderRepair.batch(valid.toDS(), strict = false).collect().toSet
+    assert(expected.exists(r => r.conv_id == "c" && r.turn_idx == 0 && r.pos == 22))
+    assert(sink.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts", "pos")
+      .as[TurnPos].collect().toSet == expected)
+  }
+
+  test("a micro-batch of only malformed rows for a conversation keeps its buffered turns' timeout") {
+    val cfg = dirs("tpt").copy(maxFilesPerTrigger = 1)
+    val t0 = 1000000L
+    def file(rows: Row*) = spark.createDataFrame(rows.asJava, TranscriptPipeline.turnSchema)
+    val now = System.currentTimeMillis() / 1000
+    // a/1 waits in state for a/0, which never arrives
+    writeFileAt(cfg.inputDir, "f1", file(Row("a", 1, "user", "r1", "none", ts(t0 + 1), 1L)), now - 3)
+    writeFileAt(cfg.inputDir, "f2", file(Row("a", null, "user", "x", "none", ts(t0 + 2), 2L)), now - 2)
+    // a day later: its watermark times conversation a out, flushing a/1
+    writeFileAt(cfg.inputDir, "f3", file(Row("zz", 0, "user", "s", "none", ts(t0 + 86400), 3L)), now - 1)
+    val (q, sink) = TranscriptPipeline.startStateful(spark, cfg)
+    q.processAllAvailable()
+    q.stop()
+    assert(sink.read(spark).select("conv_id", "turn_idx").as[(String, Int)].collect().toSet ==
+      Set(("a", 1), ("zz", 0)))
+    assert(errorRows(cfg).map(_._3) == Set(2L))
+  }
+
   /** Writes `turns` as one parquet file straight into the watched `dir`,
     * with modification time `mtimeS`, so the file source's arrival order
     * is the test's. */
-  private def writeFileAt(dir: String, name: String, turns: Seq[TurnPos], mtimeS: Long): Unit = {
+  private def writeFileAt(dir: String, name: String, turns: DataFrame, mtimeS: Long): Unit = {
     val tmp = Files.createTempDirectory("tp_file")
-    turns.toDS().coalesce(1).write.mode("overwrite").parquet(tmp.resolve("out").toString)
+    turns.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("out").toString)
     val part = Files.list(tmp.resolve("out")).toArray.map(_.asInstanceOf[java.nio.file.Path])
       .find(_.getFileName.toString.endsWith(".parquet")).get
     val dst = java.nio.file.Paths.get(dir, s"$name.parquet")
@@ -102,9 +190,8 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     val t0 = 1000000L
     def t(conv: String, idx: Int, sec: Long, pos: Long) =
       TurnPos(conv, idx, "user", s"$conv-$idx-$pos", "none", ts(t0 + sec), pos)
-    // every turn passes validation: startStateful does not split off
-    // stop-flagged turns yet (their error channel is an open defect), so
-    // this test covers order repair, state and the sink only
+    // every turn passes validation: this test covers order repair, state
+    // and the sink; the error channel has its own tests
     val file1 = Seq(t("a", 1, 2, 1), t("a", 2, 3, 2), t("b", 0, 1, 3), t("b", 2, 5, 4),
       t("c", 0, 1, 5), t("c", 1, 2, 6))
     // second micro-batch: the turns a and b were missing, a duplicate of b/2
@@ -116,8 +203,8 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     // a day later: its watermark times every conversation out, flushing d
     val sentinel = Seq(t("zz", 0, 86400, 12))
     val now = System.currentTimeMillis() / 1000
-    writeFileAt(in, "f1", file1, now - 3)
-    writeFileAt(in, "f2", file2, now - 2)
+    writeFileAt(in, "f1", file1.toDF(), now - 3)
+    writeFileAt(in, "f2", file2.toDF(), now - 2)
 
     val (q1, _) = TranscriptPipeline.startStateful(spark, cfg)
     q1.processAllAvailable()
@@ -129,17 +216,19 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     assert(last.stateOperators(0).numRowsTotal == 4)
 
     // restart from the same checkpoint with the sentinel
-    writeFileAt(in, "f3", sentinel, now - 1)
+    writeFileAt(in, "f3", sentinel.toDF(), now - 1)
     val (q2, sink) = TranscriptPipeline.startStateful(spark, cfg)
     q2.processAllAvailable()
     q2.stop()
 
-    def rows(df: org.apache.spark.sql.DataFrame) = df
+    def rows(df: DataFrame) = df
       .select("conv_id", "turn_idx", "role", "text", "tool", "ts", "pos").as[TurnPos]
       .collect().toSet
     val expected = rows(OrderRepair.batch((file1 ++ file2 ++ sentinel).toDS(), strict = false).toDF())
     assert(expected.exists(r => r.conv_id == "d" && r.turn_idx == 1))
     assert(rows(sink.read(spark)) == expected)
+    // batches without errors write nothing to the errors dir
+    assert(new java.io.File(errs).list().isEmpty)
   }
 
   test("two concurrent jobs: each progress log is valid JSONL of its own query, listeners leave on stop") {
@@ -155,7 +244,7 @@ class TranscriptPipelineSpec extends AnyFunSuite {
         Files.createTempDirectory("tpc_progress").toString)
     }
     val before = spark.streams.listListeners().toSet
-    val (qa, _) = TranscriptPipeline.start(spark, jobs(0))
+    val (qa, _) = TranscriptPipeline.startStateful(spark, jobs(0))
     val (qb, _) = TranscriptPipeline.startStateful(spark, jobs(1))
     val added = spark.streams.listListeners().toSet -- before
     assert(added.size == 2)
@@ -187,16 +276,17 @@ class TranscriptPipelineSpec extends AnyFunSuite {
       Files.createTempDirectory("tpp_errs").toString,
       Files.createTempDirectory("tpp_ckpt").toString,
       Files.createTempDirectory("tpp_progress").toString)
-    // every turn is in order: all five leave the repair in this batch.
-    // Event time stays under the 10-minute watermark delay, so the
-    // watermark does not move, no further batch runs, and the data batch
-    // is the query's last execution.
+    // every turn is in order: all six leave the repair in this batch, the
+    // blank-text one into the errors dir. Event time stays under the
+    // 10-minute watermark delay, so the watermark does not move, no further
+    // batch runs, and the data batch is the query's last execution.
     val turns = Seq(
       TurnPos("a", 0, "user", "q0", "none", ts(1), 1),
       TurnPos("a", 1, "assistant", "r1", "none", ts(2), 2),
       TurnPos("a", 2, "user", "q2", "none", ts(3), 3),
       TurnPos("b", 0, "user", "q0", "none", ts(1), 4),
-      TurnPos("b", 1, "assistant", "r1", "none", ts(2), 5))
+      TurnPos("b", 1, "assistant", "r1", "none", ts(2), 5),
+      TurnPos("b", 2, "user", " ", "none", ts(3), 6))
     writeBatchFile(in, turns, 1)
 
     val (q, sink) = TranscriptPipeline.startStateful(spark, cfg)
@@ -205,7 +295,8 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
     q.stop()
     assert(last.batchId == 0 && last.numInputRows == turns.size)
-    assert(sink.read(spark).count() == turns.size)
+    assert(sink.read(spark).count() == turns.size - 1)
+    assert(spark.read.parquet(cfg.errorsDir).count() == 1)
 
     val state = plan.collect { case p if p.nodeName == "FlatMapGroupsWithState" => p }
     assert(state.size == 1, s"expected one state operator in:\n$plan")
@@ -213,7 +304,8 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     assert(scans.size == 1, s"expected one file scan in:\n$plan")
     assert(scans.head.relation.location.inputFiles.forall(_.contains(in)))
     // the SQL metrics sum over every run of the batch's plan: a second run
-    // of the state operator or the scan would double them
+    // of the state operator or the scan (say, by the errors write) would
+    // double them
     assert(state.head.metrics("numOutputRows").value == turns.size)
     assert(scans.head.metrics("numOutputRows").value == turns.size)
     // the one grouping shuffle on the conversation key feeds the repair

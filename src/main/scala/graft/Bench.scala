@@ -39,37 +39,20 @@ import graft.stream.ToolPair
   */
 object Bench {
 
-  private val benchConfs: Seq[(String, String)] = Seq(
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.adaptive.enabled" -> "true",
-    // bench input = many small staged files; split fine so the scan stage
-    // fans out past the highest core count
-    "spark.sql.files.maxPartitionBytes" -> "1m",
-    "spark.sql.files.openCostInBytes" -> "0",
-    // tmpfs for shuffle + state checkpoints: single local disk fsyncs are
-    // not the object under test (a cluster has HDFS/S3 + per-node disks)
-    "spark.local.dir" -> "/dev/shm/spark-local",
-    "spark.ui.enabled" -> "false") ++
-    // off-heap state store (RocksDB) — opt-in experiment knob: moves the
-    // per-conversation repair state out of the GC'd heap
-    sys.env.get("SPARK_GRAFT_STATESTORE").map(p =>
-      "spark.sql.streaming.stateStore.providerClass" -> p).toSeq
-
-  private def newSession(cores: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
+  private def newSession(cores: Int): SparkSession =
+    Sessions(s"graft-bench-$cores", Some(cores), Seq(
       // CONSTANT across parallelism levels — a real cluster job keeps its
       // shuffle partitioning fixed while executors scale; per-partition
       // fixed costs (task setup, state-store commit) must not differ
       // between the N and 4N runs being compared.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "32"))
-    benchConfs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.sql.shuffle.partitions" -> "32",
+      // bench input = many small staged files; split fine so the scan stage
+      // fans out past the highest core count
+      "spark.sql.files.maxPartitionBytes" -> "1m",
+      "spark.sql.files.openCostInBytes" -> "0",
+      // tmpfs for shuffle + state checkpoints: single local disk fsyncs are
+      // not the object under test (a cluster has HDFS/S3 + per-node disks)
+      "spark.local.dir" -> "/dev/shm/spark-local"))
 
   /** (throughput rows/sec, p95 batch ms, wall sec, peak state-store rows). */
   private type RunResult = (Double, Double, Double, Long)
@@ -404,7 +387,7 @@ object Bench {
     }
     trace(f"""{"bench":"start","budget_sec":$budgetSec%.0f}""")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.localCores
     val replicate = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPLICATE", "384").toInt
     val nFiles = 384
 

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Sessions
 import graft.dsl.DataflowConfig
 import graft.model.Events
 import graft.sink.{ConsoleEventSink, ErrorSplit}
@@ -40,11 +41,7 @@ object ConfigRun {
 
   def main(args: Array[String]): Unit = {
     val Array(configRoot, action, tenant, input, outDir) = args.take(5)
-    val spark = SparkSession.builder()
-      .appName(s"graft-$action-$tenant")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Sessions(s"graft-$action-$tenant")
     run(spark, configRoot, action, tenant, spark.read.parquet(input), outDir)
     spark.stop()
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.Sessions
 import graft.sink.{BatchEffect, ConsoleEventSink, ErrorSplit, EventSink, MergeSink, ProgressListener}
 import graft.stream.{OrderRepair, TurnPacked}
 import graft.transform._
@@ -121,13 +122,7 @@ object TranscriptPipeline {
   /** spark-submit entry: TranscriptPipeline <in> <outTable> <errors> <ckpt> <progress> */
   def main(args: Array[String]): Unit = {
     val Array(in, out, errs, ckpt, progress) = args.take(5)
-    val spark = SparkSession.builder()
-      .appName("graft-transcript-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
+    val spark = Sessions("graft-transcript-pipeline")
     val (q, _) = startStateful(spark, Config(in, out, errs, ckpt, progress))
     q.awaitTermination()
   }

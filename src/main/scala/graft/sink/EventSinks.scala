@@ -41,16 +41,19 @@ object ErrorSplit {
     (valid, errors)
   }
 
-  /** Per-record console lines (reference ConsoleEventSink.cs:44-95 logs each
-    * record's event list at/above the minimum level). Formatting and the
+  /** Per-record events (reference ConsoleEventSink.cs:44-95 logs each
+    * record's event list at/above the minimum level) as (level, message)
+    * pairs — the shape an [[EventSink]]'s `notify` takes, so a pipeline
+    * routes them through whatever sink is configured. Formatting and the
     * level filter run DATA-PARALLEL over the [[split]] error stream; only
-    * the final console emission ([[ConsoleEventSink.sinkRecords]]) is
-    * driver-side — the console is inherently a driver device.
+    * the `notify` calls run outside the executors.
     */
-  private def formatted(errors: DataFrame, keyCols: Seq[String],
-                        minimumLevel: String): DataFrame = {
+  def recordEvents(errors: DataFrame, keyCols: Seq[String],
+                   minimumLevel: String = "WARN"): Dataset[(String, String)] = {
     require(EventLevels.order.contains(minimumLevel),
       s"Unknown minimum level [$minimumLevel]; expected one of ${EventLevels.order.keys.mkString(", ")}")
+    val spark = errors.sparkSession
+    import spark.implicits._
     val keyPart = concat_ws(", ", keyCols.map(k =>
       concat(lit(k + "="), coalesce(col(k).cast("string"), lit("null")))): _*)
     errors
@@ -58,27 +61,7 @@ object ErrorSplit {
       .select(col("level"), concat(
         lit("record("), keyPart, lit("): "), col("description"),
         coalesce(concat(lit(" value="), col("value")), lit(""))).as("message"))
-  }
-
-  /** (level, message) pairs at/above the minimum level — the shape an
-    * [[EventSink]]'s `notify` takes, so a pipeline can route per-record
-    * events through whatever sink is configured.
-    */
-  def recordEvents(errors: DataFrame, keyCols: Seq[String],
-                   minimumLevel: String = "WARN"): Dataset[(String, String)] = {
-    val spark = errors.sparkSession
-    import spark.implicits._
-    formatted(errors, keyCols, minimumLevel).as[(String, String)]
-  }
-
-  /** Pre-rendered `[LEVEL] record(...): ...` console lines. */
-  def recordLines(errors: DataFrame, keyCols: Seq[String],
-                  minimumLevel: String = "WARN"): Dataset[String] = {
-    val spark = errors.sparkSession
-    import spark.implicits._
-    formatted(errors, keyCols, minimumLevel)
-      .select(concat(lit("["), col("level"), lit("] "), col("message")).as("line"))
-      .as[String]
+      .as[(String, String)]
   }
 }
 
@@ -99,19 +82,6 @@ class ConsoleEventSink(minimumLevel: String = "WARN") extends EventSink {
     if (order.getOrElse(level, order("INFO")) >= order(minimumLevel))
       // scalastyle:off println
       println(s"[$level] $message")
-      // scalastyle:on println
-
-  /** Per-record mode: print one line per record event at/above this sink's
-    * minimum level (closes the last deviation from ConsoleEventSink.cs:44-95,
-    * which logs each record's event list). `toLocalIterator` streams one
-    * partition at a time, so the driver never materializes the full error
-    * set even when the pipeline output is large.
-    */
-  def sinkRecords(errors: DataFrame, keyCols: Seq[String]): Unit =
-    ErrorSplit.recordLines(errors, keyCols, minimumLevel)
-      // the formatted line already carries its own [LEVEL] prefix
-      // scalastyle:off println
-      .toLocalIterator().forEachRemaining(println(_))
       // scalastyle:on println
 }
 

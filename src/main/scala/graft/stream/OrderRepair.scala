@@ -82,9 +82,12 @@ case class RepairState[T](nextIdx: Int, buffer: Map[Int, T], maxTs: Long,
   * Scale: state per key is O(max out-of-orderness), not O(conversation
   * length) — emitted turns leave the buffer immediately, and the watermark
   * evicts idle conversations, so state survives 10^12-turn streams as long
-  * as disorder is bounded. The [[TurnPacked]] flavor is the production hot
-  * path; the [[TurnPos]] flavor is the convenience API. Both run the SAME
-  * generic core, so they cannot drift.
+  * as disorder is bounded.
+  *
+  * Flavors: over [[TurnPacked]], [[batchPacked]] and [[streamingPacked]]
+  * (the one the job runs); over [[TurnPos]], [[batch]] only, the oracle the
+  * tests and the benchmark compare with. All run the SAME generic core, so
+  * they cannot drift.
   */
 object OrderRepair {
 
@@ -200,13 +203,11 @@ object OrderRepair {
       Seq("role", "text", "tool").map(c => col(c).cast(payloadType).as(c)) ++
       Seq(col("ts"), col("pos"))
 
-  /** Batch flavor (also the oracle target). */
+  /** Batch flavor over [[TurnPos]] (the oracle target). */
   def batch(ds: Dataset[TurnPos], strict: Boolean): Dataset[TurnPos] =
-    repairPos(ds, strict, None)
-
-  /** Streaming flavor: caller must have applied `withWatermark("ts", …)`. */
-  def streaming(ds: Dataset[TurnPos], strict: Boolean, gapMs: Long): Dataset[TurnPos] =
-    repairPos(ds, strict, Some(gapMs))
+    ds.groupByKey(_.conv_id).flatMapGroupsWithState(
+      OutputMode.Append, GroupStateTimeout.NoTimeout)(repairCore[TurnPos](
+        strict, None, _ => true, _ => false, _.turn_idx, _.pos, _.ts.getTime))
 
   /** Hot-path batch flavor over the packed record. */
   def batchPacked(ds: Dataset[TurnPacked], strict: Boolean): Dataset[TurnPacked] =
@@ -220,13 +221,7 @@ object OrderRepair {
                       gapMs: Long): Dataset[TurnPacked] =
     repairPacked(ds, strict, Some(gapMs))
 
-  // the core per record type; no gap = batch
-  private def repairPos(ds: Dataset[TurnPos], strict: Boolean,
-                        gapMs: Option[Long]): Dataset[TurnPos] =
-    ds.groupByKey(_.conv_id).flatMapGroupsWithState(OutputMode.Append, timeout(gapMs))(
-      repairCore[TurnPos](strict, gapMs, _ => true, _ => false,
-        _.turn_idx, _.pos, _.ts.getTime))
-
+  // the packed core; no gap = batch
   private def repairPacked(ds: Dataset[TurnPacked], strict: Boolean,
                            gapMs: Option[Long]): Dataset[TurnPacked] =
     ds.groupByKey(_.conv_id).flatMapGroupsWithState(OutputMode.Append, timeout(gapMs))(

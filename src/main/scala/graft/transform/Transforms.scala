@@ -220,16 +220,17 @@ case class UniqueFlag(keys: Seq[String], posCol: String = "pos",
   require(keys.nonEmpty, "UniqueFlag needs at least one key field")
 }
 
-/** DbLookup (DbLookup.cs:181-223) re-expressed as a broadcast left join with
-  * an exactly-one-match guard: 1 match → outputs copied; 0 or ≥2 → stop event
+/** DbLookup (DbLookup.cs:181-223) re-expressed as a left join with an
+  * exactly-one-match guard: 1 match → outputs copied; 0 or ≥2 → stop event
   * carrying the match count. The reference's per-key result cache
   * (DbLookup.cs:159-176) is subsumed by join execution — the build side is
-  * read once. `parameters` are the reference's STATIC query parameters
+  * read once. The planner and AQE pick broadcast or shuffle join by the
+  * lookup's size. `parameters` are the reference's STATIC query parameters
   * (DbLookup.cs:196 merges `Parameters` into every lookup's input): constant
   * equality criteria applied to the lookup side before the join.
   */
 case class Lookup(lookupDf: DataFrame, joinKeys: Seq[String],
-                  outputs: Seq[String], broadcastHint: Boolean = true,
+                  outputs: Seq[String],
                   parameters: Map[String, Any] = Map.empty) extends Transformation {
   require(joinKeys.nonEmpty, "Lookup needs at least one join key")
 }
@@ -410,7 +411,7 @@ object Pipeline {
               concat(lit("first occurrence at position "), col("__first_pos")))))
         .drop("__first_pos")
 
-    case Lookup(lookupDf, joinKeys, outputs, hint, parameters) =>
+    case Lookup(lookupDf, joinKeys, outputs, parameters) =>
       val g = pred && !Events.stoppedCol
       // Static parameters: constant equality criteria on the lookup side,
       // applied BEFORE the aggregation so they participate in the
@@ -419,13 +420,12 @@ object Pipeline {
         case (d, (k, v)) => d.filter(col(k) === lit(v))
       }
       // Pre-aggregate the build side: exactly-one semantics become a count
-      // check after a single left join (one shuffle-free broadcast at small
-      // dim sizes; falls back to shuffle join for large lookups).
-      val aggd = withParams
+      // check after a single left join (a broadcast below the auto-broadcast
+      // threshold, a shuffle join above it).
+      val build = withParams
         .groupBy(joinKeys.map(col): _*)
         .agg(count(lit(1)).as("__match_count"),
           outputs.map(o => first(col(o)).as(o)): _*)
-      val build = if (hint) broadcast(aggd) else aggd
       val joined = df.join(build, joinKeys, "left")
       val matched = col("__match_count").isNotNull && col("__match_count") === 1
       val staged = joined

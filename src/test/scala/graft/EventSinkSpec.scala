@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sink.{AggregateEventSink, CollectingEventSink, ConsoleEventSink, ErrorSplit}
+import graft.sink.{AggregateEventSink, CollectingEventSink, ConsoleEventSink, ErrorSplit, EventSink}
 import graft.transform._
 
 /** Event channel: valid/error split and the lifecycle sink fan-out
@@ -28,14 +28,21 @@ class EventSinkSpec extends AnyFunSuite {
     val df = Seq((1L, "ok"), (2L, null), (3L, " ")).toDF("pos", "f")
     val piped = Pipeline(df, Seq(Required(Seq("f"))))
     val (_, errors) = ErrorSplit.split(piped, Seq("pos"))
-    val lines = ErrorSplit.recordLines(errors, Seq("pos"), "WARN").collect().sorted
-    assert(lines.length == 2, s"got: ${lines.mkString("; ")}")
-    assert(lines.forall(_.startsWith("[ERROR] record(pos=")))
-    assert(lines.exists(_.contains("pos=2")) && lines.exists(_.contains("pos=3")))
+    // the job's path: recordEvents → EventSink.notify, one call per event
+    def notifyAll(sink: EventSink, minimumLevel: String): Unit =
+      ErrorSplit.recordEvents(errors, Seq("pos"), minimumLevel)
+        .toLocalIterator().forEachRemaining(e => sink.notify(e._1, e._2))
+    val captured = new CollectingEventSink
+    notifyAll(captured, "WARN")
+    val events = captured.captured.toSeq.sortBy(_._2)
+    assert(events.length == 2, s"got: ${events.mkString("; ")}")
+    assert(events.forall { case (level, msg) => level == "ERROR" && msg.startsWith("record(pos=") })
+    assert(events.exists(_._2.startsWith("record(pos=2")) &&
+      events.exists(_._2.startsWith("record(pos=3")))
     // a minimum level above the events' level suppresses them
-    assert(ErrorSplit.recordLines(errors, Seq("pos"), "CRITICAL").isEmpty)
-    // the console terminus streams without error
-    new ConsoleEventSink("WARN").sinkRecords(errors, Seq("pos"))
+    assert(ErrorSplit.recordEvents(errors, Seq("pos"), "CRITICAL").isEmpty)
+    // the console terminus prints without error
+    notifyAll(new ConsoleEventSink("WARN"), "WARN")
   }
 
   test("dataflow lifecycle notifications fire from a real run") {

@@ -30,12 +30,13 @@ class ResumeSpec extends AnyFunSuite {
 
     // memory sink cannot recover from a checkpoint — collect via
     // foreachBatch, which can
-    def start() = OrderRepair.streaming(
-      ms.toDS().withWatermark("ts", "10 seconds"), strict = true, gapMs = 60000L)
+    def start() = OrderRepair.unpack(OrderRepair.streamingPacked(
+        OrderRepair.pack(ms.toDS().withWatermark("ts", "10 seconds").toDF()),
+        strict = true, gapMs = 60000L))
       .writeStream
       .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[TurnPos], _: Long) =>
-        b.collect().foreach(t => emitted.add(t.turn_idx))
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.select("turn_idx").collect().foreach(r => emitted.add(r.getInt(0)))
       }.start()
 
     // run 1: turn 0 emitted, turn 2 buffered (gap at 1), then "crash"

@@ -5,14 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test JVM (suites reuse it). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointLocation.deleteOnExit", "true")
-      .getOrCreate()
+    val s = Sessions("graft-test", Some(4),
+      Seq("spark.sql.streaming.checkpointLocation.deleteOnExit" -> "true"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

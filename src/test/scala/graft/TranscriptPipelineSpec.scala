@@ -214,6 +214,9 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     // a, b, c and d are held in state; a state operator that ran twice in
     // the batch would count them twice
     assert(last.stateOperators(0).numRowsTotal == 4)
+    // the suite runs the state store the job ships
+    assert(last.stateOperators(0).customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")),
+      last.stateOperators(0).customMetrics)
 
     // restart from the same checkpoint with the sentinel
     writeFileAt(in, "f3", sentinel.toDF(), now - 1)

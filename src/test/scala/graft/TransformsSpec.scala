@@ -152,6 +152,26 @@ class TransformsSpec extends AnyFunSuite {
     assert(ev(3L).head.getAs[String]("value") == "0") // zero matches
   }
 
+  test("lookup: the planner picks the join by size; no broadcast above the thresholds") {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      keys.foreach(spark.conf.set(_, "-1"))
+      val recs = Seq((1L, "a"), (2L, "b")).toDF("pos", "k")
+      val lkp = Seq(("a", "va"), ("b", "vb")).toDF("k", "out")
+      val got = Pipeline(recs, Seq(Lookup(lkp, Seq("k"), Seq("out"))))
+      val vals = got.collect().map(r => r.getAs[Long]("pos") -> r.getAs[String]("out")).toMap
+      assert(vals == Map(1L -> "va", 2L -> "vb"))
+      // read after the action: the adaptive plan shows its final form
+      val plan = got.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin"), plan)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("conditional gates inner transformations per row") {
     val df = Seq((1L, "keep", "abcdef"), (2L, "cut", "abcdef")).toDF("pos", "mode", "f")
     val got = Pipeline(df, Seq(Conditional(col("mode") === "cut", Seq(Truncate(Map("f" -> 3))))))

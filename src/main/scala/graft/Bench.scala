@@ -54,6 +54,15 @@ object Bench {
       // not the object under test (a cluster has HDFS/S3 + per-node disks)
       "spark.local.dir" -> "/dev/shm/spark-local"))
 
+  /** Quiet-box nominals the noise probes divide by: the queries phase's
+    * wall in seconds (~1.1 s/query, BENCH_r03); the single-requester
+    * bandwidth probe in GB/s (8.2-8.5 repeated over a quiet hour; the
+    * crush regime reads a small fraction of this); the 1-core repair
+    * mini-probe's wall in seconds (32-34 s quiet, CPU ≈ wall). */
+  private val QueriesNominalSec = 75.0
+  private val BandwidthNominalGbs = 8.5
+  private val MiniprobeNominalSec = 32.0
+
   /** (throughput rows/sec, p95 batch ms, wall sec, peak state-store rows). */
   private type RunResult = (Double, Double, Double, Long)
 
@@ -78,79 +87,46 @@ object Bench {
       ps.length)
   }
 
-  /** The streaming CEP pipeline under test: the production job's repair
-    * stream (`TranscriptPipeline.repaired`: validation → watermark →
-    * per-conversation order repair) into a counting sink. `check = false`
-    * (warm-up runs) skips the emitted-rows gate — the warm-up subset's
-    * count is not plumbed through.
+  /** Drains `stream` into a counting sink from a fresh tmpfs checkpoint,
+    * deleted afterwards (the sweep in `runPinned` covers killed children).
+    * `check = false` (warm-up runs) skips the emitted-count gate — the
+    * warm-up subset's count is not plumbed through. A short count makes
+    * every throughput number a lie, so the round fails with `what` and
+    * `cause` and the watermark drops as its diagnosis. Throughput is INPUT
+    * turns/sec for every pipeline, so their scaling numbers are comparable;
+    * output rows/sec would track the fixture's selectivity instead of the
+    * work done.
     */
-  private def streamOnce(spark: SparkSession, inputDir: String,
-                         filesPerTrigger: Int, totalRows: Long,
-                         check: Boolean = true): RunResult = {
-    // `repaired` reads only the input dir and the files per trigger
-    val cfg = TranscriptPipeline.Config(inputDir, "", "", "", "",
-      maxFilesPerTrigger = filesPerTrigger)
-    var emitted = 0L
-    val q = TranscriptPipeline.repaired(spark, cfg).writeStream
-      .option("checkpointLocation",
-        Files.createTempDirectory(java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.stream.TurnPacked], _: Long) =>
-        emitted += b.count()
-      }.start()
-    val t0 = System.nanoTime()
-    val sec = try { q.processAllAvailable(); (System.nanoTime() - t0) / 1e9 }
-              finally q.stop()
-    val stats = statsOf(q)
-    // rows silently dropped by the watermark (= arrival order violated the
-    // staged event-time order) make every throughput number a lie — fail the
-    // round WITH the diagnosis the round-2 driver bench lacked
-    if (check && emitted != totalRows)
-      throw new IllegalStateException(
-        s"repair emitted $emitted of $totalRows " +
-          s"(numRowsDroppedByWatermark=${stats.dropped}, " +
-          s"batches=${stats.batches}) — " +
-          "staged files likely consumed out of event-time order")
-    (totalRows / sec, stats.p95, sec, stats.maxStateRows)
+  private def drain(stream: DataFrame, totalRows: Long, expected: Long, check: Boolean,
+                    what: String, cause: String): RunResult = {
+    val ckpt = Files.createTempDirectory(java.nio.file.Paths.get("/dev/shm"), "graft_ckpt")
+    try {
+      var emitted = 0L
+      val q = stream.writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (b: DataFrame, _: Long) => emitted += b.count() }
+        .start()
+      val t0 = System.nanoTime()
+      val sec = try { q.processAllAvailable(); (System.nanoTime() - t0) / 1e9 }
+                finally q.stop()
+      val stats = statsOf(q)
+      if (check && emitted != expected)
+        throw new IllegalStateException(
+          s"$what emitted $emitted of $expected " +
+            s"(numRowsDroppedByWatermark=${stats.dropped}, " +
+            s"batches=${stats.batches}) — $cause")
+      (totalRows / sec, stats.p95, sec, stats.maxStateRows)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
   }
 
-  /** The SECOND north-rule stateful pipeline under the same harness: the
+  /** The stateful pipelines under test. `repair`: the production job's
+    * repair stream (`TranscriptPipeline.repaired`: validation → watermark →
+    * per-conversation order repair), which emits every input turn.
+    * `toolpair`: the SECOND north-rule stateful pipeline, the
     * tool-call/response stream-stream inner join (watermarked both sides,
-    * range-bounded state). Correctness guard: the emitted pair count must
-    * equal the batch all-pairs join on the same staged input — a short
-    * count means join state was evicted early or late rows were dropped,
-    * and every throughput number would be a lie.
+    * range-bounded state), whose pair count must equal the batch all-pairs
+    * join on the same staged input.
     */
-  private def joinOnce(spark: SparkSession, inputDir: String,
-                       filesPerTrigger: Int, totalRows: Long,
-                       expectedPairs: Long, check: Boolean = true): RunResult = {
-    val src = spark.readStream.schema(TranscriptPipeline.turnSchema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-    val paired = ToolPair.streaming(src, maxDelay = "5 MINUTES",
-      watermark = "10 minutes", leftOuter = false)
-
-    var emitted = 0L
-    val q = paired.writeStream
-      .option("checkpointLocation",
-        Files.createTempDirectory(java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString)
-      .foreachBatch { (b: DataFrame, _: Long) => emitted += b.count() }
-      .start()
-    val t0 = System.nanoTime()
-    val sec = try { q.processAllAvailable(); (System.nanoTime() - t0) / 1e9 }
-              finally q.stop()
-    val stats = statsOf(q)
-    if (check && emitted != expectedPairs)
-      throw new IllegalStateException(
-        s"tool-pair join emitted $emitted of $expectedPairs pairs " +
-          s"(numRowsDroppedByWatermark=${stats.dropped}, " +
-          s"batches=${stats.batches}) — " +
-          "join state evicted early or staged files consumed out of event-time order")
-    // throughput is INPUT turns/sec (same unit as the repair pipeline, so the
-    // two pipelines' scaling numbers are comparable); pairs/sec would track
-    // the join selectivity of the fixture instead of the work done
-    (totalRows / sec, stats.p95, sec, stats.maxStateRows)
-  }
-
   private def runPipeline(spark: SparkSession, pipeline: String, inputDir: String,
                           rows: Long, expected: Long, check: Boolean,
                           fpt: Int): RunResult =
@@ -164,8 +140,19 @@ object Bench {
       // file count, the parent shrinks fpt proportionally so the batch
       // COUNT (fixed-cost amortization) survives; batch size shrinks with
       // it, which is the safe direction for join state.
-      case "toolpair" => joinOnce(spark, inputDir, fpt, rows, expected, check)
-      case _ => streamOnce(spark, inputDir, fpt, rows, check)
+      case "toolpair" =>
+        val src = spark.readStream.schema(TranscriptPipeline.turnSchema)
+          .option("maxFilesPerTrigger", fpt)
+          .parquet(inputDir)
+        drain(ToolPair.streaming(src, maxDelay = "5 MINUTES",
+            watermark = "10 minutes", leftOuter = false),
+          rows, expected, check, "tool-pair join",
+          "join state evicted early or staged files consumed out of event-time order")
+      case _ =>
+        // `repaired` reads only the input dir and the files per trigger
+        val cfg = TranscriptPipeline.Config(inputDir, "", "", "", "", maxFilesPerTrigger = fpt)
+        drain(TranscriptPipeline.repaired(spark, cfg).toDF(), rows, rows, check, "repair",
+          "staged files likely consumed out of event-time order")
     }
 
   /** Child mode: optional unmeasured JIT warm-up over a small staged subset
@@ -428,8 +415,7 @@ object Bench {
     //      above nominal means the box is slow NOW, before staging commits
     //      to an input size. ----
     val queriesSec = phases.find(_._1 == "queries").map(_._2).getOrElse(0.0)
-    val qNominal = sys.env.getOrElse("SPARK_GRAFT_BENCH_QNOM", "75").toDouble
-    val noiseFactor = math.max(1.0, queriesSec / qNominal)
+    val noiseFactor = math.max(1.0, queriesSec / QueriesNominalSec)
     val inputScale = if (noiseFactor > 2.2) 4 else if (noiseFactor > 1.3) 2 else 1
     val effReplicate = math.max(1, replicate / inputScale)
     trace(f"""{"noise_factor":$noiseFactor%.2f,"input_scale":$inputScale}""")
@@ -550,16 +536,13 @@ object Bench {
     // direction: it can only shrink the input more than strictly needed,
     // never overrun.
     val startupSec = 20.0
-    // quiet-box single-requester GB/s for this probe (measured: 8.2-8.5
-    // repeated over a quiet hour; the crush regime reads a small fraction
-    // of this). Ratios below 1 clamp to 1 — a faster-than-nominal box
-    // never inflates the schedule.
-    val bwNom = sys.env.getOrElse("SPARK_GRAFT_BENCH_BWNOM", "8.5").toDouble
+    // ratios below 1 clamp to 1 — a faster-than-nominal box never
+    // inflates the schedule
     val bwSamples = ArrayBuffer.empty[Double]
     def narrowNoise(): Double = {
       val bw = bwProbe()
       bwSamples += bw
-      val r = if (bw > 0 && bwNom > 0) math.max(1.0, bwNom / bw) else 1.0
+      val r = if (bw > 0) math.max(1.0, BandwidthNominalGbs / bw) else 1.0
       val n = math.max(noiseFactor, r)
       trace(f"""{"bw_gbs":$bw%.2f,"narrow_noise":$n%.2f}""")
       n
@@ -675,11 +658,10 @@ object Bench {
     // dominated by fixed per-batch costs (measured quiet: 32-34 s with
     // CPU ≈ wall), so the wall is nearly replication-independent while
     // throughput is not. ----
-    val miniNomSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_MININOM", "32.0").toDouble
     val miniNoise = phase("miniprobe") {
       try {
         val (r, _) = runPinned(1, warmupDir, prefixRows(8), "repair", 0L, 1, "-", 64)
-        math.max(1.0, r._3 / miniNomSec)
+        math.max(1.0, r._3 / MiniprobeNominalSec)
       } catch { case scala.util.control.NonFatal(_) => 1.0 }
     }
     trace(f"""{"mini_noise":$miniNoise%.2f}""")

@@ -90,9 +90,8 @@ case class Dataflow(
     sourceEvents.foreach { case (level, msg) => notifyAll(level, msg) }
     val input = sources.zipWithIndex.map { case (s, i) =>
       notifyAll("INFO", s"Attaching data source [$name/source_$i]")
-      val out = s
       notifyAll("INFO", s"Data source [$name/source_$i] attached")
-      out
+      s
     }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
     val prefix: Seq[Transformation] =
       (if (keys.nonEmpty) Seq(Required(keys)) else Nil) ++

@@ -92,10 +92,10 @@ object TranscriptPipeline {
   }
 
   /** One micro-batch, persisted once so the state operator runs once. Error
-    * rows are appended to `cfg.errorsDir` by a [[BatchEffect]] under the
-    * sink's journal, after the merge has read the batch: the error count is
-    * then a scan of the cached batch, and a batch without errors writes
-    * nothing. */
+    * rows are appended to `cfg.errorsDir` by a [[BatchEffect]] that the
+    * sink runs before its manifest commit, after the merge has read the
+    * batch: the error count is then a scan of the cached batch, and a batch
+    * without errors writes nothing. */
   private def each(cfg: Config, sink: MergeSink, batch: Dataset[TurnPacked], batchId: Long): Unit = {
     val cached = batch.persist()
     try {

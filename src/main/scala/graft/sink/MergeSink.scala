@@ -11,19 +11,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** A per-batch side effect sharing [[MergeSink]]'s commit journal — the
+/** A per-batch side effect committed with [[MergeSink]]'s manifest — the
   * Spark-native analog of the reference `DbCommand`'s ARBITRARY per-record
   * SQL surface (reference: src/Shipwright.Core/Dataflows/Transformations/
   * DbCommand.cs:118-144 executes any INSERT/UPDATE/stored-proc; the sink
   * itself realizes only the keyed upsert/tombstone contract).
   *
   * Contract: the sink runs the effect once per batchId it commits, after
-  * the batch's rows are in the table and before its journal entry — a
-  * re-delivered (already journaled) micro-batch skips the effect, so under
-  * checkpointed `foreachBatch` the effect is exactly-once EXCEPT for the
-  * crash window between effect execution and journal write, where replay
-  * re-runs it. The effect must therefore be idempotent per batchId (same
-  * contract a DbCommand upsert needed against its database).
+  * the batch's rows are written and before the manifest rename that
+  * commits them — a re-delivered (already committed) micro-batch skips the
+  * effect, and an effect that throws leaves the table at its previous
+  * version. Under checkpointed `foreachBatch` the effect is therefore
+  * exactly-once EXCEPT for the crash window between effect execution and
+  * the rename, where replay re-runs it. The effect must therefore be
+  * idempotent per batchId (same contract a DbCommand upsert needed against
+  * its database).
   */
 trait BatchEffect extends Serializable {
   def apply(batch: DataFrame, batchId: Long): Unit
@@ -39,7 +41,8 @@ trait BatchEffect extends Serializable {
   *
   *   - the table is `numBuckets` hash-buckets of the key; a manifest maps
   *     bucket → current data directory (Iceberg's manifest-of-data-files,
-  *     one entry per bucket)
+  *     one entry per bucket) and records the bucket width and the id of
+  *     the last batch it applied
   *   - merge(batch) touches ONLY the buckets containing batch keys (the
   *     lookup and the write both read the batch, so a caller persists a
   *     costly one); those buckets' rows ∪ batch go through ONE key-hash
@@ -49,11 +52,12 @@ trait BatchEffect extends Serializable {
   *     output is written as one file per bucket. The new manifest
   *     references the untouched buckets' existing dirs — a partition-scoped
   *     merge, not a table rewrite
-  *   - commit = write `_manifest.{N}`, atomically flip `_current`; the
-  *     commit journal (one `_commits.d/<batchId>` marker per batch,
-  *     periodically compacted into the `_commits` file) records applied
-  *     batch ids, so a re-delivered micro-batch (same batchId after
-  *     restart) is a no-op: foreachBatch + checkpoint ⇒ exactly-once
+  *   - commit = ONE step: rename a tmp file to `_manifest.{N+1}` without
+  *     overwrite. The current version is the highest `_manifest.N` in the
+  *     table root, and a batch whose id is at or below the one that
+  *     manifest records is a no-op (as Spark's FileStreamSink skips an
+  *     already committed batch), so a re-delivered micro-batch after
+  *     restart changes nothing: foreachBatch + checkpoint ⇒ exactly-once
   *
   * All metadata and data IO goes through the Hadoop `FileSystem` /
   * `FileContext` API resolved from `tableDir`'s scheme, so the same sink
@@ -87,14 +91,43 @@ object MergeSink {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockFor(qualifiedRoot: String): Object =
     tableLocks.computeIfAbsent(qualifiedRoot, _ => new Object)
+
+  /** One table version as its `_manifest.{version}` file holds it: the
+    * bucket width its data was hashed with (an Iceberg-table-property
+    * analog that wins over the constructor argument), the id of the last
+    * batch it applied (-1 for none), and bucket → data dir relative to the
+    * table root. */
+  private[graft] final case class Manifest(version: Long, width: Int, batchId: Long,
+                                           buckets: Map[Int, String]) {
+    def text: String =
+      (s"buckets\t$width" +: s"batch\t$batchId" +:
+        buckets.toSeq.sortBy(_._1).map { case (b, d) => s"$b\t$d" })
+        .mkString("", "\n", "\n")
+  }
+
+  /** Reads [[Manifest.text]] back; a manifest written before the width or
+    * the batch id was recorded reads as `defaultWidth` or -1. */
+  private def parseManifest(version: Long, text: String, defaultWidth: Int): Manifest = {
+    val lines = text.split("\n").map(_.split("\t"))
+    Manifest(version,
+      lines.collectFirst { case Array("buckets", w) => w.toInt }.getOrElse(defaultWidth),
+      lines.collectFirst { case Array("batch", id) => id.toLong }.getOrElse(-1L),
+      lines.collect { case Array(b, d) if b != "buckets" && b != "batch" => b.toInt -> d }.toMap)
+  }
+
+  private val ManifestName = """_manifest\.(\d+)""".r
+  private def versionOf(name: String): Option[Long] = name match {
+    case ManifestName(v) => Some(v.toLong)
+    case _ => None
+  }
 }
 
 class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
-                numBuckets: Int = 16, journalCompactAfter: Int = 1 << 16) {
+                numBuckets: Int = 16) {
+  import MergeSink.{Manifest, parseManifest, versionOf}
   require(keyCols.nonEmpty, "MergeSink needs at least one key column")
   require(versionCol.trim.nonEmpty, "MergeSink needs a version column")
   require(numBuckets > 0, "MergeSink needs a positive bucket count")
-  require(journalCompactAfter > 0, "MergeSink needs a positive compaction threshold")
 
   private val hconf: Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
@@ -106,120 +139,40 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
   fs.mkdirs(root)
   private lazy val fc: FileContext = FileContext.getFileContext(root.toUri, hconf)
 
-  private def currentPtr: HPath = new HPath(root, "_current")
-  private def commitsPtr: HPath = new HPath(root, "_commits")
-  private def commitsDir: HPath = new HPath(root, "_commits.d")
   private def manifestPath(v: Long): HPath = new HPath(root, s"_manifest.$v")
 
-  private def readString(p: HPath): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  private def readManifest(v: Long): Manifest = {
+    val in = fs.open(manifestPath(v))
+    try parseManifest(v, new String(in.readAllBytes(), UTF_8), numBuckets) finally in.close()
   }
 
-  private def writeString(p: HPath, s: String, overwrite: Boolean): Unit = {
-    val out = fs.create(p, overwrite)
-    try out.write(s.getBytes(UTF_8)) finally out.close()
-  }
+  /** The current version: the highest `_manifest.N` in the table root, or
+    * the empty version -1 before the first commit. Re-read by every merge,
+    * so a rebucket through another (sequential) instance — or one that
+    * failed mid-write — can never leave this instance hashing keys with a
+    * width that disagrees with the manifest it merges against. */
+  private def latest: Manifest =
+    fs.listStatus(root).flatMap(s => versionOf(s.getPath.getName)).maxOption
+      .fold(Manifest(-1L, numBuckets, -1L, Map.empty))(readManifest)
 
-  /** Atomic pointer flip (REPLACE_EXISTING ≡ Options.Rename.OVERWRITE). */
-  private def renameOver(src: HPath, dst: HPath): Unit =
-    fc.rename(src, dst, Options.Rename.OVERWRITE)
+  def currentVersion: Long = latest.version
 
-  def currentVersion: Long =
-    if (fs.exists(currentPtr)) readString(currentPtr).trim.toLong else -1L
-
-  // Tolerate a truncated/garbled trailing line in the compacted file (crash
-  // mid-write before it became tmp+atomic-move): an unparsable id is simply
-  // not committed, so the batch re-merges idempotently instead of wedging.
-  private def compactedIds: Set[Long] =
-    if (fs.exists(commitsPtr))
-      readString(commitsPtr).split("\n")
-        .flatMap(l => scala.util.Try(l.trim.toLong).toOption).toSet
-    else Set.empty
-
-  private def markerIds: Set[Long] =
-    if (!fs.exists(commitsDir)) Set.empty
-    else fs.listStatus(commitsDir)
-      .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption).toSet
-
-  /** O(1) journal probe per batch: one marker existence check + one small
-    * compacted-file read — never a full-journal rewrite (the pre-compaction
-    * design rewrote every committed id each batch: O(N²) cumulative IO).
-    */
-  private def isCommitted(batchId: Long): Boolean =
-    fs.exists(new HPath(commitsDir, batchId.toString)) ||
-      compactedIds.contains(batchId)
-
-  /** Visible for tests: all journaled batch ids (compacted ∪ markers). */
-  def committedBatches: Set[Long] = compactedIds ++ markerIds
-
-  /** Append one marker file for `batchId`; compact markers into `_commits`
-    * once they exceed the threshold (checked every `threshold/16` commits so
-    * the steady-state cost per batch stays one file create).
-    */
-  private var commitsSinceCheck = 0
-  private def recordCommit(batchId: Long): Unit = {
-    fs.mkdirs(commitsDir)
-    fs.create(new HPath(commitsDir, batchId.toString), true).close()
-    commitsSinceCheck += 1
-    if (commitsSinceCheck >= math.max(1, journalCompactAfter / 16)) {
-      commitsSinceCheck = 0
-      maybeCompact()
-    }
-  }
-
-  private def maybeCompact(): Unit = {
-    val markers = markerIds
-    if (markers.size >= journalCompactAfter) {
-      // union first, delete markers after: a crash between the two leaves
-      // ids present in both places — harmless, committedBatches is a union
-      val all = (compactedIds ++ markers).toSeq.sorted
-      val tmp = new HPath(root, "_commits.tmp")
-      writeString(tmp, all.mkString("", "\n", "\n"), overwrite = true)
-      renameOver(tmp, commitsPtr)
-      markers.foreach(id =>
-        fs.delete(new HPath(commitsDir, id.toString), false))
-    }
-  }
-
-  /** bucket → data dir (relative to root). */
-  private def readManifest(v: Long): Map[Int, String] =
-    if (v < 0 || !fs.exists(manifestPath(v))) Map.empty
-    else readString(manifestPath(v)).split("\n")
-      .filter(l => l.nonEmpty && !l.startsWith("buckets\t")).map { line =>
-        val Array(b, dir) = line.split("\t")
-        b.toInt -> dir
-      }.toMap
-
-  private def readBucketCount(v: Long): Option[Int] =
-    if (v < 0 || !fs.exists(manifestPath(v))) None
-    else readString(manifestPath(v)).split("\n")
-      .find(_.startsWith("buckets\t")).map(_.split("\t")(1).toInt)
-
-  /** Effective bucket width AT a manifest version: the JOURNALED width wins
-    * over the constructor argument (an Iceberg-table-property analog).
-    * merge() re-reads it from the exact version it merges against, so a
-    * rebucket through another (sequential) instance — or one that failed
-    * mid-write — can never leave this instance hashing keys with a width
-    * that disagrees with the manifest it reads.
-    */
-  private def widthAt(v: Long): Int = readBucketCount(v).getOrElse(numBuckets)
-
-  def bucketCount: Int = widthAt(currentVersion)
+  def bucketCount: Int = latest.width
 
   private def bucketCol(width: Int) = pmod(hash(keyCols.map(col): _*), lit(width))
 
   def read(spark: SparkSession): DataFrame = {
-    val dirs = readManifest(currentVersion).values.toSeq.distinct
+    val dirs = latest.buckets.values.toSeq.distinct
       .map(d => new HPath(root, d).toString)
     if (dirs.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(dirs: _*).drop("__bucket")
   }
 
-  def isEmpty: Boolean = readManifest(currentVersion).isEmpty
+  def isEmpty: Boolean = latest.buckets.isEmpty
 
   /** Idempotent keyed merge of one micro-batch. Safe to call from
-    * `foreachBatch`; re-delivery of an applied batchId is a no-op.
+    * `foreachBatch`; a batchId at or below the current manifest's is a
+    * no-op.
     *
     * `deleteCol`: optional boolean column marking TOMBSTONES — the MERGE's
     * `WHEN MATCHED AND <del> THEN DELETE` arm (the reference DbCommand's
@@ -228,19 +181,16 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
     * `versionCol`) decides whether the key survives. Replays converge:
     * deleting an absent key is a no-op.
     *
-    * `effects`: [[BatchEffect]]s run under the same journal guard, after
-    * the batch's rows are in the table — a re-delivered batchId skips them
-    * along with the merge (see the BatchEffect idempotence contract for the
-    * crash window).
+    * `effects`: [[BatchEffect]]s run after the batch's rows are written and
+    * before the commit — a re-delivered batchId skips them along with the
+    * merge, and one that throws leaves the table at its previous version
+    * (see the BatchEffect idempotence contract for the crash window).
     */
   def merge(batch: DataFrame, batchId: Long,
             deleteCol: Option[String] = None,
             effects: Seq[BatchEffect] = Nil): Unit = tableLock.synchronized {
-    if (isCommitted(batchId)) return
-    def journal(): Unit = { effects.foreach(_.apply(batch, batchId)); recordCommit(batchId) }
-    val v = currentVersion
-    val manifest = readManifest(v)
-    val width = widthAt(v) // the width THIS manifest was written with
+    val m = latest
+    if (batchId <= m.batchId) return
 
     // the touched-bucket lookup and the write both read `batch`: a caller
     // whose batch is costly to compute (a streaming job's state update)
@@ -250,49 +200,46 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
         deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false)))
           .getOrElse(lit(false)))
       .drop(deleteCol.toSeq: _*)
-      .withColumn("__bucket", bucketCol(width))
+      .withColumn("__bucket", bucketCol(m.width))
     val touched = staged.select("__bucket").distinct()
       .collect().map(_.getInt(0)).toSet
-    if (touched.isEmpty) return journal()
-
-    // current rows of ONLY the touched buckets (partition-scoped read)
-    val touchedDirs = manifest.filter { case (b, _) => touched.contains(b) }
-      .values.toSeq.distinct
-    val rows = staged.withColumn("__gen", lit(1)) // batch row beats current row
-    val next = v + 1
-    val written = writeBuckets(
-      if (touchedDirs.isEmpty) rows
-      else current(batch.sparkSession, touchedDirs, width).unionByName(rows),
-      width, s"data_v$next")
-
+    val next = m.version + 1
+    val written =
+      if (touched.isEmpty) Map.empty[Int, String]
+      else {
+        // current rows of ONLY the touched buckets (partition-scoped read)
+        val touchedDirs = m.buckets.filter { case (b, _) => touched.contains(b) }
+          .values.toSeq.distinct
+        val rows = staged.withColumn("__gen", lit(1)) // batch row beats current row
+        writeBuckets(
+          if (touchedDirs.isEmpty) rows
+          else current(batch.sparkSession, touchedDirs, m.width).unionByName(rows),
+          m.width, s"data_v$next")
+      }
+    effects.foreach(_.apply(batch, batchId))
     // a tombstone batch can empty a touched bucket entirely — only buckets
-    // that actually wrote rows enter the manifest; emptied ones drop out
-    val newManifest = manifest -- touched ++ written
-    writeVersion(next, newManifest, width)
-    journal()
-    gc(newManifest)
+    // that actually wrote rows enter the manifest; emptied ones drop out. A
+    // batch that touches no bucket commits the same entries under its id.
+    commit(Manifest(next, m.width, batchId, m.buckets -- touched ++ written))
   }
 
   /** Admin migration: rewrite the WHOLE table at a new bucket width under
-    * the next manifest version — read-all → re-hash → one atomic commit
-    * (the usual write-data-then-flip discipline; a crash leaves the old
-    * version current). Run it when key cardinality has outgrown the width
+    * the next manifest version — read-all → re-hash → one commit (the usual
+    * write-data-then-rename discipline; a crash leaves the old version
+    * current). Run it when key cardinality has outgrown the width
     * (per-bucket dirs getting too large); subsequent merges and reopened
-    * sinks pick the journaled width up automatically.
+    * sinks pick the recorded width up automatically.
     */
   def rebucket(spark: SparkSession, newBuckets: Int): Unit = tableLock.synchronized {
     require(newBuckets > 0, "rebucket needs a positive bucket count")
-    val v = currentVersion
-    if (newBuckets == widthAt(v)) return
-    val dirs = readManifest(v).values.toSeq.distinct
-    val next = v + 1
-    val newManifest =
+    val m = latest
+    if (newBuckets == m.width) return
+    val dirs = m.buckets.values.toSeq.distinct
+    val next = m.version + 1
+    val buckets =
       if (dirs.isEmpty) Map.empty[Int, String]
       else writeBuckets(current(spark, dirs, newBuckets), newBuckets, s"data_v$next")
-    // nothing mutates until this atomic flip: a failed write above leaves
-    // the old version (and old width) current
-    writeVersion(next, newManifest, newBuckets)
-    gc(newManifest)
+    commit(Manifest(next, newBuckets, m.batchId, buckets))
   }
 
   /** The table rows in `dirs` (bucket dirs relative to root), staged for
@@ -336,50 +283,43 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
     catch { case _: FileNotFoundException => Map.empty }
   }
 
-  /** Manifest (with its journaled bucket width) + atomic `_current` flip.
-    *
-    * The manifest lands via tmp + rename-WITHOUT-overwrite: a concurrent
-    * writer that already published this version makes the rename fail
-    * loudly (optimistic-concurrency check) instead of silently clobbering.
-    * An orphan `_manifest.{v}` ABOVE the committed pointer — the residue of
-    * a crash between rename and flip, unreachable by readers — is cleared
-    * first so the single writer can never wedge itself. (An orphan is
-    * distinguishable from a CONCURRENT winner's manifest: the winner also
-    * flipped `_current`, so its version is not above the pointer and the
-    * clear is skipped — the rename then collides and fails.)
+  /** The commit, one step: `m` lands as `_manifest.{m.version}` via tmp +
+    * rename WITHOUT overwrite, so a writer that already published this
+    * version makes the rename fail loudly (optimistic-concurrency check)
+    * instead of being clobbered. Then gc.
     *
     * Visible to tests: the collision spec drives this commit step directly
     * to simulate losing the cross-process race, whose timing window (between
     * this writer's version read and its rename) cannot be hit
     * deterministically from the public API.
     */
-  private[graft] def writeVersion(version: Long, manifest: Map[Int, String], width: Int): Unit = {
-    val dst = manifestPath(version)
-    if (fs.exists(dst) && version > currentVersion) fs.delete(dst, false)
-    val mtmp = new HPath(root, "_manifest.tmp")
-    writeString(mtmp,
-      (s"buckets\t$width" +:
-        manifest.toSeq.sortBy(_._1).map { case (b, d) => s"$b\t$d" })
-        .mkString("", "\n", "\n"),
-      overwrite = true)
-    try fc.rename(mtmp, dst, Options.Rename.NONE)
-    catch {
-      case NonFatal(e) =>
-        throw new IllegalStateException(
-          s"MergeSink at $root: commit of _manifest.$version collided — " +
-            "another writer holds this table (single-writer contract)", e)
-    }
-    val tmp = new HPath(root, "_current.tmp")
-    writeString(tmp, version.toString, overwrite = true)
-    renameOver(tmp, currentPtr)
+  private[graft] def commit(m: Manifest): Unit = {
+    val tmp = new HPath(root, "_manifest.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(m.text.getBytes(UTF_8)) finally out.close()
+    try fc.rename(tmp, manifestPath(m.version), Options.Rename.NONE)
+    catch { case NonFatal(e) => throw collided(m.version, e) }
+    gc(m)
   }
 
-  /** Remove data dirs no manifest entry references (keep the live set). */
-  private def gc(live: Map[Int, String]): Unit = {
-    val liveDirs = live.values.map(_.split("/").head).toSet
-    fs.listStatus(root).foreach { s =>
+  private def collided(version: Long, cause: Throwable) =
+    new IllegalStateException(
+      s"MergeSink at $root: commit of _manifest.$version collided — " +
+        "another writer holds this table (single-writer contract)", cause)
+
+  /** Removes the manifests below `m` and the data dirs it does not
+    * reference. A manifest above `m` means another writer committed past
+    * this one into a slot gc had freed: fail loudly, deleting nothing, so
+    * this writer's gc cannot remove the other's data. */
+  private def gc(m: Manifest): Unit = {
+    val entries = fs.listStatus(root)
+    if (entries.exists(s => versionOf(s.getPath.getName).exists(_ > m.version)))
+      throw collided(m.version, null)
+    val liveDirs = m.buckets.values.map(_.split("/").head).toSet
+    entries.foreach { s =>
       val name = s.getPath.getName
-      if (s.isDirectory && name.startsWith("data_v") && !liveDirs.contains(name))
+      if (versionOf(name).exists(_ < m.version) ||
+          (s.isDirectory && name.startsWith("data_v") && !liveDirs.contains(name)))
         try fs.delete(s.getPath, true) catch { case NonFatal(_) => }
     }
   }

@@ -240,12 +240,6 @@ case class Lookup(lookupDf: DataFrame, joinKeys: Seq[String],
   */
 case class CodeT(fn: DataFrame => DataFrame) extends Transformation
 
-/** Per-field column effects of one transformation under a row guard. */
-private[transform] case class Effects(
-    sets: Seq[(String, Column => Column)], // field -> old value -> new value
-    events: Seq[Column => Column]          // old events -> new events
-)
-
 /** Compiles a transformation list over a DataFrame carrying an `events`
   * column, reproducing the reference's short-circuit decorator
   * (TransformationHandlerEventDecorator.cs:20-27): each op's effects are

@@ -54,12 +54,12 @@ class MergeSinkSpec extends AnyFunSuite {
 
   /** Asserts one shuffle in the write and one data file per bucket dir of
     * the current version's data dir. */
-  private def assertOneShuffleOneFilePerBucket(dir: String, plans: Seq[SparkPlan]): Unit = {
+  private def assertOneShuffleOneFilePerBucket(dir: String, sink: MergeSink,
+                                               plans: Seq[SparkPlan]): Unit = {
     assert(plans.size == 1, s"expected one write, got ${plans.size}")
     val shuffles = Plans.collect(plans.head) { case e: ShuffleExchangeLike => e }
     assert(shuffles.size == 1, s"expected one shuffle exchange in:\n${plans.head}")
-    val data = java.nio.file.Paths.get(dir, s"data_v${
-      Files.readString(java.nio.file.Paths.get(dir, "_current")).trim}")
+    val data = java.nio.file.Paths.get(dir, s"data_v${sink.currentVersion}")
     val bucketDirs = Files.list(data).toArray.map(_.asInstanceOf[java.nio.file.Path])
       .filter(_.getFileName.toString.startsWith("__bucket="))
     assert(bucketDirs.nonEmpty)
@@ -79,14 +79,14 @@ class MergeSinkSpec extends AnyFunSuite {
     sink.merge((0 until 200).map(i => turn(s"c$i", 0, "v1", i)).toDF(), 0L)
     val batch1 = (0 until 200 by 2).map(i => turn(s"c$i", 0, "v2", 1000 + i)) ++
       (0 until 50).map(i => turn(s"n$i", 0, "v1", 2000 + i))
-    assertOneShuffleOneFilePerBucket(dir,
+    assertOneShuffleOneFilePerBucket(dir, sink,
       writePlans(sink.merge(batch1.toDF(), 1L)))
     assert(tableOf(sink).size == 250)
     // width 7 has no divisor near the core count: the whole merge is one part
-    assertOneShuffleOneFilePerBucket(dir, writePlans(sink.rebucket(spark, 7)))
+    assertOneShuffleOneFilePerBucket(dir, sink, writePlans(sink.rebucket(spark, 7)))
     assert(sink.bucketCount == 7)
     val batch2 = (0 until 200 by 3).map(i => turn(s"c$i", 0, "v3", 3000 + i))
-    assertOneShuffleOneFilePerBucket(dir,
+    assertOneShuffleOneFilePerBucket(dir, sink,
       writePlans(sink.merge(batch2.toDF(), 2L)))
     val table = tableOf(sink)
     assert(table.size == 250)
@@ -109,7 +109,7 @@ class MergeSinkSpec extends AnyFunSuite {
     assert(tableOf(sink).contains(("c1", 1, "updated")))
     assert(tableOf(sink).size == before.size)
     // a REOPENED sink with a different constructor default must use the
-    // journaled width — a mismatched width would mis-route every key
+    // recorded width — a mismatched width would mis-route every key
     val reopened = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 7)
     assert(reopened.bucketCount == 16)
     assert(tableOf(reopened) == tableOf(sink))
@@ -132,33 +132,36 @@ class MergeSinkSpec extends AnyFunSuite {
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
     sink.merge(Seq(turn("c1", 0, "v0", 1)).toDF(), 0L) // commits version 0
     // Simulate a SECOND PROCESS winning the race to version 1: its manifest
-    // exists and _current points at it, while this sink's in-flight commit
-    // (which read version 0 before the winner published) targets the same
-    // version. writeVersion is driven directly because the race window —
-    // between the loser's version read and its rename — is not reachable
-    // deterministically through merge().
-    val winnerManifest = "buckets\t4\n"
+    // exists, while this sink's in-flight commit (which read version 0
+    // before the winner published) targets the same version. commit is
+    // driven directly because the race window — between the loser's version
+    // read and its rename — is not reachable deterministically through
+    // merge().
+    val winnerManifest = "buckets\t4\nbatch\t0\n"
     Files.write(java.nio.file.Paths.get(dir, "_manifest.1"), winnerManifest.getBytes("UTF-8"))
-    Files.write(java.nio.file.Paths.get(dir, "_current"), "1".getBytes("UTF-8"))
-    // raw writes bypass Hadoop's ChecksumFileSystem: drop the now-stale crc
-    // sidecars so the sink's reads see the simulated winner's files
-    Files.deleteIfExists(java.nio.file.Paths.get(dir, "._current.crc"))
-    Files.deleteIfExists(java.nio.file.Paths.get(dir, "._manifest.1.crc"))
     val ex = intercept[IllegalStateException] {
-      sink.writeVersion(1L, Map(0 -> "data_v1/__bucket=0"), 4)
+      sink.commit(MergeSink.Manifest(1L, 4, 1L, Map(0 -> "data_v1/__bucket=0")))
     }
     assert(ex.getMessage.contains("another writer"))
     // rename-without-overwrite means the winner's manifest was NOT clobbered
     assert(new String(Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_manifest.1")), "UTF-8") == winnerManifest)
     assert(sink.currentVersion == 1L)
-    // an ORPHAN above the committed pointer (crash residue: manifest renamed
-    // but _current never flipped) must still be cleared, not collide — the
-    // single writer can never wedge itself on its own debris
-    Files.write(java.nio.file.Paths.get(dir, "_manifest.2"), "buckets\t4\n".getBytes("UTF-8"))
+    // a loser further behind renames into a slot the winner's gc freed: the
+    // winner's higher manifest makes it fail loudly and delete nothing
+    Files.delete(java.nio.file.Paths.get(dir, "_manifest.0"))
+    Files.deleteIfExists(java.nio.file.Paths.get(dir, "._manifest.0.crc"))
+    val ex2 = intercept[IllegalStateException] {
+      sink.commit(MergeSink.Manifest(0L, 4, 1L, Map.empty))
+    }
+    assert(ex2.getMessage.contains("another writer"))
+    assert(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_manifest.1")), "UTF-8") == winnerManifest)
+    assert(Files.exists(java.nio.file.Paths.get(dir, "data_v0")))
     sink.merge(Seq(turn("c2", 0, "v1", 2)).toDF(), 1L) // targets version 2, succeeds
     // the winner's (empty) manifest was the base: c1's version-0 data is no
     // longer referenced, so the merged table carries exactly the new batch
+    assert(sink.currentVersion == 2L)
     assert(tableOf(sink).map(t => (t._1, t._2)) == Set(("c2", 0)))
   }
 
@@ -184,7 +187,7 @@ class MergeSinkSpec extends AnyFunSuite {
     sink.merge(b1, 1L, deleteCol = Some("del"))
     assert(tableOf(sink) == Set(("a", 0, "v2"), ("b", 0, "kept")))
 
-    // replay of batch 1 is a no-op (journaled)
+    // replay of batch 1 is a no-op (its id is in the manifest)
     sink.merge(b1, 1L, deleteCol = Some("del"))
     assert(tableOf(sink) == Set(("a", 0, "v2"), ("b", 0, "kept")))
 
@@ -229,7 +232,8 @@ class MergeSinkSpec extends AnyFunSuite {
     // batch 1 touches exactly one key → at most one bucket rewritten
     sink.merge(Seq(turn("c0", 0, "v2", 100L)).toDF(), 1L)
     val manifest1 = Files.readString(java.nio.file.Paths.get(dir, "_manifest.1"))
-    def entries(m: String) = m.linesIterator.filterNot(_.startsWith("buckets"))
+    def entries(m: String) = m.linesIterator
+      .filterNot(l => l.startsWith("buckets") || l.startsWith("batch"))
       .map(_.split("\t")).map(a => a(0) -> a(1)).toMap
     val (entries0, entries1) = (entries(manifest0), entries(manifest1))
     val changed = entries1.filter { case (b, d) => entries0.get(b).exists(_ != d) }
@@ -241,32 +245,47 @@ class MergeSinkSpec extends AnyFunSuite {
     // progress lines parse as JSON (listener robustness piggyback)
   }
 
-  test("journal compaction: markers fold into _commits; replayed batch stays a no-op") {
+  test("batch ids at or below the manifest's are no-ops: replay, reopened sink, after rebucket") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_compact").toString
-    // threshold 2 → compaction triggers while the table is tiny
-    val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos",
-      numBuckets = 4, journalCompactAfter = 2)
+    val dir = Files.createTempDirectory("merge_replay").toString
+    val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
     val b0 = Seq(turn("a", 0, "v1", 1)).toDF()
     sink.merge(b0, 0L)
     sink.merge(Seq(turn("a", 1, "v1", 2)).toDF(), 1L)
     sink.merge(Seq(turn("b", 0, "v1", 3)).toDF(), 2L)
-    // markers were compacted into the _commits file (dir empty or near-empty)
-    val compacted = Files.readString(java.nio.file.Paths.get(dir, "_commits"))
-    assert(compacted.linesIterator.toSet.intersect(Set("0", "1")).size == 2,
-      s"expected ids 0,1 compacted, got: $compacted")
-    assert(sink.committedBatches == Set(0L, 1L, 2L))
-    // a REPLAYED batch whose marker was deleted by compaction is still a no-op
+    val expected = Set(("a", 0, "v1"), ("a", 1, "v1"), ("b", 0, "v1"))
+    val overwrite = Seq(turn("a", 0, "replayed", 100)).toDF()
     val vBefore = sink.currentVersion
+    // a replayed batch, and an older id never applied, change nothing
     sink.merge(b0, 0L)
+    sink.merge(overwrite, 1L)
     assert(sink.currentVersion == vBefore)
-    assert(tableOf(sink) == Set(("a", 0, "v1"), ("a", 1, "v1"), ("b", 0, "v1")))
-    // a reopened sink sees the same journal
-    val reopened = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos",
-      numBuckets = 4, journalCompactAfter = 2)
-    reopened.merge(b0, 0L)
+    assert(tableOf(sink) == expected)
+    // a reopened sink reads the recorded id from the manifest
+    val reopened = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
+    reopened.merge(overwrite, 2L)
     assert(reopened.currentVersion == vBefore)
-    assert(reopened.committedBatches == Set(0L, 1L, 2L))
+    // rebucket carries the id forward
+    reopened.rebucket(spark, 8)
+    reopened.merge(overwrite, 2L)
+    assert(reopened.currentVersion == vBefore + 1)
+    assert(tableOf(reopened) == expected)
+    reopened.merge(overwrite, 3L)
+    assert(tableOf(reopened) == expected - (("a", 0, "v1")) + (("a", 0, "replayed")))
+  }
+
+  test("after N merges the root holds one manifest and only the data dirs it references") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("merge_gc")
+    val sink = new MergeSink(dir.toString, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
+    (0 until 5).foreach(i => sink.merge(Seq(turn(s"c$i", 0, "v", i)).toDF(), i.toLong))
+    val names = Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filterNot(_.startsWith(".")).toSet
+    val manifest = Files.readString(dir.resolve("_manifest.4"))
+    val referenced = manifest.linesIterator.map(_.split("\t"))
+      .collect { case Array(_, d) if d.startsWith("data_v") => d.takeWhile(_ != '/') }.toSet
+    assert(names == referenced + "_manifest.4", s"root holds ${names.mkString(", ")}")
+    assert(tableOf(sink).size == 5)
   }
 
   test("sink runs against an explicit file: FileSystem URI (Hadoop FS API path)") {
@@ -277,8 +296,8 @@ class MergeSinkSpec extends AnyFunSuite {
     sink.merge(Seq(turn("a", 0, "v2", 10)).toDF(), 1L)
     assert(tableOf(sink) == Set(("a", 0, "v2"), ("b", 0, "v1")))
     // metadata really landed under the local path the URI names
-    assert(Files.exists(dir.resolve("_current")))
     assert(Files.exists(dir.resolve("_manifest.1")))
+    assert(Seq("_current", "_commits", "_commits.d").forall(n => !Files.exists(dir.resolve(n))))
   }
 
   test("BatchEffect: runs once per committed batch, skipped on re-delivery") {
@@ -294,10 +313,38 @@ class MergeSinkSpec extends AnyFunSuite {
     sink.merge(b0, 0L, effects = Seq(audit))
     sink.merge(b0, 0L, effects = Seq(audit))               // replay → skipped
     sink.merge(Seq.empty[TurnPos].toDF(), 1L,
-      effects = Seq(audit))                                // empty batch still journals
+      effects = Seq(audit))                                // empty batch still commits
     sink.merge(b0, 1L, effects = Seq(audit))               // replay of empty id → skipped
     assert(runs.get(0L) == 1 && runs.get(1L) == 1)
     assert(tableOf(sink) == Set(("a", 0, "v1")))
+  }
+
+  test("BatchEffect that throws leaves the table at its version; the retry applies the batch") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("merge_effect_fail")
+    val sink = new MergeSink(dir.toString, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
+    sink.merge(Seq(turn("a", 0, "v1", 1)).toDF(), 0L)
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    val failing: BatchEffect = (_, _) => {
+      runs.incrementAndGet()
+      throw new IllegalStateException("effect failed")
+    }
+    val b1 = Seq(turn("a", 0, "v2", 10), turn("b", 0, "v1", 11)).toDF()
+    intercept[IllegalStateException](sink.merge(b1, 1L, effects = Seq(failing)))
+    assert(sink.currentVersion == 0L)
+    assert(tableOf(sink) == Set(("a", 0, "v1")))
+    def dataFiles(): Set[String] = Files.walk(dir).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.getFileName.toString.endsWith(".parquet")).map(_.toString).toSet
+    val failedTry = dataFiles().filter(_.contains("data_v1"))
+    assert(failedTry.nonEmpty)
+    // the retry runs the effect again and commits the batch
+    val counting: BatchEffect = (_, _) => runs.incrementAndGet()
+    sink.merge(b1, 1L, effects = Seq(counting))
+    assert(runs.get == 2)
+    assert(sink.currentVersion == 1L)
+    assert(tableOf(sink) == Set(("a", 0, "v2"), ("b", 0, "v1")))
+    assert(dataFiles().intersect(failedTry).isEmpty)
   }
 
   test("streaming foreachBatch + checkpoint: restart with replay converges (exactly-once)") {

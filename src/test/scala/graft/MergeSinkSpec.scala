@@ -245,7 +245,7 @@ class MergeSinkSpec extends AnyFunSuite {
     // progress lines parse as JSON (listener robustness piggyback)
   }
 
-  test("batch ids at or below the manifest's are no-ops: replay, reopened sink, after rebucket") {
+  test("batch ids at or below the manifest's are no-ops: replay, reopen, rebucket") {
     import spark.implicits._
     val dir = Files.createTempDirectory("merge_replay").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)

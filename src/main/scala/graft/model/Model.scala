@@ -1,25 +1,8 @@
 package graft.model
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-/** One transcript turn — the engine's primary typed record
-  * (BASELINE.json `input_hint`). Mirrors the reference's dynamic
-  * `Record.Data` dict (reference: src/Shipwright.Core/Dataflows/Record.cs:17)
-  * with a fixed schema: schema is declared per source instead of
-  * discovered per record.
-  */
-case class Turn(
-    conv_id: String,
-    turn_idx: Int,
-    role: String,
-    text: String,
-    tool: String,
-    ts: Timestamp
-)
 
 /** Per-row diagnostic event, the analog of the reference's
   * `LogEvent(StopProcessing, Level, Description, Value)` accumulated on
@@ -36,9 +19,7 @@ case class LogEvent(
 
 object LogEvent {
   val Error = "ERROR"
-  val Warning = "WARN"
   val Critical = "CRITICAL"
-  val Info = "INFO"
 }
 
 /** Helpers for the `events` column that every operator threads through.

@@ -3,7 +3,6 @@ package graft.stream
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One keyed input event (the operator's API record — `ts` is top-level so
   * `withWatermark` can tag it). Full-precision ts is preserved end to end:
@@ -37,9 +36,8 @@ case class BurstOut(user_id: Long, run_len: Long,
 /** CEP sequence-pattern detection as a stateful streaming operator: maximal
   * runs of >= minRun CONSECUTIVE matching events (e.g. `event_type =
   * 'error'`) per key, in EVENT-TIME order. The batch gaps-and-islands query
-  * (q_cep_error_burst) is this operator run with `NoTimeout` — the oracle
-  * pins the core's semantics, and the streaming flavor is asserted equal in
-  * the test suite (same pattern as OrderRepair / StreamDedup).
+  * (q_cep_error_burst) is this operator's batch mode, both run by
+  * [[EventTimeGroups]].
   *
   * Ordering under out-of-order arrival: "consecutive" is only decidable on
   * the watermark-complete prefix, so arrivals buffer in state and are
@@ -66,12 +64,7 @@ object Burst {
                       ordered: Seq[BurstEv]): (Vector[BurstOut], BurstRun) = {
     val out = Vector.newBuilder[BurstOut]
     var run = run0
-    def close(): Unit = {
-      if (run.len >= minRun)
-        out += BurstOut(userId, run.len, run.firstId, run.lastId,
-          run.startTs, run.endTs)
-      run = NoRun
-    }
+    def close(): Unit = { out ++= qualifying(userId, minRun, run); run = NoRun }
     ordered.foreach { e =>
       if (e.is_error) {
         run =
@@ -82,50 +75,35 @@ object Burst {
     (out.result(), run)
   }
 
-  private def closeFinal(userId: Long, minRun: Int,
-                         run: BurstRun): Iterator[BurstOut] =
+  private def qualifying(userId: Long, minRun: Int, run: BurstRun): Option[BurstOut] =
     if (run.len >= minRun)
-      Iterator.single(BurstOut(userId, run.len, run.firstId, run.lastId,
-        run.startTs, run.endTs))
-    else Iterator.empty
+      Some(BurstOut(userId, run.len, run.firstId, run.lastId, run.startTs, run.endTs))
+    else None
 
-  private def core(streaming: Boolean, gapMs: Long, minRun: Int)(
-      key: Long, keyedRows: Iterator[KeyedEv],
-      state: GroupState[BurstState]): Iterator[BurstOut] = {
+  /** The [[EventTimeGroups]] step: buffer the arrivals, then run the
+    * watermark-complete prefix — strictly below the watermark MILLISECOND:
+    * an event whose truncated ms equals the watermark may still be preceded
+    * by a later arrival in the same millisecond (ts > watermark, smaller id).
+    * At the infinite watermark of batch mode every event is complete.
+    */
+  private def step(minRun: Int)(key: Long, keyedRows: Iterator[KeyedEv],
+                                prev: Option[BurstState],
+                                watermarkMs: Long): (Iterator[BurstOut], Option[BurstState]) = {
     // group VALUES stay KeyedEv: a mapValues projection would rebuild `ts`
     // from the object and lose the watermark tag Append mode requires
-    val rows = keyedRows.map(e => BurstEv(e.event_id, e.ts, e.is_error))
-
-    if (state.hasTimedOut) {
-      val st = state.get
-      state.remove()
-      val (closed, open) =
-        advance(key, minRun, st.run, st.buffer.sortBy(evOrd))
-      return closed.iterator ++ closeFinal(key, minRun, open)
-    }
-
-    val st = state.getOption.getOrElse(BurstState(Nil, NoRun, Long.MinValue))
+    val st = prev.getOrElse(BurstState(Nil, NoRun, Long.MinValue))
     var maxTs = st.maxTs
-    val arrived = rows.toVector
+    val arrived = keyedRows.map(e => BurstEv(e.event_id, e.ts, e.is_error)).toVector
     arrived.foreach { e => if (e.ts.getTime > maxTs) maxTs = e.ts.getTime }
-    val buffer = st.buffer ++ arrived
+    val (ready, pending) = (st.buffer ++ arrived).partition(_.ts.getTime < watermarkMs)
+    val (closed, open) = advance(key, minRun, st.run, ready.sortBy(evOrd))
+    (closed.iterator, Some(BurstState(pending, open, maxTs)))
+  }
 
-    if (streaming) {
-      // Complete prefix = strictly below the watermark MILLISECOND: an event
-      // whose truncated ms equals the watermark may still be preceded by a
-      // later arrival in the same millisecond (ts > watermark, smaller id).
-      val wm = state.getCurrentWatermarkMs()
-      val (ready, pending) = buffer.partition(_.ts.getTime < wm)
-      val (closed, open) = advance(key, minRun, st.run, ready.sortBy(evOrd))
-      state.update(BurstState(pending, open, maxTs))
-      state.setTimeoutTimestamp(math.max(maxTs + gapMs, wm + 1))
-      closed.iterator
-    } else {
-      // Batch: one invocation per key — end-of-data is the final watermark.
-      state.remove()
-      val (closed, open) = advance(key, minRun, st.run, buffer.sortBy(evOrd))
-      closed.iterator ++ closeFinal(key, minRun, open)
-    }
+  /** Once no event can arrive: run what is buffered and close the open run. */
+  private def flush(minRun: Int)(key: Long, st: BurstState): Iterator[BurstOut] = {
+    val (closed, open) = advance(key, minRun, st.run, st.buffer.sortBy(evOrd))
+    closed.iterator ++ qualifying(key, minRun, open)
   }
 
   private implicit val evEnc = Encoders.product[BurstEv]
@@ -135,9 +113,7 @@ object Burst {
 
   /** Batch flavor (the driver-oracle target, q_cep_error_burst). */
   def batch(ds: Dataset[KeyedEv], minRun: Int = 3): Dataset[BurstOut] =
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        core(streaming = false, gapMs = 0L, minRun))
+    run(ds, None, minRun)
 
   /** Streaming flavor: caller must have applied `withWatermark("ts", …)`;
     * `gapMs` is how long a key's state outlives its last activity before
@@ -145,7 +121,8 @@ object Burst {
     */
   def streaming(ds: Dataset[KeyedEv], gapMs: Long,
                 minRun: Int = 3): Dataset[BurstOut] =
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        core(streaming = true, gapMs = gapMs, minRun))
+    run(ds, Some(gapMs), minRun)
+
+  private def run(ds: Dataset[KeyedEv], gapMs: Option[Long], minRun: Int): Dataset[BurstOut] =
+    EventTimeGroups(ds.groupByKey(_.user_id), gapMs)(step(minRun))(flush(minRun), _.maxTs)
 }

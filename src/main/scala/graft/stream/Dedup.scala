@@ -3,7 +3,6 @@ package graft.stream
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A turn plus the `Unique` flag columns: `is_duplicate` and, for
   * duplicates, the original's position (the reference event's
@@ -22,13 +21,14 @@ case class FirstSeen(pos: Long, maxTs: Long)
   *   - drop flavor — `dropDuplicatesWithinWatermark` keeps the first arrival
   *     per key and expires key state once the watermark passes (bounded
   *     state at 10^12-turn scale);
-  *   - flag flavor — [[flagWithinWatermark]]: `flatMapGroupsWithState`
-  *     remembering the FIRST ARRIVAL's position per key (the reference
-  *     Unique handler's sequential first-wins, Unique.cs:89-93); later
-  *     arrivals are EMITTED, not dropped, flagged with the original's
-  *     position. State per key is one (pos, ts) pair, evicted by
-  *     event-time timeout — the same bounded-state contract as the drop
-  *     flavor, with the duplicate-of provenance the reference preserves.
+  *   - flag flavor — [[flagWithinWatermark]]: keyed state (run by
+  *     [[EventTimeGroups]]) remembering the FIRST ARRIVAL's position per
+  *     key (the reference Unique handler's sequential first-wins,
+  *     Unique.cs:89-93); later arrivals are EMITTED, not dropped, flagged
+  *     with the original's position. State per key is one (pos, ts) pair,
+  *     evicted by event-time timeout — the same bounded-state contract as
+  *     the drop flavor, with the duplicate-of provenance the reference
+  *     preserves.
   */
 object StreamDedup {
 
@@ -41,11 +41,12 @@ object StreamDedup {
   private implicit val stateEnc = Encoders.product[FirstSeen]
   private implicit val keyEnc = Encoders.STRING
 
-  private def flagCore(streaming: Boolean, gapMs: Long)(
-      key: String, rows: Iterator[TurnPos],
-      state: GroupState[FirstSeen]): Iterator[FlaggedTurn] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var st = state.getOption.orNull
+  /** The [[EventTimeGroups]] step; it needs no watermark, and its flush
+    * emits nothing — every row leaves in the call that brought it.
+    */
+  private def flagStep(key: String, rows: Iterator[TurnPos], prev: Option[FirstSeen],
+                       watermarkMs: Long): (Iterator[FlaggedTurn], Option[FirstSeen]) = {
+    var st = prev.orNull
     val out = Vector.newBuilder[FlaggedTurn]
     // Iterator order within a micro-batch is arbitrary post-shuffle; sort by
     // source position so the min-pos row wins deterministically, matching the
@@ -63,18 +64,12 @@ object StreamDedup {
           t.ts, t.pos, is_duplicate = true, dup_of_pos = Some(st.pos))
       }
     }
-    if (streaming) {
-      state.update(st)
-      // future timeout even if this key's events are already behind the
-      // advanced watermark (Spark rejects timestamps at or before it)
-      state.setTimeoutTimestamp(
-        math.max(st.maxTs + gapMs, state.getCurrentWatermarkMs() + 1))
-    } else {
-      // Batch: one invocation per key — end-of-data plays the final watermark.
-      state.remove()
-    }
-    out.result().iterator
+    (out.result().iterator, Option(st))
   }
+
+  private def flag(ds: Dataset[TurnPos], gapMs: Option[Long]): Dataset[FlaggedTurn] =
+    EventTimeGroups(ds.groupByKey(t => t.conv_id + sep + t.turn_idx), gapMs)(flagStep)(
+      (_, _) => Iterator.empty, _.maxTs)
 
   /** Grouping-key separator: NUL cannot occur in conv_id (CSV/parquet text). */
   private val sep: String = 0.toChar.toString
@@ -84,18 +79,12 @@ object StreamDedup {
     * first-seen state outlives its last activity.
     */
   def flagWithinWatermark(ds: Dataset[TurnPos], gapMs: Long): Dataset[FlaggedTurn] =
-    ds.groupByKey(t => t.conv_id + sep + t.turn_idx)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        flagCore(streaming = true, gapMs))
+    flag(ds, Some(gapMs))
 
-  /** Batch flavor of the flag dedup: the SAME core function with `NoTimeout`
-    * (cf. OrderRepair.batch) — one invocation per key, end-of-data as the
-    * final watermark. The oracle-checked batch output (q_dedup_flag) pins the
-    * streaming operator's semantics: min-pos first arrival wins, every row
-    * emitted, duplicates carry the original's position.
+  /** Batch flavor of the flag dedup (q_dedup_flag), the same step in
+    * [[EventTimeGroups]]' batch mode. The oracle-checked batch output pins
+    * the streaming operator's semantics: min-pos first arrival wins, every
+    * row emitted, duplicates carry the original's position.
     */
-  def flagBatch(ds: Dataset[TurnPos]): Dataset[FlaggedTurn] =
-    ds.groupByKey(t => t.conv_id + sep + t.turn_idx)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        flagCore(streaming = false, gapMs = 0L))
+  def flagBatch(ds: Dataset[TurnPos]): Dataset[FlaggedTurn] = flag(ds, None)
 }

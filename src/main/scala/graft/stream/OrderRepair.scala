@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{Events, LogEvent}
 
@@ -68,16 +67,11 @@ case class RepairState[T](nextIdx: Int, buffer: Map[Int, T], maxTs: Long,
   * turn was emitted (it then leaves at once, out of order). Every
   * stop-flagged turn is emitted; a losing valid turn is dropped.
   *
-  * Streaming: `EventTimeTimeout` — when the watermark passes the
-  * conversation's last activity + `gapMs`, the state times out; `strict`
-  * decides whether the gapped suffix is dropped (strict) or flushed in
-  * sorted order (repair what you can once nothing earlier can arrive).
-  *
-  * Batch: the same function runs with `NoTimeout` (one invocation per key,
-  * empty initial state) — end-of-iterator plays the role of the final
-  * watermark, so batch output == streaming output for the same input. That
-  * equivalence is the correctness gate: the batch flavor is oracle-checked
-  * in SQL, the streaming flavor is asserted equal to it in the test suites.
+  * Modes: run by [[EventTimeGroups]]. Once the watermark passes the
+  * conversation's last activity + `gapMs` (streaming) or the data ends
+  * (batch), `strict` decides whether the gapped suffix is dropped (strict)
+  * or flushed in sorted order (repair what you can once nothing earlier can
+  * arrive).
   *
   * Scale: state per key is O(max out-of-orderness), not O(conversation
   * length) — emitted turns leave the buffer immediately, and the watermark
@@ -91,27 +85,19 @@ case class RepairState[T](nextIdx: Int, buffer: Map[Int, T], maxTs: Long,
   */
 object OrderRepair {
 
-  /** The single repair algorithm, generic in the record type; `keyed`
-    * (the row may enter the state) / `stopped` / `idxOf` / `posOf` /
-    * `tsOf` are the only record accesses. The buffer is a
-    * `LongMap` (specialized keys — no Integer boxing per row on the hot
-    * loop); it converts to the immutable state map only at state-commit
-    * time, and only when non-empty.
+  /** The single repair algorithm, the [[EventTimeGroups]] step, generic in
+    * the record type; `keyed` (the row may enter the state) / `stopped` /
+    * `idxOf` / `posOf` / `tsOf` are the only record accesses. It needs no
+    * watermark: order is repaired by `turn_idx`, and event time only dates
+    * the state for eviction. The buffer is a `LongMap` (specialized keys —
+    * no Integer boxing per row on the hot loop); it converts to the
+    * immutable state map only when non-empty.
     */
-  private def repairCore[T](strict: Boolean, gapMs: Option[Long],
-                            keyed: T => Boolean, stopped: T => Boolean,
+  private def repairStep[T](keyed: T => Boolean, stopped: T => Boolean,
                             idxOf: T => Int, posOf: T => Long, tsOf: T => Long)(
-      key: String, rows: Iterator[T],
-      state: GroupState[RepairState[T]]): Iterator[T] = {
-
-    if (state.hasTimedOut) {
-      val st = state.get
-      state.remove()
-      return if (strict) Iterator.empty else st.buffer.toSeq.sortBy(_._1).map(_._2).iterator
-    }
-
-    val st = state.getOption.getOrElse(
-      RepairState[T](0, Map.empty, Long.MinValue, Set.empty))
+      key: String, rows: Iterator[T], prev: Option[RepairState[T]],
+      watermarkMs: Long): (Iterator[T], Option[RepairState[T]]) = {
+    val st = prev.getOrElse(RepairState[T](0, Map.empty, Long.MinValue, Set.empty))
     val buf = scala.collection.mutable.LongMap.empty[T]
     st.buffer.foreach { case (k, v) => buf.update(k.toLong, v) }
     val late = scala.collection.mutable.LongMap.empty[T] // valid turns for stoppedIdx slots
@@ -154,30 +140,24 @@ object OrderRepair {
       next += 1; t = buf.getOrNull(next.toLong)
     }
 
-    gapMs match {
-      // only keyed rows create state: a batch of malformed rows for a key
-      // (or the null key) without one creates none. Existing state is
-      // rewritten below even so — Spark clears its timeout on every call.
-      case Some(_) if !anyKeyed && !state.exists => emitted.result().iterator
-      case Some(gap) =>
+    // only keyed rows create state: malformed rows for a key (or the null
+    // key) without one create none
+    val kept =
+      if (!anyKeyed && prev.isEmpty) None
+      else {
         val remaining =
           if (buf.isEmpty) Map.empty[Int, T]
           else buf.iterator.map { case (k, v) => k.toInt -> v }.toMap
-        state.update(RepairState(next, remaining, maxTs, stoppedIdx))
-        // Evict once the watermark passes last activity + gap. A conversation
-        // whose last event is already behind the advanced watermark (possible
-        // with unordered file ingestion) must still get a FUTURE timeout —
-        // Spark rejects timestamps at or before the current watermark.
-        state.setTimeoutTimestamp(
-          math.max(maxTs + gap, state.getCurrentWatermarkMs() + 1))
-        emitted.result().iterator
-      case None =>
-        // Batch: single invocation — end-of-data == final watermark.
-        state.remove()
-        val tail = if (strict) Iterator.empty else buf.toSeq.sortBy(_._1).map(_._2).iterator
-        emitted.result().iterator ++ tail
-    }
+        Some(RepairState(next, remaining, maxTs, stoppedIdx))
+      }
+    (emitted.result().iterator, kept)
   }
+
+  /** The buffered suffix in turn order once nothing earlier can arrive
+    * (repair what you can), or nothing when `strict`.
+    */
+  private def suffix[T](strict: Boolean)(key: String, st: RepairState[T]): Iterator[T] =
+    if (strict) Iterator.empty else st.buffer.toSeq.sortBy(_._1).map(_._2).iterator
 
   private implicit val turnPosEnc = Encoders.product[TurnPos]
   private implicit val stateEnc = Encoders.product[RepairState[TurnPos]]
@@ -205,9 +185,8 @@ object OrderRepair {
 
   /** Batch flavor over [[TurnPos]] (the oracle target). */
   def batch(ds: Dataset[TurnPos], strict: Boolean): Dataset[TurnPos] =
-    ds.groupByKey(_.conv_id).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout)(repairCore[TurnPos](
-        strict, None, _ => true, _ => false, _.turn_idx, _.pos, _.ts.getTime))
+    EventTimeGroups(ds.groupByKey(_.conv_id), None)(repairStep[TurnPos](
+      _ => true, _ => false, _.turn_idx, _.pos, _.ts.getTime))(suffix(strict), _.maxTs)
 
   /** Hot-path batch flavor over the packed record. */
   def batchPacked(ds: Dataset[TurnPacked], strict: Boolean): Dataset[TurnPacked] =
@@ -224,10 +203,7 @@ object OrderRepair {
   // the packed core; no gap = batch
   private def repairPacked(ds: Dataset[TurnPacked], strict: Boolean,
                            gapMs: Option[Long]): Dataset[TurnPacked] =
-    ds.groupByKey(_.conv_id).flatMapGroupsWithState(OutputMode.Append, timeout(gapMs))(
-      repairCore[TurnPacked](strict, gapMs, r => r.conv_id != null && r.turn_idx != null,
-        _.events.exists(_.stop), _.turn_idx.intValue, _.pos, _.ts.getTime))
-
-  private def timeout(gapMs: Option[Long]): GroupStateTimeout =
-    if (gapMs.isEmpty) GroupStateTimeout.NoTimeout else GroupStateTimeout.EventTimeTimeout
+    EventTimeGroups(ds.groupByKey(_.conv_id), gapMs)(repairStep[TurnPacked](
+      r => r.conv_id != null && r.turn_idx != null, _.events.exists(_.stop),
+      _.turn_idx.intValue, _.pos, _.ts.getTime))(suffix(strict), _.maxTs)
 }

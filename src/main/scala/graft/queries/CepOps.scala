@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.source.Transcript
+import graft.source.{Tables, Transcript}
 import graft.stream.{OrderRepair, StreamDedup, ToolPair, TurnPos}
 
 /** North-rule CEP obligations as oracle-checkable batch queries (SURVEY.md
@@ -114,7 +114,7 @@ object CepOps {
       ToolPair.timeoutsBatch(Transcript.fromEvents(s, dir))),
 
     "q_window_tumbling" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.read(s, dir, "events")
       ev.groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
@@ -122,7 +122,7 @@ object CepOps {
     }),
 
     "q_window_sliding" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.read(s, dir, "events")
       ev.groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
@@ -130,7 +130,7 @@ object CepOps {
     }),
 
     "q_session_window" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.read(s, dir, "events")
       ev.groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n"))
         .select(col("session_window.start").as("s_start"),
@@ -146,7 +146,7 @@ object CepOps {
       // SQL oracle is the equivalent gaps-and-islands window query.
       import graft.stream.{Burst, KeyedEv}
       implicit val kevEnc = Encoders.product[KeyedEv]
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.read(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("ts"),
           (col("event_type") === "error").as("is_error"))
         .as[KeyedEv]

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,9 +32,9 @@ object GraphOps {
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIters: Int = 20): DataFrame = {
-    var e = edges.select(least(col("src"), col("dst")).as("u"),
+    var (e, crossEdges) = checkpointed(edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+      .filter(col("u") =!= col("v")).distinct(), count(lit(1)))
     // Iterate over the EDGE-INCIDENT vertex set only: an isolated node can
     // never change label, so carrying the whole corpus through every
     // label⋈label pointer-jump join (the previous shape) multiplied each
@@ -42,16 +42,13 @@ object GraphOps {
     // is ≪ the corpus, so this is the difference between per-round joins
     // over billions of rows and per-round joins over the (small) duplicate
     // neighborhood. Isolated nodes rejoin at the end with comp = id, which
-    // is exactly the fixpoint the old loop computed for them.
+    // is exactly the fixpoint the old loop computed for them. The initial
+    // label map is a projection of the checkpointed edges, so it is left
+    // lazy: the first round's checkpoint computes it.
     var lab = e.select(col("u").as("id")).union(e.select(col("v").as("id")))
-      .distinct().select(col("id"), col("id").as("comp")).localCheckpoint()
+      .distinct().select(col("id"), col("id").as("comp"))
     var iters = 0
-    // track the last emptiness probe instead of re-running `e.isEmpty` in
-    // the post-loop `require` — isEmpty is a Spark job (plan + probe task)
-    // even on a checkpointed frame, and the loop's own exit probe already
-    // holds the answer
-    var eEmpty = e.isEmpty
-    while (!eEmpty && iters < maxIters) {
+    while (crossEdges > 0 && iters < maxIters) {
       iters += 1
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       // min over contracted neighborhood ∪ self
@@ -68,15 +65,16 @@ object GraphOps {
         .select(col("a.id"), coalesce(col("b.comp"), col("a.comp")).as("comp"))
         .localCheckpoint()
       // contract edges onto the new labels
-      e = e.join(jumped.as("ju"), col("u") === col("ju.id"))
+      val (contracted, left) = checkpointed(e.join(jumped.as("ju"), col("u") === col("ju.id"))
         .join(jumped.as("jv"), col("v") === col("jv.id"))
         .select(least(col("ju.comp"), col("jv.comp")).as("u"),
           greatest(col("ju.comp"), col("jv.comp")).as("v"))
-        .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-      eEmpty = e.isEmpty
+        .filter(col("u") =!= col("v")).distinct(), count(lit(1)))
+      e = contracted
+      crossEdges = left
       lab = jumped
     }
-    require(eEmpty,
+    require(crossEdges == 0,
       s"connectedComponents did not converge in $maxIters rounds — " +
         "component diameter exceeds 2^maxIters; raise maxIters")
     // the edge set can empty while the label FOREST still has depth > 1
@@ -85,20 +83,28 @@ object GraphOps {
     // The change marker rides along in the SAME join (old: a second
     // id-equality join per round just to compare labels — one extra shuffle
     // and one extra job per flatten iteration).
-    var depth = true
-    while (depth) {
-      val jumped = lab.as("a")
+    var changed = 1L
+    while (changed > 0) {
+      val (jumped, n) = checkpointed(lab.as("a")
         .join(lab.as("b"), col("a.comp") === col("b.id"), "left")
         .select(col("a.id"), coalesce(col("b.comp"), col("a.comp")).as("comp"),
           (col("b.comp").isNotNull && col("b.comp") =!= col("a.comp"))
-            .as("__changed"))
-        .localCheckpoint()
-      depth = !jumped.filter(col("__changed")).isEmpty
+            .as("__changed")), count_if(col("__changed")))
+      changed = n
       lab = jumped.drop("__changed")
     }
     // isolated nodes (no incident edge) are their own component
     nodes.select(col("id")).join(lab, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+  }
+
+  /** `df` materialized by an eager `localCheckpoint`, and `metric` (a
+    * count) over its rows, observed in that same job: the loop tests its
+    * exit condition without a probe job of its own. */
+  private def checkpointed(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val seen = Observation()
+    val cp = df.observe(seen, metric.as("n")).localCheckpoint()
+    (cp, seen.get("n").asInstanceOf[Long])
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.source.Tables
+
 /** Training-data curation operators over the `documents` table, round 5:
   * PII detection/redaction, Gopher-style repetition scoring, benchmark
   * decontamination (n-gram overlap), token-budget sequence packing, and
@@ -105,7 +107,7 @@ object PipelineOps {
       // Detect + redact emails / SSNs / phone numbers: counts from the
       // pre-redaction text, then sequential regexp_replace. One projection,
       // no shuffle — codegen'd end to end.
-      val d = injectPii(s.read.parquet(s"$dir/documents.parquet")
+      val d = injectPii(Tables.read(s, dir, "documents")
         .select("doc_id", "text"))
       d.select(col("doc_id"),
           regexp_count(col("text"), lit(EmailPat)).as("n_email"),
@@ -124,7 +126,7 @@ object PipelineOps {
       // Gopher-style repetition filter: duplicate-word ratio, top-word
       // fraction, top-bigram fraction. Two explode→groupBy passes keyed on
       // doc_id (linear, no self-join), merged with a single join.
-      val docs = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+      val docs = Tables.read(s, dir, "documents").select("doc_id", "text")
       val ws = words(docs).groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
         .groupBy("doc_id").agg(
           sum("c").as("n_words"), count(lit(1)).as("n_distinct_words"),
@@ -152,7 +154,7 @@ object PipelineOps {
       // with the held-out benchmark slice (source = 'src0'). The benchmark
       // n-gram set is benchmark-sized — Spark broadcasts it; the corpus side
       // computes its n-grams map-side and never shuffles the text.
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select("doc_id", "text", "source")
       val bench = ngramHashes(docs.filter(col("source") === "src0"), ContamN)
         .select("h").distinct()
@@ -172,7 +174,7 @@ object PipelineOps {
       // is a rows-between window cumsum partitioned by source — NOT a
       // global sort, so it scales (per-domain packing, the standard layout
       // for domain-stratified training mixes).
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"))
       val w = Window.partitionBy("source").orderBy("doc_id")
@@ -189,7 +191,7 @@ object PipelineOps {
       // doc_id (identical int64 arithmetic in both engines — no engine RNG),
       // down-sampling the majority language to 30% and minority languages
       // to 70%. Pure filter — map-side, no shuffle, reproducible.
-      val d = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "lang")
+      val d = Tables.read(s, dir, "documents").select("doc_id", "lang")
       d.withColumn("bucket", (col("doc_id") * 2654435761L) % 1000)
         .filter(when(col("lang") === "en", col("bucket") < 300)
           .otherwise(col("bucket") < 700))

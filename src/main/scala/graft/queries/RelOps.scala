@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.fns
+import graft.source.Tables
 
 /** Relational workhorse queries over the TPC-H-ish tables — the throughput
   * backbone for Bench plus coverage of the classic shapes: wide aggregation,
@@ -15,7 +16,7 @@ object RelOps {
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_tpch_q1" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
       li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -29,10 +30,10 @@ object RelOps {
       // orders is fact-proportional (~0.4× lineitem rows) — broadcasting it
       // OOMs every executor at 100 TB, so lineitem ⋈ orders is left to
       // Catalyst/AQE (shuffle join at scale, auto-broadcast when tiny).
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val li = Tables.read(s, dir, "lineitem")
+      val o = Tables.read(s, dir, "orders")
+      val c = Tables.read(s, dir, "customer")
+      val n = Tables.read(s, dir, "nation")
       li.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -44,14 +45,14 @@ object RelOps {
     }),
 
     "q_topk_orders" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Tables.read(s, dir, "orders")
       o.orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(10)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     }),
 
     "q_distinct_agg" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
       li.groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("n_parts"),
           countDistinct(col("l_suppkey")).as("n_supps"),
@@ -62,7 +63,7 @@ object RelOps {
     // same user made at-or-before the purchase time — the union+running-
     // window as-of join (one shuffle, no range join; transform/AsOfJoin).
     "q_asof_enrich" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.read(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
         .select("event_id", "user_id", "ts", "value")
       val views = ev.filter(col("event_type") === "view")
@@ -75,7 +76,7 @@ object RelOps {
     // the UTF-8 bytes with HUGEINT arithmetic mod 2^64 (see oracles below);
     // exactness is additionally asserted by FingerprintSpec.
     "q_fingerprint" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       docs.select(col("doc_id"),
         fns.fnv64(col("text")).as("fnv64"),
         fns.rolling_min_hash(col("text"), 8).as("rolling_min8"))

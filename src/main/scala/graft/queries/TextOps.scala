@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.source.Tables
+
 /** Training-data pipeline text operators over the `documents` table:
   * exact dedup, MinHash+LSH near-dup, SimHash near-dup, n-gram Jaccard,
   * language ID, quality scoring, token counting. Every operator here is
@@ -22,7 +24,7 @@ object TextOps {
   //      and exact copies, so dedup operators have non-trivial output ----
 
   private[queries] def augDocs(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(s"$dir/documents.parquet")
+    val d = Tables.read(s, dir, "documents")
       .select("doc_id", "text", "lang", "source")
     d.unionByName(
         d.filter(col("doc_id") % 10 === 0)
@@ -322,7 +324,7 @@ object TextOps {
     }),
 
     "q_lang_id" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val counted = langPatterns.foldLeft(docs.select(col("doc_id"), col("lang"), col("text"))) {
         case (d, (lang, pat)) => d.withColumn(s"c_$lang", regexp_count(col("text"), lit(pat)))
       }
@@ -333,7 +335,7 @@ object TextOps {
     }),
 
     "q_quality_score" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       docs.select(col("doc_id"),
           length(col("text")).as("n_chars"),
           regexp_count(col("text"), lit("\\S+")).as("n_tokens"),
@@ -347,7 +349,7 @@ object TextOps {
     }),
 
     "q_token_count" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       docs.select(col("doc_id"),
         regexp_count(col("text"), lit("\\S+")).as("n_ws_tokens"),
         regexp_count(col("text"), lit(bpeishPattern)).as("n_bpeish_tokens"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.media.Media
+import graft.source.Tables
 
 /** Similarity search / embedding operators over the `embeddings` table
   * (64-dim float vectors): brute-force cosine top-k (correctness baseline),
@@ -182,7 +183,7 @@ object VectorOps {
   // ---- augmented embeddings: exact copies for near-dup fixtures ----
 
   private def augEmb(s: SparkSession, dir: String): DataFrame = {
-    val e = s.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
+    val e = Tables.read(s, dir, "embeddings").select("vec_id", "embedding")
     e.unionByName(e.filter(col("vec_id") % 25 === 0)
       .withColumn("vec_id", col("vec_id") + 100000L))
   }
@@ -237,7 +238,7 @@ object VectorOps {
       // join so each pair costs one dot product, and the small query side is
       // broadcast: at scale this is a map-side loop over the big table, no
       // shuffle of the corpus.
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       val q = broadcast(e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn")))
@@ -255,7 +256,7 @@ object VectorOps {
       // id), then exact re-rank within the bucket. Linear candidate
       // generation; recall traded for the O(n²) scan. The FIXTURE pins the
       // oracle's 8-bit width; production uses annLsh(corpusSize).
-      annLshAt(s.read.parquet(s"$dir/embeddings.parquet"),
+      annLshAt(Tables.read(s, dir, "embeddings"),
         col("vec_id") % 50 === 0, NBITS)
     }),
 
@@ -275,7 +276,7 @@ object VectorOps {
       // k-means training. At scale the assignment is an argmax over k
       // centroid LITERALS — one map-side pass, no corpus shuffle; the probe
       // search is an equi-join on cell id against the broadcast query side.
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       // k is FIXED and tiny, so collecting the k centroids to the driver is
       // O(k) — they become LITERALS, and nearest-centroid assignment compiles
@@ -295,7 +296,7 @@ object VectorOps {
     "q_multimodal_meta" -> ((s, dir) => {
       // Binary-column plumbing: text → utf-8 bytes as the opaque payload,
       // partition-wise decode (stub codec, real schema/batching).
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
       Media.extractMeta(docs, "doc_id", "payload").toDF()
     }),
@@ -303,14 +304,14 @@ object VectorOps {
     "q_media_frames" -> ((s, dir) => {
       // Frame sampling: payload → one row per sampled 64-byte frame (every
       // 2nd), lazy per-partition fan-out; offsets carry provenance.
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
       Media.frameSample(docs, "doc_id", "payload").toDF()
     }),
 
     "q_media_resize" -> ((s, dir) => {
       // Resize planning: fit-within-160×120, aspect preserved, integer math.
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
       Media.resizeMeta(docs, "doc_id", "payload").toDF()
     })

@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A per-batch side effect committed with [[MergeSink]]'s manifest — the
   * Spark-native analog of the reference `DbCommand`'s ARBITRARY per-record
@@ -211,9 +212,13 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
         val touchedDirs = m.buckets.filter { case (b, _) => touched.contains(b) }
           .values.toSeq.distinct
         val rows = staged.withColumn("__gen", lit(1)) // batch row beats current row
+        // the touched buckets hold what this sink wrote: the batch's
+        // columns without `deleteCol`
+        val fileSchema = batch.drop(deleteCol.toSeq: _*).schema
         writeBuckets(
           if (touchedDirs.isEmpty) rows
-          else current(batch.sparkSession, touchedDirs, m.width).unionByName(rows),
+          else current(batch.sparkSession, touchedDirs, m.width, Some(fileSchema))
+            .unionByName(rows),
           m.width, s"data_v$next")
       }
     effects.foreach(_.apply(batch, batchId))
@@ -238,15 +243,18 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
     val next = m.version + 1
     val buckets =
       if (dirs.isEmpty) Map.empty[Int, String]
-      else writeBuckets(current(spark, dirs, newBuckets), newBuckets, s"data_v$next")
+      else writeBuckets(current(spark, dirs, newBuckets, None), newBuckets, s"data_v$next")
     commit(Manifest(next, newBuckets, m.batchId, buckets))
   }
 
   /** The table rows in `dirs` (bucket dirs relative to root), staged for
     * [[writeBuckets]] at `width`: the files carry no partition column, so
-    * `__bucket` is recomputed; `__gen` 0 loses to a batch row. */
-  private def current(spark: SparkSession, dirs: Seq[String], width: Int): DataFrame =
-    spark.read.parquet(dirs.map(d => new HPath(root, d).toString): _*)
+    * `__bucket` is recomputed; `__gen` 0 loses to a batch row. A known
+    * `schema` spares the read its footer job; without one it is inferred. */
+  private def current(spark: SparkSession, dirs: Seq[String], width: Int,
+                      schema: Option[StructType]): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_))
+      .parquet(dirs.map(d => new HPath(root, d).toString): _*)
       .withColumn("__bucket", bucketCol(width))
       .withColumn("__del", lit(false))
       .withColumn("__gen", lit(0))

@@ -41,7 +41,7 @@ object Transcript {
     * instead of adding a second full shuffle of the transcript.
     */
   def fromEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
+    val events = Tables.read(spark, sfDir, "events")
       .withColumn("conv_id", concat(lit("c"), col("user_id").cast(StringType)))
     val w = Window.partitionBy(col("conv_id")).orderBy(col("ts"), col("event_id"))
     events.select(

@@ -17,6 +17,12 @@ import org.apache.spark.sql.types._
   * left-to-right (same IEEE rounding order), mismatched lengths → null
   * (zip_with pads with null), any null element → null (a null product
   * poisons the fold).
+  *
+  * The one hand-written Catalyst expression left in `graft.functions`
+  * (the string kernels are Spark's `StaticInvoke`, see [[fns]]): its
+  * generated loop reads each side with the getter of that side's element
+  * type, which is known only after analysis, so no single static kernel
+  * signature fits. It is the hot loop of `q_ann_brute` and `q_ann_lsh`.
   */
 case class ArrayDot(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -1,69 +1,47 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
-/** FNV-1a 64-bit fingerprint of a string's UTF-8 bytes — a native Catalyst
-  * expression with whole-stage codegen (no UDF boxing on the hot path).
-  * Used for exact-content fingerprinting at scale: 8 bytes per document
-  * instead of carrying full text through shuffles.
+/** FNV-1a 64-bit fingerprint of a string's UTF-8 bytes. Used for
+  * exact-content fingerprinting at scale: 8 bytes per document instead of
+  * carrying full text through shuffles.
   */
-case class Fnv64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    Fnv64.hash(v.asInstanceOf[UTF8String].getBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Fnv64.hash($c.getBytes())")
-  override protected def withNewChildInternal(c: Expression): Fnv64 = copy(c)
-}
-
 object Fnv64 {
   final val OFFSET = -3750763034362895579L // 14695981039346656037
   final val PRIME = 1099511628211L
 
-  def hash(bytes: Array[Byte]): Long = {
+  /** FNV-1a over `bytes[from, until)`. */
+  def fold(bytes: Array[Byte], from: Int, until: Int): Long = {
     var h = OFFSET
-    var i = 0
-    while (i < bytes.length) {
+    var i = from
+    while (i < until) {
       h ^= (bytes(i) & 0xffL)
       h *= PRIME
       i += 1
     }
     h
   }
+
+  def hash(bytes: Array[Byte]): Long = fold(bytes, 0, bytes.length)
 }
 
 /** Winnowing-style rolling fingerprint: the minimum FNV-1a hash over all
   * k-byte windows of the string (k = 8). Two documents sharing any 8-byte
   * run of content collide with high probability on this value — a cheap
-  * near-dup prefilter that is one codegen'd pass over the bytes, no explode.
+  * near-dup prefilter that is one pass over the bytes, no explode.
   */
-case class RollingMinHash(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    RollingMinHash.minHash(v.asInstanceOf[UTF8String].getBytes, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RollingMinHash.minHash($c.getBytes(), $k)")
-  override protected def withNewChildInternal(c: Expression): RollingMinHash = copy(child = c)
-}
-
 object RollingMinHash {
   def minHash(bytes: Array[Byte], k: Int): Long = {
     if (bytes.length < k) return Fnv64.hash(bytes)
     var min = Long.MaxValue
     var i = 0
     while (i + k <= bytes.length) {
-      var h = Fnv64.OFFSET
-      var j = i
-      while (j < i + k) {
-        h ^= (bytes(j) & 0xffL)
-        h *= Fnv64.PRIME
-        j += 1
-      }
+      val h = Fnv64.fold(bytes, i, i + k)
       if (h < min) min = h
       i += 1
     }
@@ -71,23 +49,42 @@ object RollingMinHash {
   }
 }
 
+/** Column wrappers over the Scala kernels. Each one is Spark's own
+  * `StaticInvoke`: whole-stage codegen emits a direct static call to the
+  * kernel (`graft.functions.Fnv64.hash(...)`), the interpreted path calls
+  * it by reflection, and a null argument gives null without a call. The
+  * byte[] kernels read `cast(binary)`, the same UTF-8 copy the string's
+  * `getBytes` makes.
+  */
 object fns {
-  /** Column wrappers (Spark 4: Column↔Expression bridge lives in
-    * classic.ExpressionUtils).
-    */
+  private def kernel(obj: AnyRef, name: String, dt: DataType,
+                     args: Seq[Expression], returnNullable: Boolean = false): Column =
+    Bridge.column(StaticInvoke(obj.getClass, dt, name, args,
+      returnNullable = returnNullable))
+
+  private def text(c: Column): Expression = Bridge.expression(c)
+  private def bytes(c: Column): Expression = Bridge.expression(c.cast("binary"))
+  private val Longs = ArrayType(LongType, containsNull = false)
+
   def fnv64(c: Column): Column =
-    Bridge.column(Fnv64(Bridge.expression(c)))
+    kernel(Fnv64, "hash", LongType, Seq(bytes(c)))
   def rolling_min_hash(c: Column, k: Int = 8): Column =
-    Bridge.column(RollingMinHash(Bridge.expression(c), k))
+    kernel(RollingMinHash, "minHash", LongType, Seq(bytes(c), Literal(k)))
   def array_dot(a: Column, b: Column): Column =
     Bridge.column(ArrayDot(Bridge.expression(a), Bridge.expression(b)))
   def word_ngram_hash60(c: Column, n: Int, mod: Long = 0L): Column =
-    Bridge.column(WordNgramHash60(Bridge.expression(c), n, mod))
+    kernel(TextHashFns, "ngramHash60", Longs, Seq(text(c), Literal(n), Literal(mod)))
   def word_ngrams(c: Column, n: Int): Column =
-    Bridge.column(WordNgrams(Bridge.expression(c), n))
+    kernel(TextHashFns, "ngrams", ArrayType(StringType, containsNull = false),
+      Seq(text(c), Literal(n)))
   def simhash_bits(c: Column, bits: Int): Column =
-    Bridge.column(SimHashBits(Bridge.expression(c), bits))
+    kernel(TextHashFns, "simhash", LongType, Seq(text(c), Literal(bits)),
+      returnNullable = true)
   def word_ngram_minhash(c: Column, n: Int, mod: Long,
-                         as: Seq[Long], bs: Seq[Long]): Column =
-    Bridge.column(WordNgramMinHash(Bridge.expression(c), n, mod, as, bs))
+                         as: Seq[Long], bs: Seq[Long]): Column = {
+    require(as.length == bs.length, "as/bs coefficient arrays must align")
+    def coefs(v: Seq[Long]) = Literal(UnsafeArrayData.fromPrimitiveArray(v.toArray), Longs)
+    kernel(TextHashFns, "ngramMinHash", Longs,
+      Seq(text(c), Literal(n), Literal(mod), coefs(as), coefs(bs)), returnNullable = true)
+  }
 }

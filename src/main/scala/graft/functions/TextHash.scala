@@ -4,20 +4,18 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Codegen'd single-pass replacements for the word-n-gram expression
-  * compositions in the text dedup/curation operators. The previous shape —
+/** Single-pass kernels for the word-n-gram expression compositions in the
+  * text dedup/curation operators. The previous shape —
   * `explode(transform(sequence(…), i -> concat_ws(' ', __w[i], …)))` followed
   * by `conv(substring(md5(…),1,15),16,10)` — pays for a higher-order lambda
   * per n-gram (HOFs are CodegenFallback: the whole projection drops out of
   * whole-stage codegen) plus an md5-hex STRING round trip per n-gram. These
-  * expressions produce bit-identical values (same tokenization, same joined
-  * n-gram bytes, same 60-bit md5 prefix) in one tight JVM loop per document.
+  * kernels, which generated code calls directly through [[fns]], produce
+  * bit-identical values (same tokenization, same joined n-gram bytes, same
+  * 60-bit md5 prefix) in one tight JVM loop per document.
   *
   * Tokenization contract (must match `split(trim(text), "\\s+")` exactly):
   * Spark's `trim` strips ASCII space (0x20) ONLY — not tabs/newlines — and
@@ -70,14 +68,7 @@ object TextHashFns {
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i < out.length) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(w(i + j))
-        j += 1
-      }
-      val h = h60(sb.toString)
+      val h = h60(gram(w, i, n, sb))
       out(i) = if (mod > 0) h % mod else h
       i += 1
     }
@@ -94,14 +85,7 @@ object TextHashFns {
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i < out.length) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(w(i + j))
-        j += 1
-      }
-      out(i) = UTF8String.fromString(sb.toString)
+      out(i) = UTF8String.fromString(gram(w, i, n, sb))
       i += 1
     }
     new GenericArrayData(out)
@@ -117,23 +101,18 @@ object TextHashFns {
     * [0, mod²+mod] ≪ 2^63: bit-identical to the SQL expression.
     */
   def ngramMinHash(text: UTF8String, n: Int, mod: Long,
-                   as: Array[Long], bs: Array[Long]): ArrayData = {
+                   asData: ArrayData, bsData: ArrayData): ArrayData = {
     val w = tokens(text.toString)
     if (w.length < n) return null
+    val as = asData.toLongArray()
+    val bs = bsData.toLongArray()
     val k = as.length
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i <= w.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(w(i + j))
-        j += 1
-      }
-      val h = h60(sb.toString) % mod
+      val h = h60(gram(w, i, n, sb)) % mod
       var p = 0
       while (p < k) {
         val v = (h * as(p) + bs(p)) % mod
@@ -147,12 +126,11 @@ object TextHashFns {
 
   /** SimHash over word-unigram 60-bit hashes, low `bits` bits tallied ±1,
     * assembled sign-positive — identical to the explode → 48×sum(CASE…) →
-    * assemble pipeline, computed map-side in one pass. Returns -1 (mapped
-    * to NULL by the expression) when the doc has no non-empty tokens: the
-    * aggregation pipeline emitted no row for such docs. Valid simhashes are
-    * in [0, 2^bits), so -1 is unambiguous.
+    * assemble pipeline, computed map-side in one pass. Returns null when
+    * the doc has no non-empty tokens: the aggregation pipeline emitted no
+    * row for such docs.
     */
-  def simhash(text: UTF8String, bits: Int): Long = {
+  def simhash(text: UTF8String, bits: Int): java.lang.Long = {
     val w = tokens(text.toString)
     val counts = new Array[Int](bits)
     var any = false
@@ -170,7 +148,7 @@ object TextHashFns {
       }
       i += 1
     }
-    if (!any) return -1L
+    if (!any) return null
     var sim = 0L
     var j = 0
     while (j < bits) {
@@ -179,68 +157,18 @@ object TextHashFns {
     }
     sim
   }
-}
 
-case class WordNgramHash60(child: Expression, n: Int, mod: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    TextHashFns.ngramHash60(v.asInstanceOf[UTF8String], n, mod)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashFns.ngramHash60($c, $n, ${mod}L)")
-  override protected def withNewChildInternal(c: Expression): WordNgramHash60 =
-    copy(child = c)
-}
-
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    TextHashFns.ngrams(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHashFns.ngrams($c, $n)")
-  override protected def withNewChildInternal(c: Expression): WordNgrams =
-    copy(child = c)
-}
-
-case class WordNgramMinHash(child: Expression, n: Int, mod: Long,
-                            as: Seq[Long], bs: Seq[Long])
-    extends UnaryExpression {
-  require(as.length == bs.length, "as/bs coefficient arrays must align")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  private lazy val asArr = as.toArray
-  private lazy val bsArr = bs.toArray
-  override def nullSafeEval(v: Any): Any =
-    TextHashFns.ngramMinHash(v.asInstanceOf[UTF8String], n, mod, asArr, bsArr)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val asRef = ctx.addReferenceObj("mhAs", asArr, "long[]")
-      val bsRef = ctx.addReferenceObj("mhBs", bsArr, "long[]")
-      s"""
-         |${ev.value} = graft.functions.TextHashFns.ngramMinHash(
-         |  $c, $n, ${mod}L, $asRef, $bsRef);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): WordNgramMinHash =
-    copy(child = c)
-}
-
-case class SimHashBits(child: Expression, bits: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any = {
-    val s = TextHashFns.simhash(v.asInstanceOf[UTF8String], bits)
-    if (s == -1L) null else java.lang.Long.valueOf(s)
+  /** The `i`-th word n-gram of `w`: `n` tokens joined with ' ' (the
+    * `concat_ws` composition), built in the caller's reused `sb`.
+    */
+  private def gram(w: Array[String], i: Int, n: Int, sb: java.lang.StringBuilder): String = {
+    sb.setLength(0)
+    var j = 0
+    while (j < n) {
+      if (j > 0) sb.append(' ')
+      sb.append(w(i + j))
+      j += 1
+    }
+    sb.toString
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.TextHashFns.simhash($c, $bits);
-         |${ev.isNull} = (${ev.value} == -1L);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): SimHashBits =
-    copy(child = c)
 }

@@ -70,16 +70,6 @@ object PipelineOps {
     docs.select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("w"))
       .filter(col("w") =!= "")
 
-  /** doc_id → distinct word-n-gram md5-hashes (n fixed per call site).
-    * Single codegen pass per document (graft.functions.WordNgramHash60, the
-    * TextOps.shingleHashes optimization) — identical hash values, no HOF
-    * lambda, no md5-hex string round trip.
-    */
-  private def ngramHashes(docs: DataFrame, n: Int): DataFrame =
-    docs.select(col("doc_id"),
-        explode(graft.functions.fns.word_ngram_hash60(col("text"), n)).as("h"))
-      .distinct()
-
   private def ngramHashesSql(src: String, n: Int): String = {
     val parts = (1 to n).map(j => s"t.w[i+${j - 1}]").mkString(", ")
     s"""SELECT DISTINCT a.doc_id, ${TextOps.md5Hash60Sql("g.s")} AS h
@@ -133,7 +123,7 @@ object PipelineOps {
           max("c").as("__top_w"))
       // bigrams must stay STRINGS (the group key is the literal bigram —
       // hashing could merge distinct groups), but the n-gram generation is
-      // the same single codegen pass (graft.functions.WordNgrams)
+      // the same single codegen pass (fns.word_ngrams)
       val bg = docs
         .select(col("doc_id"),
           explode(graft.functions.fns.word_ngrams(col("text"), 2)).as("bg"))
@@ -156,10 +146,10 @@ object PipelineOps {
       // computes its n-grams map-side and never shuffles the text.
       val docs = Tables.read(s, dir, "documents")
         .select("doc_id", "text", "source")
-      val bench = ngramHashes(docs.filter(col("source") === "src0"), ContamN)
+      val bench = TextOps.ngramHashes(docs.filter(col("source") === "src0"), ContamN, 0L)
         .select("h").distinct()
       val corpus = docs.filter(col("source") =!= "src0")
-      val hits = ngramHashes(corpus, ContamN)
+      val hits = TextOps.ngramHashes(corpus, ContamN, 0L)
         .join(broadcast(bench), Seq("h"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
       corpus.select("doc_id", "source").join(hits, Seq("doc_id"), "left")

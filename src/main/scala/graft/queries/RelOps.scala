@@ -72,7 +72,8 @@ object RelOps {
         rightOrd = "event_id", rightVals = Seq("event_id", "value"))
     }),
 
-    // Custom codegen'd Catalyst expressions, oracle-checked: DuckDB folds
+    // Native kernels (graft.functions.fns, called from generated code),
+    // oracle-checked: DuckDB folds
     // the UTF-8 bytes with HUGEINT arithmetic mod 2^64 (see oracles below);
     // exactness is additionally asserted by FingerprintSpec.
     "q_fingerprint" -> ((s, dir) => {

@@ -79,23 +79,25 @@ object TextOps {
     // distinct pipeline runs twice. Rows are (doc_id, h) = 16 bytes, no
     // text; MEMORY_AND_DISK spills rather than OOMs (the same contract as
     // the sig/capped persists in this file).
-    val sh = shingleHashes(docs)
+    val sh = ngramHashes(docs, 3, M)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val hot = sh.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") > ShingleDfCap).select("h")
     sh.join(hot, Seq("h"), "left_anti")
   }
 
-  /** doc_id → distinct word-3-gram shingle hashes (mod M), both engines.
-    * Single codegen pass per document (graft.functions.WordNgramHash60):
-    * the previous transform-lambda + md5-hex-string composition was
-    * CodegenFallback (HOF) and allocated a hex string + conv per shingle —
-    * values are bit-identical (same tokenization, same ' '-joined bytes,
-    * same 60-bit md5 prefix, same mod), proved by TextHashSpec.
+  /** doc_id → distinct word-n-gram hashes (60-bit md5 prefix, then mod
+    * `mod` when > 0): the word-3-gram shingles here (mod M), the
+    * decontamination n-grams in PipelineOps. Single codegen pass per
+    * document (`fns.word_ngram_hash60`): the previous transform-lambda +
+    * md5-hex-string composition was CodegenFallback (HOF) and allocated a
+    * hex string + conv per shingle — values are bit-identical (same
+    * tokenization, same ' '-joined bytes, same 60-bit md5 prefix, same
+    * mod), proved by TextHashSpec.
     */
-  private def shingleHashes(docs: DataFrame): DataFrame =
+  private[queries] def ngramHashes(docs: DataFrame, n: Int, mod: Long): DataFrame =
     docs.select(col("doc_id"),
-        explode(graft.functions.fns.word_ngram_hash60(col("text"), 3, M)).as("h"))
+        explode(graft.functions.fns.word_ngram_hash60(col("text"), n, mod)).as("h"))
       .distinct()
 
   private[queries] val shingleHashesSql =
@@ -112,7 +114,7 @@ object TextOps {
        |)""".stripMargin
 
   /** MinHash signature columns mh0..mh15, Spark side — ONE map-side codegen
-    * pass per document (graft.functions.WordNgramMinHash): the explode →
+    * pass per document (`fns.word_ngram_minhash`): the explode →
     * distinct → 16-min groupBy pipeline cost two exchanges to compute what
     * is a per-document minimum (a min over a multiset equals the min over
     * its set, so the distinct never mattered). NULL array = fewer than 3
@@ -179,7 +181,7 @@ object TextOps {
   private val SIMBITS = 48
 
   /** 48-bit SimHash in ONE map-side codegen pass per document
-    * (graft.functions.SimHashBits) — the previous explode → 48×sum(CASE) →
+    * (`fns.simhash_bits`) — the previous explode → 48×sum(CASE) →
     * assemble pipeline shuffled every word hash through a doc_id exchange
     * just to tally bits that are a per-document-local computation. NULL
     * simhash = no non-empty tokens, exactly the docs the aggregation
@@ -257,7 +259,7 @@ object TextOps {
     "q_dedup_rolling" -> ((s, dir) => {
       // Winnowing-style near-dup PREFILTER: candidates share the minimum
       // FNV hash over all 8-byte windows (one codegen pass per doc, no
-      // explode — graft.functions.RollingMinHash). Two docs sharing any
+      // explode — fns.rolling_min_hash). Two docs sharing any
       // 8-byte run of content collide on this value with high probability;
       // `exact_dup` marks which candidates are whole-content equal. Hot
       // fingerprints (boilerplate runs shared by > ShingleDfCap docs) are

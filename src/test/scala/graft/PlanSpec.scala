@@ -127,8 +127,9 @@ class PlanSpec extends AnyFunSuite {
   test("q_unique_flag: one exchange, partitioned on the 128-bit key fingerprint") {
     val p = plan("q_unique_flag")
     // the fingerprint pair is computed map-side (Catalyst extracts window
-    // partition exprs into _wN aliases, so the Exchange lists aliases)
-    assert(p.contains("fnv64(") && p.contains("xxhash64("),
+    // partition exprs into _wN aliases, so the Exchange lists aliases);
+    // fns.fnv64 shows as the static call to its kernel
+    assert(p.contains("Fnv64.hash(") && p.contains("xxhash64("),
       s"unique-flag shuffle key must be the key fingerprint:\n$p")
     assert(!"hashpartitioning\\(CASE WHEN".r.findFirstIn(p).isDefined,
       s"the JSON key string must never be the shuffle key:\n$p")

@@ -1,7 +1,7 @@
 package graft
 
 /** The one JSON string escaper for the JSON the engine writes by hand:
-  * `Verify`'s oracle_sql.json, `Bench`'s result line and the progress log.
+  * `Verify`'s oracle_sql.json and `Bench`'s result line.
   */
 object Json {
 

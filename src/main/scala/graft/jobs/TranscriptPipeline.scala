@@ -21,7 +21,7 @@ import graft.transform._
   *     `turn_idx` slot, so later turns do not wait for a gap timeout; rows
   *     with a null key skip its state (see [[OrderRepair]]);
   *   - [[startStateful]]: `repaired` split per micro-batch into the error
-  *     rows (appended to the errors dir) and the exactly-once keyed MERGE
+  *     rows (written to the errors dir) and the exactly-once keyed MERGE
   *     of the valid turns into the bucketed output table, with lineage +
   *     state metrics in progress.jsonl and full checkpoint resume.
   *
@@ -92,21 +92,20 @@ object TranscriptPipeline {
   }
 
   /** One micro-batch, persisted once so the state operator runs once. Error
-    * rows are appended to `cfg.errorsDir` by a [[BatchEffect]] that the
-    * sink runs before its manifest commit, after the merge has read the
-    * batch: the error count is then a scan of the cached batch, and a batch
-    * without errors writes nothing. */
+    * rows are written to `cfg.errorsDir` by a [[BatchEffect]] that the sink
+    * runs before its manifest commit, after the merge has read the batch:
+    * the error count is then a scan of the cached batch, a batch without
+    * errors writes nothing, and a replayed batch replaces its own files. */
   private def each(cfg: Config, sink: MergeSink, batch: Dataset[TurnPacked], batchId: Long): Unit = {
     val cached = batch.persist()
     try {
       val (valid, errors) = ErrorSplit.split(cached.toDF(), errorKeys)
       val errorChannel: BatchEffect = (_, _) => {
-        val nErrors = errors.count()
-        if (nErrors > 0) errors.write.mode("append").parquet(cfg.errorsDir)
+        val nErrors = ErrorSplit.write(errors, cfg.errorsDir, batchId)
         // per-batch lifecycle notification (the reference's per-record
         // NotifyRecordCompleted, aggregated to stay driver-cheap)
         cfg.eventSink.notify(if (nErrors > 0) "WARN" else "INFO",
-          s"batch $batchId: $nErrors error rows appended to ${cfg.errorsDir}")
+          s"batch $batchId: $nErrors error rows written to ${cfg.errorsDir}")
         // optional per-record fidelity: formatting + level filter run data-
         // parallel; only the notify loop is driver-side, a partition at a time
         if (nErrors > 0) cfg.perRecordLevel.foreach { lvl =>

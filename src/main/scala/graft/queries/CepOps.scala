@@ -69,19 +69,17 @@ object CepOps {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // Runs the PACKED hot path (binary payload + Long-micros event time) —
-    // the same core algorithm as the TurnPos flavor, so this oracle checks
-    // both. The pack/unpack round-trip makes ts UTC-adjusted; cast back to
-    // NTZ so the parquet output matches the oracle's naive timestamps
-    // byte-for-byte regardless of how the driver normalizes time zones.
+    // `OrderRepair.batch` — the packed core the job runs, and the code the
+    // benchmark's correctness check calls. The pack/unpack round-trip makes
+    // ts UTC-adjusted; cast back to NTZ so the parquet output matches the
+    // oracle's naive timestamps byte-for-byte regardless of how the driver
+    // normalizes time zones.
     "q_order_repair" -> ((s, dir) =>
-      OrderRepair.unpack(
-        OrderRepair.batchPacked(OrderRepair.pack(dirtyTurns(s, dir)), strict = true))
+      OrderRepair.batch(dirtyTurns(s, dir).as[TurnPos], strict = true).toDF()
         .withColumn("ts", col("ts").cast("timestamp_ntz"))),
 
     "q_order_repair_flush" -> ((s, dir) =>
-      OrderRepair.unpack(
-        OrderRepair.batchPacked(OrderRepair.pack(dirtyTurns(s, dir)), strict = false))
+      OrderRepair.batch(dirtyTurns(s, dir).as[TurnPos], strict = false).toDF()
         .withColumn("ts", col("ts").cast("timestamp_ntz"))),
 
     "q_dedup_keep_first" -> ((s, dir) => {

@@ -107,16 +107,21 @@ object GraphOps {
     (cp, seen.get("n").asInstanceOf[Long])
   }
 
+  /** (`doc_id`, `cluster_id`) of the augmented corpus `docs`: connected
+    * components over its MinHash near-dup edges, `cluster_id` the smallest
+    * `doc_id` of the cluster. */
+  private def nearDupClusters(docs: DataFrame): DataFrame = {
+    val edges = TextOps.minhashNearDups(docs)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    connectedComponents(docs.select(col("doc_id").as("id")), edges)
+      .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
+  }
+
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    "q_dedup_cluster" -> ((s, dir) => {
-      val docs = TextOps.augDocs(s, dir)
-      val edges = TextOps.minhashNearDups(docs)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      connectedComponents(docs.select(col("doc_id").as("id")), edges)
-        .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
-          (col("id") === col("comp")).as("is_canonical"))
-    }),
+    "q_dedup_cluster" -> ((s, dir) =>
+      nearDupClusters(TextOps.augDocs(s, dir)).select(col("doc_id"), col("cluster_id"),
+        (col("doc_id") === col("cluster_id")).as("is_canonical"))),
 
     "q_cluster_canonical" -> ((s, dir) => {
       // The step AFTER near-dup clustering in a real dedup pipeline: keep
@@ -128,10 +133,7 @@ object GraphOps {
       // component labels come from the same O(log diameter) contraction
       // as q_dedup_cluster.
       val docs = TextOps.augDocs(s, dir)
-      val edges = TextOps.minhashNearDups(docs)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val clusters = connectedComponents(docs.select(col("doc_id").as("id")), edges)
-        .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
+      val clusters = nearDupClusters(docs)
       val scored = docs.select(col("doc_id"),
         regexp_count(col("text"), lit("\\S+")).as("n_tokens"))
       val w = Window.partitionBy(col("cluster_id"))

@@ -85,6 +85,22 @@ object VectorOps {
         lit(1 << b)).otherwise(lit(0))
     }.reduce(_ + _)
 
+  /** Candidate pairs (`qid`, `nid`, `cos`) of a corpus ⋈ query join: one
+    * dot product per pair, over the norms both sides computed before it
+    * (`nrm`, `qn`). */
+  private def cosinePairs(joined: DataFrame): DataFrame =
+    joined.select(col("qid"), col("vec_id").as("nid"),
+      (dot(col("embedding"), col("qe")) / (col("nrm") * col("qn"))).as("cos"))
+
+  /** Each query's `k` nearest candidates by cosine (ties by `nid`), in the
+    * oracle's output shape (`qid`, `rank`, `nid`, `cos_sim`). */
+  private def topK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(round(col("cos"), 9).desc, col("nid").asc)
+    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select(col("qid"), col("rank"), col("nid"), round(col("cos"), 6).as("cos_sim"))
+  }
+
   // ---- matching DuckDB SQL fragments ----
 
   private def planeSqlLit(b: Int): String =
@@ -162,13 +178,8 @@ object VectorOps {
     val q = broadcast(e.filter(isQuery)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("nrm").as("qn"), col("bkt").as("qbkt")))
-    val pairs = e.join(q, col("bkt") === col("qbkt") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        (dot(col("embedding"), col("qe")) / (col("nrm") * col("qn"))).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(round(col("cos"), 9).desc, col("nid").asc)
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), round(col("cos"), 6).as("cos_sim"))
+    topK(cosinePairs(
+      e.join(q, col("bkt") === col("qbkt") && col("vec_id") =!= col("qid"))), k)
   }
 
   /** Fixed-k deterministic coarse quantizer: the k vectors ranked first by
@@ -218,16 +229,11 @@ object VectorOps {
     // by qid alone satisfies the distinct's (qid, nid, cos) clustering
     // (subset rule) AND the window's qid clustering, so the candidate
     // pairs shuffle once instead of twice.
-    val pairs = asg.join(broadcast(probes),
-        col("cid") === col("pcid") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        (dot(col("embedding"), col("qe")) / (col("nrm") * col("qn"))).as("cos"))
+    val pairs = cosinePairs(asg.join(broadcast(probes),
+        col("cid") === col("pcid") && col("vec_id") =!= col("qid")))
       .repartition(col("qid"))
       .distinct() // a neighbor can appear via both probed cells
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(round(col("cos"), 9).desc, col("nid").asc)
-    pairs.withColumn("rank", row_number().over(wTop)).filter(col("rank") <= 5)
-      .select(col("qid"), col("rank"), col("nid"), round(col("cos"), 6).as("cos_sim"))
+    topK(pairs, 5)
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -242,13 +248,7 @@ object VectorOps {
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       val q = broadcast(e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn")))
-      val pairs = e.join(q, col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("nid"),
-          (dot(col("embedding"), col("qe")) / (col("nrm") * col("qn"))).as("cos"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(round(col("cos"), 9).desc, col("nid").asc)
-      pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("nid"), round(col("cos"), 6).as("cos_sim"))
+      topK(cosinePairs(e.join(q, col("vec_id") =!= col("qid"))), 5)
     }),
 
     "q_ann_lsh" -> ((s, dir) => {

@@ -1,5 +1,6 @@
 package graft.sink
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -39,6 +40,30 @@ object ErrorSplit {
         col("event.stop").as("stop"), col("event.level").as("level"),
         col("event.description").as("description"), col("event.value").as("value")): _*)
     (valid, errors)
+  }
+
+  /** Writes micro-batch `batchId`'s error rows to `dir` as top-level
+    * `batch-<batchId>-<n>.parquet` files and returns their count; with none
+    * it writes nothing. A replay replaces the batch's own files, as a
+    * [[BatchEffect]] must: the rows are staged in `dir/_staging/<id>`, an
+    * earlier attempt's files deleted, then the staged ones renamed into
+    * place. `errors` should be cached: it is counted, then written. */
+  def write(errors: DataFrame, dir: String, batchId: Long): Long = {
+    val n = errors.count()
+    if (n > 0) {
+      val root = new Path(dir)
+      val fs = root.getFileSystem(errors.sparkSession.sparkContext.hadoopConfiguration)
+      val staging = new Path(new Path(root, "_staging"), batchId.toString)
+      errors.write.mode("overwrite").parquet(staging.toString)
+      fs.globStatus(new Path(root, s"batch-$batchId-*.parquet")).foreach(f => fs.delete(f.getPath, false))
+      fs.listStatus(staging).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        .sortBy(_.getName).zipWithIndex.foreach { case (part, i) =>
+          val to = new Path(root, s"batch-$batchId-$i.parquet")
+          if (!fs.rename(part, to)) throw new java.io.IOException(s"cannot rename $part to $to")
+        }
+      fs.delete(staging.getParent, true) // a job runs one batch at a time
+    }
+    n
   }
 
   /** Per-record events (reference ConsoleEventSink.cs:44-95 logs each

@@ -9,16 +9,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryManager}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
-import graft.Json
-
 /** Per-micro-batch lineage + state metrics log (north rule: "every
   * micro-batch records per-partition lineage and state-store metrics to a
-  * checkpointed progress log"). Appends one JSON line per batch to
-  * `<dir>/progress.jsonl`: query id and run id, batchId, source offsets
-  * (the lineage — which input slice produced the batch), rows/sec,
-  * state-store rows & memory, watermark. Spark's own `progress.json` is
-  * already JSON — we persist the subset that matters for resume audits
-  * next to the checkpoint.
+  * checkpointed progress log"). Appends one JSON line per event to
+  * `<dir>/progress.jsonl`: `{"event":"<kind>",` followed by the fields of
+  * Spark's own compact record — the started and terminated events' `json`,
+  * and each micro-batch's `StreamingQueryProgress.json` (query and run id,
+  * batchId, the whole `durationMs` map of phases, source offsets — which
+  * input slice produced the batch — state operators with their custom
+  * metrics, watermark).
   *
   * A listener logs one run of one query: `ProgressListener.logging`
   * registers it, binds it to the run `start()` returned, and the listener
@@ -62,33 +61,18 @@ class ProgressListener private (dir: String, streams: StreamingQueryManager)
   }
 
   override def onQueryStarted(event: QueryStartedEvent): Unit =
-    log(event.runId, s"""{"event":"started",${ids(event.id, event.runId)}}""")
+    log(event.runId, line("started", event.json))
 
-  override def onQueryProgress(event: QueryProgressEvent): Unit = {
-    val p = event.progress
-    val sources = p.sources.map { s =>
-      s"""{"description":${Json.str(s.description)},"startOffset":${orNull(s.startOffset)},"endOffset":${orNull(s.endOffset)},"numInputRows":${s.numInputRows}}"""
-    }.mkString("[", ",", "]")
-    val state = Option(p.stateOperators).getOrElse(Array.empty).map { so =>
-      s"""{"operatorName":${Json.str(so.operatorName)},"numRowsTotal":${so.numRowsTotal},"numRowsUpdated":${so.numRowsUpdated},"memoryUsedBytes":${so.memoryUsedBytes}}"""
-    }.mkString("[", ",", "]")
-    val watermark = Option(p.eventTime.get("watermark")).map(Json.str).getOrElse("null")
-    log(p.runId,
-      s"""{"event":"progress",${ids(p.id, p.runId)},"batchId":${p.batchId},"timestamp":${Json.str(p.timestamp)},""" +
-        s""""numInputRows":${p.numInputRows},"processedRowsPerSecond":${safeNum(p.processedRowsPerSecond)},""" +
-        s""""durationMs":${p.durationMs.getOrDefault("triggerExecution", -1L)},""" +
-        s""""watermark":$watermark,"sources":$sources,"stateOperators":$state}""")
-  }
+  override def onQueryProgress(event: QueryProgressEvent): Unit =
+    log(event.progress.runId, line("progress", event.progress.json))
 
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit =
-    log(event.runId, s"""{"event":"terminated",${ids(event.id, event.runId)}}""", last = true)
+    log(event.runId, line("terminated", event.json), last = true)
 
-  private def ids(id: UUID, runId: UUID): String = s""""id":"$id","runId":"$runId""""
-
-  private def safeNum(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" else d.toString
-
-  private def orNull(s: String): String = Option(s).getOrElse("null")
+  // Spark's compact one-line record (it always opens with the query id),
+  // with the event kind as its first field
+  private def line(kind: String, json: String): String =
+    s"""{"event":"$kind",${json.drop(1)}"""
 
   private def append(line: String): Unit =
     Files.writeString(out, line + "\n",

@@ -2,6 +2,8 @@ package graft.stream
 
 import java.sql.Timestamp
 
+import scala.collection.mutable.LongMap
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -53,19 +55,19 @@ case class TurnPacked(
   * Unique.cs:89-93) without depending on arrival order. `stoppedIdx`: the
   * emitted slots whose occupant was stop-flagged, which a valid turn may fill.
   */
-case class RepairState[T](nextIdx: Int, buffer: Map[Int, T], maxTs: Long,
-                          stoppedIdx: Set[Int])
+case class RepairState(nextIdx: Int, buffer: Map[Int, TurnPacked], maxTs: Long,
+                       stoppedIdx: Set[Int])
 
 /** Per-conversation stateful validation + turn-order repair
   * (`flatMapGroupsWithState`): buffers out-of-order turns in a per-key
   * sorted map, emits contiguous runs of `turn_idx` from 0, dedups by
   * (conv_id, turn_idx) keeping the min-pos occurrence.
   *
-  * Error rows (packed flavour): a row with a null `conv_id` or `turn_idx`
-  * leaves at once, touching no state. A stop-flagged turn takes its slot,
-  * but a valid turn for it wins, even one arriving after the stop-flagged
-  * turn was emitted (it then leaves at once, out of order). Every
-  * stop-flagged turn is emitted; a losing valid turn is dropped.
+  * Error rows: a row with a null `conv_id` or `turn_idx` leaves at once,
+  * touching no state. A stop-flagged turn takes its slot, but a valid turn
+  * for it wins, even one arriving after the stop-flagged turn was emitted
+  * (it then leaves at once, out of order). Every stop-flagged turn is
+  * emitted; a losing valid turn is dropped.
   *
   * Modes: run by [[EventTimeGroups]]. Once the watermark passes the
   * conversation's last activity + `gapMs` (streaming) or the data ends
@@ -78,53 +80,51 @@ case class RepairState[T](nextIdx: Int, buffer: Map[Int, T], maxTs: Long,
   * evicts idle conversations, so state survives 10^12-turn streams as long
   * as disorder is bounded.
   *
-  * Flavors: over [[TurnPacked]], [[batchPacked]] and [[streamingPacked]]
-  * (the one the job runs); over [[TurnPos]], [[batch]] only, the oracle the
-  * tests and the benchmark compare with. All run the SAME generic core, so
-  * they cannot drift.
+  * Flavors: [[batchPacked]] and [[streamingPacked]] (the one the job runs)
+  * over [[TurnPacked]]; [[batch]] over [[TurnPos]], the oracle the tests and
+  * the benchmark compare with, is [[pack]] → [[batchPacked]] → [[unpack]].
+  * All run the one repair step, so they cannot drift. A [[TurnPos]] with a
+  * null `conv_id` therefore passes through [[batch]] without entering state,
+  * as it does in the job.
   */
 object OrderRepair {
 
-  /** The single repair algorithm, the [[EventTimeGroups]] step, generic in
-    * the record type; `keyed` (the row may enter the state) / `stopped` /
-    * `idxOf` / `posOf` / `tsOf` are the only record accesses. It needs no
+  /** The single repair algorithm, the [[EventTimeGroups]] step. It needs no
     * watermark: order is repaired by `turn_idx`, and event time only dates
     * the state for eviction. The buffer is a `LongMap` (specialized keys —
-    * no Integer boxing per row on the hot loop); it converts to the
-    * immutable state map only when non-empty.
+    * no Integer boxing per row on the hot loop), converted to the
+    * immutable state map when the state is kept.
     */
-  private def repairStep[T](keyed: T => Boolean, stopped: T => Boolean,
-                            idxOf: T => Int, posOf: T => Long, tsOf: T => Long)(
-      key: String, rows: Iterator[T], prev: Option[RepairState[T]],
-      watermarkMs: Long): (Iterator[T], Option[RepairState[T]]) = {
-    val st = prev.getOrElse(RepairState[T](0, Map.empty, Long.MinValue, Set.empty))
-    val buf = scala.collection.mutable.LongMap.empty[T]
+  private def repairStep(key: String, rows: Iterator[TurnPacked], prev: Option[RepairState],
+                         watermarkMs: Long): (Iterator[TurnPacked], Option[RepairState]) = {
+    def stopped(r: TurnPacked): Boolean = r.events.exists(_.stop)
+    val st = prev.getOrElse(RepairState(0, Map.empty, Long.MinValue, Set.empty))
+    val buf = LongMap.empty[TurnPacked]
     st.buffer.foreach { case (k, v) => buf.update(k.toLong, v) }
-    val late = scala.collection.mutable.LongMap.empty[T] // valid turns for stoppedIdx slots
+    val late = LongMap.empty[TurnPacked] // valid turns for stoppedIdx slots
     var maxTs = st.maxTs
-    val nextIdx = st.nextIdx
     var stoppedIdx = st.stoppedIdx
-    val emitted = Vector.newBuilder[T]
+    val emitted = Vector.newBuilder[TurnPacked]
     // puts r in slot idx of m unless the occupant beats it (valid beats
     // stopped, then min pos wins); returns the loser, or null
-    def place(m: scala.collection.mutable.LongMap[T], idx: Int, r: T): T = {
+    def place(m: LongMap[TurnPacked], idx: Int, r: TurnPacked): TurnPacked = {
       val prev = m.getOrNull(idx.toLong)
       if (prev != null &&
-          (if (stopped(r) == stopped(prev)) posOf(r) >= posOf(prev) else stopped(r))) r
+          (if (stopped(r) == stopped(prev)) r.pos >= prev.pos else stopped(r))) r
       else { m.update(idx.toLong, r); prev }
     }
     var anyKeyed = false
     rows.foreach { r =>
-      if (!keyed(r)) emitted += r
+      if (r.conv_id == null || r.turn_idx == null) emitted += r
       else {
         anyKeyed = true
-        maxTs = math.max(maxTs, tsOf(r))
-        val idx = idxOf(r)
-        // below nextIdx the key was emitted — reference flags these via
+        maxTs = math.max(maxTs, r.ts.getTime)
+        val idx = r.turn_idx.intValue
+        // below st.nextIdx the key was emitted — reference flags these via
         // UniqueFlag; the repair never re-emits a valid key, but a valid
         // turn may still fill an emitted stop-flagged slot
         val loser =
-          if (idx >= nextIdx) place(buf, idx, r)
+          if (idx >= st.nextIdx) place(buf, idx, r)
           else if (!stopped(r) && stoppedIdx.contains(idx)) place(late, idx, r)
           else r
         if (loser != null && stopped(loser)) emitted += loser
@@ -132,7 +132,7 @@ object OrderRepair {
     }
     late.foreach { case (idx, r) => stoppedIdx -= idx.toInt; emitted += r }
 
-    var next = nextIdx
+    var next = st.nextIdx
     var t = buf.getOrNull(next.toLong)
     while (t != null) {
       buf.remove(next.toLong); emitted += t
@@ -144,25 +144,20 @@ object OrderRepair {
     // key) without one create none
     val kept =
       if (!anyKeyed && prev.isEmpty) None
-      else {
-        val remaining =
-          if (buf.isEmpty) Map.empty[Int, T]
-          else buf.iterator.map { case (k, v) => k.toInt -> v }.toMap
-        Some(RepairState(next, remaining, maxTs, stoppedIdx))
-      }
+      else Some(RepairState(next, buf.iterator.map { case (k, v) => k.toInt -> v }.toMap,
+        maxTs, stoppedIdx))
     (emitted.result().iterator, kept)
   }
 
   /** The buffered suffix in turn order once nothing earlier can arrive
     * (repair what you can), or nothing when `strict`.
     */
-  private def suffix[T](strict: Boolean)(key: String, st: RepairState[T]): Iterator[T] =
+  private def suffix(strict: Boolean)(key: String, st: RepairState): Iterator[TurnPacked] =
     if (strict) Iterator.empty else st.buffer.toSeq.sortBy(_._1).map(_._2).iterator
 
   private implicit val turnPosEnc = Encoders.product[TurnPos]
-  private implicit val stateEnc = Encoders.product[RepairState[TurnPos]]
   private implicit val turnPackedEnc = Encoders.product[TurnPacked]
-  private implicit val statePackedEnc = Encoders.product[RepairState[TurnPacked]]
+  private implicit val stateEnc = Encoders.product[RepairState]
   private implicit val keyEnc = Encoders.STRING
 
   /** Pack the boundary: payload strings → raw bytes (cast, no decode).
@@ -183,14 +178,13 @@ object OrderRepair {
       Seq("role", "text", "tool").map(c => col(c).cast(payloadType).as(c)) ++
       Seq(col("ts"), col("pos"))
 
-  /** Batch flavor over [[TurnPos]] (the oracle target). */
+  /** Batch flavor over [[TurnPos]] (the oracle target): the packed core. */
   def batch(ds: Dataset[TurnPos], strict: Boolean): Dataset[TurnPos] =
-    EventTimeGroups(ds.groupByKey(_.conv_id), None)(repairStep[TurnPos](
-      _ => true, _ => false, _.turn_idx, _.pos, _.ts.getTime))(suffix(strict), _.maxTs)
+    unpack(batchPacked(pack(ds.toDF()), strict)).as[TurnPos]
 
   /** Hot-path batch flavor over the packed record. */
   def batchPacked(ds: Dataset[TurnPacked], strict: Boolean): Dataset[TurnPacked] =
-    repairPacked(ds, strict, None)
+    EventTimeGroups(ds.groupByKey(_.conv_id), None)(repairStep)(suffix(strict), _.maxTs)
 
   /** Hot-path streaming flavor: apply `withWatermark` BEFORE [[pack]] (the
     * watermark node survives the packing projection; the timeout uses the
@@ -198,12 +192,5 @@ object OrderRepair {
     */
   def streamingPacked(ds: Dataset[TurnPacked], strict: Boolean,
                       gapMs: Long): Dataset[TurnPacked] =
-    repairPacked(ds, strict, Some(gapMs))
-
-  // the packed core; no gap = batch
-  private def repairPacked(ds: Dataset[TurnPacked], strict: Boolean,
-                           gapMs: Option[Long]): Dataset[TurnPacked] =
-    EventTimeGroups(ds.groupByKey(_.conv_id), gapMs)(repairStep[TurnPacked](
-      r => r.conv_id != null && r.turn_idx != null, _.events.exists(_.stop),
-      _.turn_idx.intValue, _.pos, _.ts.getTime))(suffix(strict), _.maxTs)
+    EventTimeGroups(ds.groupByKey(_.conv_id), Some(gapMs))(repairStep)(suffix(strict), _.maxTs)
 }

@@ -24,6 +24,23 @@ class EventSinkSpec extends AnyFunSuite {
     assert(errs == Set((2L, true, "ERROR"), (3L, true, "ERROR")))
   }
 
+  test("error write: a replayed batch id replaces its own files; another id adds its rows") {
+    val dir = java.nio.file.Files.createTempDirectory("err_write").toString
+    val (_, errors) = ErrorSplit.split(
+      Pipeline(Seq((1L, "ok"), (2L, null), (3L, " ")).toDF("pos", "f"), Seq(Required(Seq("f")))),
+      Seq("pos"))
+    def written = spark.read.parquet(dir).select("pos").as[Long].collect().sorted.toSeq
+    assert(ErrorSplit.write(errors, dir, 0L) == 2)
+    assert(ErrorSplit.write(errors, dir, 0L) == 2) // replay
+    assert(written == Seq(2L, 3L))
+    ErrorSplit.write(errors.filter($"pos" === 3L), dir, 1L)
+    assert(written == Seq(2L, 3L, 3L))
+    // a batch without errors writes nothing
+    assert(ErrorSplit.write(errors.limit(0), dir, 2L) == 0)
+    val names = new java.io.File(dir).list().filterNot(_.startsWith(".")).sorted.toSeq
+    assert(names.nonEmpty && names.forall(_.matches("batch-[01]-\\d+\\.parquet")), names)
+  }
+
   test("per-record console mode: one line per record event at/above minimum level") {
     val df = Seq((1L, "ok"), (2L, null), (3L, " ")).toDF("pos", "f")
     val piped = Pipeline(df, Seq(Required(Seq("f"))))

@@ -270,6 +270,15 @@ class TranscriptPipelineSpec extends AnyFunSuite {
         events)
       val sources = parsed.filter(_.has("sources")).flatMap(_.get("sources").asScala)
       assert(sources.exists(_.get("description").asText().contains(cfg.inputDir)))
+      // Spark's whole progress record: every phase's duration, and the
+      // state store's own metrics for each batch that read rows
+      val progress = parsed.filter(_.get("event").asText() == "progress")
+      assert(progress.forall(_.at("/durationMs/triggerExecution").isNumber), lines.mkString("\n"))
+      val data = progress.filter(_.get("numInputRows").asLong() > 0)
+      assert(data.nonEmpty && data.forall { p =>
+        p.at("/durationMs/addBatch").isNumber &&
+          p.at("/stateOperators/0/customMetrics").fieldNames().asScala.exists(_.startsWith("rocksdb"))
+      }, lines.mkString("\n"))
     }
   }
 

@@ -8,30 +8,13 @@ package graft.dsl
   * cycle detection (reference:
   * src/Shipwright.Core/Actions/Internal/ActionSettingsFactory.cs:24-76).
   *
-  * A layer is a named bag of string settings with an optional parent.
-  * Recognized setting keys:
+  * Each layer is a YAML file of the configuration tree, flattened to dotted
+  * string settings. Recognized setting keys:
   *   - `default.<field>  = <value>`             → DefaultValue(field, value)
   *   - `replace.<field>.<incoming> = <outgoing>` → Replace(field, incoming→outgoing)
   *   - `keys = f1,f2`                            → Dataflow keys (Required prefix)
   */
-case class ConfigLayer(name: String, parent: Option[String],
-                       settings: Map[String, String])
-
 object DataflowConfig {
-
-  /** Merge the parent chain: nearest layer wins; cycles are a build-time
-    * error (the reference detects circular parents the same way).
-    */
-  def resolve(layers: Map[String, ConfigLayer], leaf: String): Map[String, String] = {
-    def chain(name: String, seen: Vector[String]): Vector[ConfigLayer] = {
-      require(!seen.contains(name),
-        s"Circular configuration parent chain: ${(seen :+ name).mkString(" -> ")}")
-      val layer = layers.getOrElse(name,
-        throw new IllegalArgumentException(s"Unknown configuration layer [$name]"))
-      layer.parent.map(p => chain(p, seen :+ name)).getOrElse(Vector.empty) :+ layer
-    }
-    chain(leaf, Vector.empty).foldLeft(Map.empty[String, String])(_ ++ _.settings)
-  }
 
   /** Synthesize the Dataflow from resolved settings, preserving the
     * reference's prefix order (keys-Required → defaults → replacements,
@@ -51,9 +34,6 @@ object DataflowConfig {
     }.groupBy(_._1).map { case (f, rs) => f -> rs.map(r => r._2 -> r._3).toMap }
     Dataflow(name, keys = keys, defaults = defaults, replacements = replacements)
   }
-
-  def build(layers: Map[String, ConfigLayer], leaf: String): Dataflow =
-    toDataflow(leaf, resolve(layers, leaf))
 
   // ---- layered YAML from disk (the reference's per-tenant configuration
   //      tree, Actions/Internal/ActionSettingsFactory.cs:24-76) ----

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,95 +17,62 @@ object GraphOps {
     * `id`) with `edges` (columns `src`, `dst`; endpoints must appear in
     * `nodes`) → (`id`, `comp`) where `comp` = min node id in the component.
     *
-    * Algorithm — min-label star contraction with path doubling: each round
-    * (1) every current representative adopts the minimum id in its
-    * contracted neighborhood, (2) the label map is pointer-jumped once
-    * (comp := comp(comp)), and (3) edges are rewritten onto the new labels
-    * and self-loops dropped, so the edge set SHRINKS toward empty and the
-    * loop ends when no cross-component edge remains. The jump gives path
-    * doubling, so convergence is logarithmic in component diameter rather
-    * than linear — the property that matters when boilerplate chains
-    * thousands of near-identical documents at 100 TB. Per round: one
-    * groupBy + three joins, all keyed shuffles of the (small) edge/label
-    * sets; `localCheckpoint` truncates the iterative lineage, which would
-    * otherwise grow a plan per round and stall the driver at scale.
+    * Algorithm — alternating large-star/small-star over the edge set alone
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014). Each round rewrites the edges into pairs (u < v) that keep
+    * every component connected:
+    *   - large-star: each node u re-points its larger neighbours at
+    *     m = least(u, min N(u));
+    *   - small-star: each node v and its smaller neighbours are re-pointed
+    *     at the minimum of those neighbours;
+    *   - cleanup: duplicate edges and self-loops go.
+    * When a round re-points nothing, every component is a star around its
+    * minimum, so a leaf's `comp` is its centre and a centre's (or an
+    * isolated node's) is its own id. The paper bounds the rounds by
+    * O(log² n); the bundled corpora take two. Each round ends in one
+    * `localCheckpoint`, which cuts the iterative lineage (it would
+    * otherwise grow a plan per round and stall the driver at scale), and
+    * the exit condition is observed in that same job.
     */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIters: Int = 20): DataFrame = {
-    var (e, crossEdges) = checkpointed(edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct(), count(lit(1)))
-    // Iterate over the EDGE-INCIDENT vertex set only: an isolated node can
-    // never change label, so carrying the whole corpus through every
-    // label⋈label pointer-jump join (the previous shape) multiplied each
-    // round's cost by |nodes|/|touched| — at 100 TB the duplicate-edge set
-    // is ≪ the corpus, so this is the difference between per-round joins
-    // over billions of rows and per-round joins over the (small) duplicate
-    // neighborhood. Isolated nodes rejoin at the end with comp = id, which
-    // is exactly the fixpoint the old loop computed for them. The initial
-    // label map is a projection of the checkpointed edges, so it is left
-    // lazy: the first round's checkpoint computes it.
-    var lab = e.select(col("u").as("id")).union(e.select(col("v").as("id")))
-      .distinct().select(col("id"), col("id").as("comp"))
-    var iters = 0
-    while (crossEdges > 0 && iters < maxIters) {
-      iters += 1
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      // min over contracted neighborhood ∪ self
-      val m = sym.groupBy("u").agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("c"))
-      // relabel members whose representative got merged; every member of a
-      // representative maps identically (comp(x)=r and m(r) agree), so the
-      // label map stays a function
-      val merged = lab.as("l").join(m, col("l.comp") === col("u"), "left")
-        .select(col("l.id"), coalesce(col("c"), col("l.comp")).as("comp"))
-      // pointer jump: comp := comp(comp) — path doubling
-      val jumped = merged.as("a")
-        .join(merged.as("b"), col("a.comp") === col("b.id"), "left")
-        .select(col("a.id"), coalesce(col("b.comp"), col("a.comp")).as("comp"))
+  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    // the first round reads the edges as given: the symmetric view below
+    // absorbs either orientation, duplicates and self-loops
+    var e = edges.select(col("src").as("u"), col("dst").as("v"))
+    var rounds = 0
+    var moved = 1L
+    while (moved > 0) {
+      require(rounds < MaxRounds, s"connectedComponents did not converge in $MaxRounds " +
+        "rounds — alternating large-star/small-star needs O(log² n) rounds on n nodes")
+      rounds += 1
+      val (large, small) = (Observation(), Observation())
+      // large-star over both orientations of each edge (one scan of e):
+      // (m, v) for every larger neighbour v of u; it moved when m < u
+      val star = e.select(inline(array(struct(col("u"), col("v")),
+          struct(col("v").as("u"), col("u").as("v")))))
+        .groupBy("u").agg(least(col("u"), min(col("v"))).as("m"),
+          collect_list(col("v")).as("nb"))
+        .select(col("u"), col("m"), explode(col("nb")).as("v"))
+        .filter(col("v") > col("u"))
+        .observe(large, count_if(col("m") < col("u")).as("n"))
+      // small-star: v and its smaller neighbours nb → (min nb, x); of the
+      // size(nb) edges emitted per v, all but (min nb, v) moved
+      e = star.groupBy("v").agg(collect_set(col("m")).as("nb"))
+        .observe(small, coalesce(sum(size(col("nb")) - 1), lit(0L)).as("n"))
+        .select(array_min(col("nb")).as("u"),
+          explode(array_union(col("nb"), array(col("v")))).as("v"))
+        .filter(col("u") =!= col("v")).distinct()
         .localCheckpoint()
-      // contract edges onto the new labels
-      val (contracted, left) = checkpointed(e.join(jumped.as("ju"), col("u") === col("ju.id"))
-        .join(jumped.as("jv"), col("v") === col("jv.id"))
-        .select(least(col("ju.comp"), col("jv.comp")).as("u"),
-          greatest(col("ju.comp"), col("jv.comp")).as("v"))
-        .filter(col("u") =!= col("v")).distinct(), count(lit(1)))
-      e = contracted
-      crossEdges = left
-      lab = jumped
+      moved = large.get("n").asInstanceOf[Long] + small.get("n").asInstanceOf[Long]
     }
-    require(crossEdges == 0,
-      s"connectedComponents did not converge in $maxIters rounds — " +
-        "component diameter exceeds 2^maxIters; raise maxIters")
-    // the edge set can empty while the label FOREST still has depth > 1
-    // (each round jumps pointers only once) — flatten to fixpoint, halving
-    // chain depth per jump, so comp is the component MINIMUM for every node.
-    // The change marker rides along in the SAME join (old: a second
-    // id-equality join per round just to compare labels — one extra shuffle
-    // and one extra job per flatten iteration).
-    var changed = 1L
-    while (changed > 0) {
-      val (jumped, n) = checkpointed(lab.as("a")
-        .join(lab.as("b"), col("a.comp") === col("b.id"), "left")
-        .select(col("a.id"), coalesce(col("b.comp"), col("a.comp")).as("comp"),
-          (col("b.comp").isNotNull && col("b.comp") =!= col("a.comp"))
-            .as("__changed")), count_if(col("__changed")))
-      changed = n
-      lab = jumped.drop("__changed")
-    }
-    // isolated nodes (no incident edge) are their own component
-    nodes.select(col("id")).join(lab, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+    // isolated nodes (no incident edge) and star centres are their own component
+    nodes.select(col("id")).join(e, col("id") === col("v"), "left")
+      .select(col("id"), coalesce(col("u"), col("id")).as("comp"))
   }
 
-  /** `df` materialized by an eager `localCheckpoint`, and `metric` (a
-    * count) over its rows, observed in that same job: the loop tests its
-    * exit condition without a probe job of its own. */
-  private def checkpointed(df: DataFrame, metric: Column): (DataFrame, Long) = {
-    val seen = Observation()
-    val cp = df.observe(seen, metric.as("n")).localCheckpoint()
-    (cp, seen.get("n").asInstanceOf[Long])
-  }
+  /** Round cap, a safety net: a 64-node path takes 7 rounds and a
+    * 1024-node path with shuffled ids about 10, where one-hop-per-round
+    * label propagation would need about 1023. */
+  private val MaxRounds = 64
 
   /** (`doc_id`, `cluster_id`) of the augmented corpus `docs`: connected
     * components over its MinHash near-dup edges, `cluster_id` the smallest
@@ -130,8 +97,8 @@ object GraphOps {
       // Scale shape: the quality score is a map-side regex count joined on
       // (doc_id, cluster_id) 16-byte rows, then one cluster_id exchange
       // for the argmax window — document text never shuffles, and the
-      // component labels come from the same O(log diameter) contraction
-      // as q_dedup_cluster.
+      // component labels come from the same connected-components loop as
+      // q_dedup_cluster.
       val docs = TextOps.augDocs(s, dir)
       val clusters = nearDupClusters(docs)
       val scored = docs.select(col("doc_id"),
@@ -149,7 +116,7 @@ object GraphOps {
 
     // Reachability closure via recursive CTE (UNION dedups, so it
     // terminates); min reachable id per node = the component minimum —
-    // exactly the Spark side's min-label contraction fixpoint.
+    // exactly the Spark side's star centre.
     "q_dedup_cluster" ->
       s"""WITH RECURSIVE ${TextOps.augSql},
          |${TextOps.shingleHashesSql},

@@ -159,7 +159,11 @@ object TextOps {
     // exchange-sharing pattern) — at scale the candidate pairs cross the
     // network twice (doc_a, then doc_b for sb) instead of three times; at
     // fixture scale AQE broadcasts sig so the plan keeps its single hash
-    // exchange either way.
+    // exchange either way. The price is hub-document skew: every candidate
+    // pair of a document that shares a band with thousands of others (a
+    // boilerplate page) lands in one task, and AQE cannot split that
+    // partition: its skew splitting covers the exchanges it plans itself
+    // and rebalances, not a REPARTITION_BY_COL exchange like this one.
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.band_val") === col("y.band_val") &&

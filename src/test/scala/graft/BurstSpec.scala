@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Encoders
@@ -36,7 +35,7 @@ class BurstSpec extends AnyFunSuite {
     val name = s"burst_${System.nanoTime()}"
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString)
       .start()
     batches.foreach { b => ms.addData(b); q.processAllAvailable() }
     q.stop()
@@ -79,7 +78,7 @@ class BurstSpec extends AnyFunSuite {
   }
 
   test("open run and its buffered continuation survive checkpoint restart") {
-    val ckpt = Files.createTempDirectory("burst_ckpt").toString
+    val ckpt = TestSpark.tempDir("burst_ckpt").toString
     val ms = MemoryStream[KeyedEv](kevEnc, spark)
     val out = java.util.concurrent.ConcurrentHashMap.newKeySet[Run]()
 

@@ -44,21 +44,19 @@ class CsvSourceSpec extends AnyFunSuite {
   }
 
   test("case-sensitive field mode: 'A,a' headers legal when sensitive, fatal otherwise") {
-    val f = java.nio.file.Files.createTempFile("case_hdr", ".csv")
+    val f = TestSpark.tempDir("case_hdr").resolve("case_hdr.csv")
     java.nio.file.Files.writeString(f, "A,a\n1,2\n")
-    try {
-      // default comparer (OrdinalIgnoreCase, Dataflow.cs:38): duplicate
-      val insensitive = CsvStrictSource.read(spark, f.toString)
-      assert(insensitive.df.count() == 0)
-      assert(insensitive.events.size == 1 && insensitive.events.head.stop)
-      assert(insensitive.events.head.description.startsWith("Duplicate header name"))
-      // case-sensitive comparer (Record.cs:45-46): distinct fields
-      val sensitive = CsvStrictSource.read(spark, f.toString,
-        caseSensitiveFields = true)
-      assert(sensitive.events.isEmpty)
-      assert(sensitive.df.columns.toSeq == Seq("A", "a", "pos"))
-      assert(sensitive.df.count() == 1)
-    } finally java.nio.file.Files.deleteIfExists(f)
+    // default comparer (OrdinalIgnoreCase, Dataflow.cs:38): duplicate
+    val insensitive = CsvStrictSource.read(spark, f.toString)
+    assert(insensitive.df.count() == 0)
+    assert(insensitive.events.size == 1 && insensitive.events.head.stop)
+    assert(insensitive.events.head.description.startsWith("Duplicate header name"))
+    // case-sensitive comparer (Record.cs:45-46): distinct fields
+    val sensitive = CsvStrictSource.read(spark, f.toString,
+      caseSensitiveFields = true)
+    assert(sensitive.events.isEmpty)
+    assert(sensitive.df.columns.toSeq == Seq("A", "a", "pos"))
+    assert(sensitive.df.count() == 1)
   }
 
   test("FieldCountChange: zero records + critical event; Skip=3 past bad row → 2 records") {
@@ -82,7 +80,7 @@ class CsvSourceSpec extends AnyFunSuite {
   }
 
   test("UTF-8 BOM is stripped, not leaked into the first header name") {
-    val f = java.nio.file.Files.createTempFile("bom", ".csv")
+    val f = TestSpark.tempDir("bom").resolve("bom.csv")
     java.nio.file.Files.write(f,
       Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++ "A,B\n1,2\n".getBytes("UTF-8"))
     val r = CsvStrictSource.read(spark, f.toString)
@@ -132,7 +130,7 @@ class CsvSourceSpec extends AnyFunSuite {
   }
 
   private def writeTemp(name: String, content: String): String = {
-    val f = java.nio.file.Files.createTempFile(name, ".csv")
+    val f = TestSpark.tempDir(name).resolve(s"$name.csv")
     java.nio.file.Files.write(f, content.getBytes("UTF-8"))
     f.toString
   }
@@ -168,7 +166,7 @@ class CsvSourceSpec extends AnyFunSuite {
   }
 
   test("path with spaces and URI-special characters reads fine") {
-    val d = java.nio.file.Files.createTempDirectory("csv dir with spaces")
+    val d = TestSpark.tempDir("csv dir with spaces")
     val f = d.resolve("odd name #1.csv")
     java.nio.file.Files.write(f, "A,B\n1,2\n".getBytes("UTF-8"))
     val r = CsvStrictSource.read(spark, f.toString)

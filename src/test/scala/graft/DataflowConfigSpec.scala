@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dsl.{ConfigLayer, DataflowConfig}
+import graft.dsl.DataflowConfig
 
 /** Config layering semantics (reference: ActionSettingsFactory.cs:24-76 and
   * the circular-parent fixtures under src/Shipwright.Test/Configurations/).
@@ -10,33 +10,6 @@ import graft.dsl.{ConfigLayer, DataflowConfig}
 class DataflowConfigSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private val layers = Map(
-    "global" -> ConfigLayer("global", None, Map(
-      "keys" -> "conv_id, turn_idx",
-      "default.tool" -> "none",
-      "replace.role.user" -> "human")),
-    "tenantDefault" -> ConfigLayer("tenantDefault", Some("global"), Map(
-      "default.tool" -> "unknown")), // overrides global
-    "tenantAction" -> ConfigLayer("tenantAction", Some("tenantDefault"), Map(
-      "replace.role.assistant" -> "ai")))
-
-  test("nearest layer wins through the parent chain") {
-    val s = DataflowConfig.resolve(layers, "tenantAction")
-    assert(s("default.tool") == "unknown")
-    assert(s("replace.role.user") == "human")
-    assert(s("replace.role.assistant") == "ai")
-    assert(s("keys") == "conv_id, turn_idx")
-  }
-
-  test("circular parent chains fail at build time") {
-    val circular = Map(
-      "a" -> ConfigLayer("a", Some("b"), Map.empty),
-      "b" -> ConfigLayer("b", Some("a"), Map.empty))
-    val e = intercept[IllegalArgumentException](DataflowConfig.resolve(circular, "a"))
-    assert(e.getMessage.contains("Circular"))
-    intercept[IllegalArgumentException](DataflowConfig.resolve(Map.empty, "missing"))
-  }
 
   private val cfgRoot = "src/test/resources/configurations"
 
@@ -72,7 +45,7 @@ class DataflowConfigSpec extends AnyFunSuite {
   }
 
   test("ConfigRun: spark-submit path writes valid/errors tables from the config tree") {
-    val out = java.nio.file.Files.createTempDirectory("cfg_run").toString
+    val out = TestSpark.tempDir("cfg_run").toString
     val input = Seq(
       ("c1", 0, "tool", null.asInstanceOf[String]),
       (null.asInstanceOf[String], 1, "user", "x")) // fails keys-Required
@@ -88,7 +61,9 @@ class DataflowConfigSpec extends AnyFunSuite {
   }
 
   test("synthesized dataflow applies keys-Required, defaults, replacements in order") {
-    val flow = DataflowConfig.build(layers, "tenantAction")
+    // Synthesized.yml: keys, default.tool = none, role user → human;
+    // TestTenant/Synthesized.yml: default.tool = unknown, role assistant → ai
+    val flow = DataflowConfig.buildFromFiles(cfgRoot, "Synthesized", "TestTenant")
     assert(flow.keys == Seq("conv_id", "turn_idx"))
     val df = Seq(
       ("c1", 0, "user", null.asInstanceOf[String]),

@@ -25,7 +25,7 @@ class EventSinkSpec extends AnyFunSuite {
   }
 
   test("error write: a replayed batch id replaces its own files; another id adds its rows") {
-    val dir = java.nio.file.Files.createTempDirectory("err_write").toString
+    val dir = TestSpark.tempDir("err_write").toString
     val (_, errors) = ErrorSplit.split(
       Pipeline(Seq((1L, "ok"), (2L, null), (3L, " ")).toDF("pos", "f"), Seq(Required(Seq("f")))),
       Seq("pos"))
@@ -76,8 +76,7 @@ class EventSinkSpec extends AnyFunSuite {
   }
 
   test("transcript pipeline notifies per-batch error counts") {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("evt_pipe").toString
+    val base = TestSpark.tempDir("evt_pipe").toString
     val in = s"$base/in"
     Seq(("c1", 0, "user", "hello", null.asInstanceOf[String],
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L),
@@ -125,7 +124,7 @@ class EventSinkSpec extends AnyFunSuite {
   }
 
   test("sourceCsv: quote/escape configuration reaches the parser") {
-    val f = java.nio.file.Files.createTempFile("dslq", ".csv")
+    val f = TestSpark.tempDir("dslq").resolve("dslq.csv")
     java.nio.file.Files.write(f, "A,B\n'x,y','ok'\n".getBytes("UTF-8"))
     val out = graft.dsl.Dataflow("csv-quote")
       .sourceCsv(spark, f.toString, quote = '\'')

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.GraphOps
 
 /** Connected components (duplicate-cluster assignment): fixtures exercise
-  * singletons, transitive chains, merged stars, and a diameter large enough
-  * that only logarithmic (pointer-jumped) convergence fits in maxIters.
+  * singletons, transitive chains, merged stars, and long paths, in order
+  * and with shuffled ids, that must converge in logarithmically many rounds.
   */
 class GraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -69,12 +69,23 @@ class GraphSpec extends AnyFunSuite {
     out.unpersist()
   }
 
-  test("long path (diameter 63) converges inside maxIters — pointer jumping works") {
-    // plain min-propagation shortens a path by O(1) per round and would
-    // need 63 rounds; with path doubling the loop must finish well under
-    // the default maxIters=20 or the require() in connectedComponents fires
+  test("long paths, in order and with shuffled ids, converge in logarithmically many rounds") {
+    // plain min-label propagation moves a label one hop per round: it needs
+    // 63 rounds on the 64-node path and about 1023 on the 1024-node one.
+    // Shuffled ids put the minimum anywhere along the path, the adversarial
+    // order for it. Alternating large-star/small-star takes 7 rounds on the
+    // ordered 64-node path, 6 on the shuffled one and 9 on the shuffled
+    // 1024-node one, so the 1024-node input tells logarithmic from linear
+    // convergence: a linear-round loop runs past the round cap (64) and the
+    // require() in connectedComponents fires
     val nodes = (0L to 63L).toSeq
     val edges = nodes.sliding(2).map(p => (p(1), p(0))).toSeq
     assert(cc(nodes, edges) == nodes.map(_ -> 0L).toMap)
+    val rnd = new scala.util.Random(13)
+    for (n <- Seq(64L, 1024L)) {
+      val ids = rnd.shuffle((0L until n).toVector)
+      val shuffled = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+      assert(cc(ids, shuffled) == ids.map(_ -> 0L).toMap, s"shuffled $n-node path")
+    }
   }
 }

@@ -72,7 +72,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("merge writes through one bucket-aligned shuffle, one file per bucket (widths 16 and 7)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_plan").toString
+    val dir = TestSpark.tempDir("merge_plan").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos")
     assert(sink.bucketCount == 16)
     // two merges: the second unions the touched buckets' current rows
@@ -96,7 +96,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("rebucket migration: rows survive, width is journaled, reopening honors it") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_rebucket").toString
+    val dir = TestSpark.tempDir("merge_rebucket").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
     sink.merge((0 until 40).map(i => turn(s"c$i", i, s"v$i", i)).toDF(), 0L)
     assert(sink.bucketCount == 4)
@@ -128,7 +128,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("concurrent-writer collision: loser fails loudly, winner's manifest unclobbered") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_collide").toString
+    val dir = TestSpark.tempDir("merge_collide").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
     sink.merge(Seq(turn("c1", 0, "v0", 1)).toDF(), 0L) // commits version 0
     // Simulate a SECOND PROCESS winning the race to version 1: its manifest
@@ -168,7 +168,7 @@ class MergeSinkSpec extends AnyFunSuite {
   test("merge: tombstones delete keys exactly-once; replays converge") {
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_del").toString
+    val dir = TestSpark.tempDir("merge_del").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos")
 
     sink.merge(Seq(turn("a", 0, "v1", 1), turn("a", 1, "v1", 2),
@@ -200,7 +200,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("merge: upsert semantics, newest wins, idempotent re-delivery") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge").toString
+    val dir = TestSpark.tempDir("merge").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos")
 
     val b0 = Seq(turn("a", 0, "v1", 1), turn("a", 1, "v1", 2)).toDF()
@@ -224,7 +224,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("merge is partition-scoped: untouched buckets' data dirs are reused, not rewritten") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_scope").toString
+    val dir = TestSpark.tempDir("merge_scope").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 8)
     // batch 0 populates several buckets
     sink.merge((0 until 32).map(i => turn(s"c$i", 0, "v", i.toLong)).toDF(), 0L)
@@ -247,7 +247,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("batch ids at or below the manifest's are no-ops: replay, reopen, rebucket") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_replay").toString
+    val dir = TestSpark.tempDir("merge_replay").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
     val b0 = Seq(turn("a", 0, "v1", 1)).toDF()
     sink.merge(b0, 0L)
@@ -276,7 +276,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("after N merges the root holds one manifest and only the data dirs it references") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_gc")
+    val dir = TestSpark.tempDir("merge_gc")
     val sink = new MergeSink(dir.toString, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
     (0 until 5).foreach(i => sink.merge(Seq(turn(s"c$i", 0, "v", i)).toDF(), i.toLong))
     val names = Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
@@ -290,7 +290,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("sink runs against an explicit file: FileSystem URI (Hadoop FS API path)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_fsuri")
+    val dir = TestSpark.tempDir("merge_fsuri")
     val sink = new MergeSink("file:" + dir.toString, Seq("conv_id", "turn_idx"), "pos")
     sink.merge(Seq(turn("a", 0, "v1", 1), turn("b", 0, "v1", 2)).toDF(), 0L)
     sink.merge(Seq(turn("a", 0, "v2", 10)).toDF(), 1L)
@@ -302,7 +302,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("BatchEffect: runs once per committed batch, skipped on re-delivery") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_effect").toString
+    val dir = TestSpark.tempDir("merge_effect").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos")
     val runs = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
     val audit = new BatchEffect {
@@ -321,7 +321,7 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("BatchEffect that throws leaves the table at its version; the retry applies the batch") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_effect_fail")
+    val dir = TestSpark.tempDir("merge_effect_fail")
     val sink = new MergeSink(dir.toString, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
     sink.merge(Seq(turn("a", 0, "v1", 1)).toDF(), 0L)
     val runs = new java.util.concurrent.atomic.AtomicInteger()
@@ -349,11 +349,11 @@ class MergeSinkSpec extends AnyFunSuite {
 
   test("streaming foreachBatch + checkpoint: restart with replay converges (exactly-once)") {
     implicit val enc = Encoders.product[TurnPos]
-    val dir = Files.createTempDirectory("merge_stream").toString
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val dir = TestSpark.tempDir("merge_stream").toString
+    val ckpt = TestSpark.tempDir("ckpt").toString
     val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos")
 
-    val progressDir = Files.createTempDirectory("progress").toString
+    val progressDir = TestSpark.tempDir("progress").toString
     val ms = MemoryStream[TurnPos](enc, spark)
     def start() = ProgressListener.logging(spark, progressDir) {
       ms.toDS().writeStream

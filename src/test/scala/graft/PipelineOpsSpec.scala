@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +14,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   /** Write a crafted documents table; returns the dir to pass to a query. */
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-pipeops").toString
+    val dir = TestSpark.tempDir("graft-pipeops").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -144,7 +142,7 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("error burst: only runs of >= 3 CONSECUTIVE errors per user emit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-pipeops-ev").toString
+    val dir = TestSpark.tempDir("graft-pipeops-ev").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(m: Int) = new java.sql.Timestamp(base.getTime + m * 60000L)
     // user 1: errors 0,1,2 (run of 3), view, errors 4,5 (run of 2 — silent)

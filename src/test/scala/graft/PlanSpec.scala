@@ -210,7 +210,7 @@ class PlanSpec extends AnyFunSuite {
     // twice for rows that only contribute (conv_id, tool, ts, idx, pos) —
     // the single biggest avoidable memory cost at 10^12-turn scale.
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("plan_join").toString
+    val dir = TestSpark.tempDir("plan_join").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .limit(100)
       .select(col("user_id").cast("string").as("conv_id"),
@@ -234,7 +234,7 @@ class PlanSpec extends AnyFunSuite {
     val q =
       try graft.stream.ToolPair.streaming(src).writeStream.format("noop")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt_plan").toString)
+          TestSpark.tempDir("ckpt_plan").toString)
         .start()
       finally spark.conf.set(noDataKey, savedNoData)
     try {

@@ -83,7 +83,7 @@ class PropertySpec extends AnyFunSuite {
       val q = quote.toString
       def cell(v: String) = q + v.replace(q, q + q) + q
       val body = ("A,B,C" +: data.map(_.map(cell).mkString(","))).mkString("\n") + "\n"
-      val f = java.nio.file.Files.createTempFile("rt", ".csv")
+      val f = TestSpark.tempDir("rt").resolve("rt.csv")
       java.nio.file.Files.write(f, body.getBytes("UTF-8"))
       val r = CsvStrictSource.read(spark, f.toString, quote = quote)
       assert(r.events.isEmpty, s"events=${r.events} for quote=$quote body=<$body>")

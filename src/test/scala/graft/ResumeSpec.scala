@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Encoders
@@ -24,7 +23,7 @@ class ResumeSpec extends AnyFunSuite {
 
   test("order repair state survives checkpoint restart") {
     implicit val enc = Encoders.product[TurnPos]
-    val ckpt = Files.createTempDirectory("repair_ckpt").toString
+    val ckpt = TestSpark.tempDir("repair_ckpt").toString
     val ms = MemoryStream[TurnPos](enc, spark)
     val emitted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
@@ -58,7 +57,7 @@ class ResumeSpec extends AnyFunSuite {
 
   test("flag dedup first-seen state survives checkpoint restart") {
     implicit val enc = Encoders.product[TurnPos]
-    val ckpt = Files.createTempDirectory("dedup_ckpt").toString
+    val ckpt = TestSpark.tempDir("dedup_ckpt").toString
     val ms = MemoryStream[TurnPos](enc, spark)
     // (pos, is_duplicate, dup_of_pos) — a Set absorbs any replayed batch on
     // restart (foreachBatch re-delivery), so the assertion is on the
@@ -96,7 +95,7 @@ class ResumeSpec extends AnyFunSuite {
 
   test("stream-stream tool-pair join state survives checkpoint restart") {
     implicit val enc = Encoders.product[TurnPos]
-    val ckpt = Files.createTempDirectory("pair_ckpt").toString
+    val ckpt = TestSpark.tempDir("pair_ckpt").toString
     val ms = MemoryStream[TurnPos](enc, spark)
     // a Set absorbs any replayed batch on restart (foreachBatch
     // re-delivery), so the assertion is on the CONVERGED pair multiset
@@ -144,7 +143,7 @@ class ResumeSpec extends AnyFunSuite {
       .select(col("session_window.start").as("s_start"), col("conv_id"), col("n"))
     val name = s"sess_${System.nanoTime()}"
     val q = agg.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     // session 1: turns at 10,20 (gap < 30s); session 2 at 100; close via 1000
     ms.addData(Seq(turn("a", 0, 10), turn("a", 1, 20), turn("a", 2, 100)))
     q.processAllAvailable()
@@ -169,7 +168,7 @@ class ResumeSpec extends AnyFunSuite {
       .select(col("window.start").as("w_start"), col("conv_id"), col("n"))
     val name = s"slide_${System.nanoTime()}"
     val q = agg.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     ms.addData(Seq(turn("a", 0, 70))) // minute 1 → windows starting at 0:00 and 1:00
     q.processAllAvailable()
     ms.addData(Seq(turn("z", 0, 2000)))
@@ -193,7 +192,7 @@ class ResumeSpec extends AnyFunSuite {
       .select(col("window.start").as("w_start"), col("conv_id"), col("n"))
     val name = s"win_${System.nanoTime()}"
     val q = agg.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     // minute 0: three turns; then jump past the watermark so it closes
     ms.addData(Seq(turn("a", 0, 10), turn("a", 1, 20), turn("b", 0, 30)))
     q.processAllAvailable()

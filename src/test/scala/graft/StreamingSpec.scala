@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Encoders
@@ -38,7 +37,7 @@ class StreamingSpec extends AnyFunSuite {
     val name = s"repair_${strict}_${System.nanoTime()}"
     val q = OrderRepair.unpack(repaired).writeStream.format("memory").queryName(name)
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString)
       .start()
     batches.foreach { b => ms.addData(b); q.processAllAvailable() }
     q.stop()
@@ -140,7 +139,7 @@ class StreamingSpec extends AnyFunSuite {
     val name = s"slide_${System.nanoTime()}"
     val q = slide(ms.toDS().withWatermark("ts", "10 seconds").toDF())
       .writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     ms.addData(events)
     q.processAllAvailable()
     // far-future sentinel advances the watermark past every real window end;
@@ -171,7 +170,7 @@ class StreamingSpec extends AnyFunSuite {
     val name = s"sess_${System.nanoTime()}"
     val q = sess(ms.toDS().withWatermark("ts", "10 seconds").toDF())
       .writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     // split across micro-batches: session 1 must merge events arriving apart
     ms.addData(events.take(2))
     q.processAllAvailable()
@@ -193,7 +192,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq("conv_id", "turn_idx"), "ts", "60 seconds")
     val name = s"dedup_${System.nanoTime()}"
     val q = dd.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     ms.addData(Seq(turn("a", 0, 1, text = "first"), turn("a", 1, 2)))
     q.processAllAvailable()
     ms.addData(Seq(turn("a", 0, 3, text = "dup"), turn("b", 0, 4)))
@@ -212,7 +211,7 @@ class StreamingSpec extends AnyFunSuite {
       ms.toDS().withWatermark("ts", "10 seconds"), gapMs = 30000L)
     val name = s"flag_${System.nanoTime()}"
     val q = flagged.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     ms.addData(Seq(turn("a", 0, 1, text = "first", pos = 5)))
     q.processAllAvailable()
     // same key in a LATER micro-batch, within the watermark → flagged, kept
@@ -246,7 +245,7 @@ class StreamingSpec extends AnyFunSuite {
       ms.toDS().withWatermark("ts", "10 seconds"), gapMs = 30000L)
     val name = s"flag_same_batch_${System.nanoTime()}"
     val q = flagged.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     // three duplicates of one key in the SAME batch, positions out of order:
     // post-shuffle iterator order is arbitrary, so only a pos-sorted fold
     // keeps the min-pos row as the original (reference Unique first-wins)
@@ -275,7 +274,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = StreamDedup.flagWithinWatermark(
         ms.toDS().withWatermark("ts", "10 seconds"), gapMs = 30000L)
       .writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     ms.addData(data)
     q.processAllAvailable()
     q.stop()
@@ -293,7 +292,7 @@ class StreamingSpec extends AnyFunSuite {
       watermark = "1 minutes", leftOuter = true)
     val name = s"pair_outer_${System.nanoTime()}"
     val q = joined.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     ms.addData(Seq(
       turn("a", 0, 10, role = "assistant", tool = "search"),
       turn("a", 1, 20, role = "tool", tool = "search"),
@@ -320,7 +319,7 @@ class StreamingSpec extends AnyFunSuite {
       watermark = "10 minutes", leftOuter = false)
     val name = s"pair_${System.nanoTime()}"
     val q = joined.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     val data = Seq(
       turn("a", 0, 10, role = "assistant", tool = "search"),
       turn("a", 1, 20, role = "tool", tool = "search"),       // pairs with call 0
@@ -352,7 +351,7 @@ class StreamingSpec extends AnyFunSuite {
       maxDelay = "1 MINUTES", watermark = "1 minutes")
     val name = s"timeout_${System.nanoTime()}"
     val q = touts.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     val data = Seq(
       turn("a", 0, 10, role = "assistant", tool = "search"),
       turn("a", 1, 20, role = "tool", tool = "search"),     // answered in time
@@ -389,7 +388,7 @@ class StreamingSpec extends AnyFunSuite {
       watermark = "10 minutes", leftOuter = false)
     val name = s"pair_multi_${System.nanoTime()}"
     val q = joined.writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString).start()
+      .option("checkpointLocation", TestSpark.tempDir("ckpt").toString).start()
     val data = Seq(
       turn("a", 0, 10, role = "assistant", tool = "search"),
       turn("a", 1, 20, role = "tool", tool = "search"),   // 1st match for call 0

@@ -29,8 +29,8 @@ class TablesSpec extends AnyFunSuite {
 
   /** Queries whose build runs Spark jobs on purpose, and why. */
   private val eager: Map[String, String] = Map(
-    "q_dedup_cluster" -> ("connected components: each round checkpoints the contracted " +
-      "edges, and the next round runs only if edges remain"),
+    "q_dedup_cluster" -> ("connected components: each large-star/small-star round " +
+      "checkpoints the rewritten edges, and the next round runs only if an edge moved"),
     "q_cluster_canonical" -> "the same connected-components loop as q_dedup_cluster",
     "q_embed_neardup" -> ("the near-dup pairs are checkpointed so the persisted corpus " +
       "is released before the build returns"),

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -139,47 +138,44 @@ class TextHashSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("every string kernel runs in generated code over parquet: kernel values, null to null") {
     val spark = TestSpark.spark
-    val dir = Files.createTempDirectory("graft_kernels")
-    try {
-      val path = dir.resolve("docs.parquet").toString
-      df.write.parquet(path)
-      val docs = spark.read.parquet(path)
-      val M = 1000003L
-      val (as, bs) = (Seq(3L, 5L, 7L), Seq(11L, 13L, 17L))
-      def u(t: String) = UTF8String.fromString(t)
-      def coefs(v: Seq[Long]) = UnsafeArrayData.fromPrimitiveArray(v.toArray)
-      // (kernel the generated code must call, column, direct call on the text)
-      val kernels: Seq[(String, Column, String => Any)] = Seq(
-        ("Fnv64.hash", fns.fnv64(col("text")), t => Fnv64.hash(t.getBytes(UTF_8))),
-        ("RollingMinHash.minHash", fns.rolling_min_hash(col("text"), 8),
-          t => RollingMinHash.minHash(t.getBytes(UTF_8), 8)),
-        ("TextHashFns.ngramHash60", fns.word_ngram_hash60(col("text"), 3, M),
-          t => TextHashFns.ngramHash60(u(t), 3, M).toLongArray().toSeq),
-        ("TextHashFns.ngrams", fns.word_ngrams(col("text"), 2),
-          t => TextHashFns.ngrams(u(t), 2).toObjectArray(StringType).map(_.toString).toSeq),
-        ("TextHashFns.simhash", fns.simhash_bits(col("text"), 48),
-          t => TextHashFns.simhash(u(t), 48)),
-        ("TextHashFns.ngramMinHash", fns.word_ngram_minhash(col("text"), 3, M, as, bs),
-          t => Option(TextHashFns.ngramMinHash(u(t), 3, M, coefs(as), coefs(bs)))
-            .map(_.toLongArray().toSeq).orNull))
-      for ((kernel, c, direct) <- kernels) {
-        val q = docs.select(col("doc_id"), c.as("v"))
-        val got = q.collect().map(r => r.getLong(0) -> r.get(1)).toMap
-        val stages = collect(q.queryExecution.executedPlan) {
-          case w: WholeStageCodegenExec if w.child.exists {
-            case p: ProjectExec => p.projectList.exists(_.exists(_.isInstanceOf[StaticInvoke]))
-            case _ => false
-          } => w
-        }
-        assert(stages.size == 1, s"$kernel: projection not in whole-stage codegen")
-        assert(stages.head.doCodeGen()._2.body.contains(s"graft.functions.$kernel("),
-          s"$kernel: generated code does not call the kernel")
-        adversarial.zipWithIndex.foreach { case (t, i) => // null text: want null
-          val want = if (t == null) null else direct(t)
-          assert(got(i.toLong) == want, s"$kernel on ${Option(t).map(_.take(20))}")
-        }
+    val dir = TestSpark.tempDir("graft_kernels")
+    val path = dir.resolve("docs.parquet").toString
+    df.write.parquet(path)
+    val docs = spark.read.parquet(path)
+    val M = 1000003L
+    val (as, bs) = (Seq(3L, 5L, 7L), Seq(11L, 13L, 17L))
+    def u(t: String) = UTF8String.fromString(t)
+    def coefs(v: Seq[Long]) = UnsafeArrayData.fromPrimitiveArray(v.toArray)
+    // (kernel the generated code must call, column, direct call on the text)
+    val kernels: Seq[(String, Column, String => Any)] = Seq(
+      ("Fnv64.hash", fns.fnv64(col("text")), t => Fnv64.hash(t.getBytes(UTF_8))),
+      ("RollingMinHash.minHash", fns.rolling_min_hash(col("text"), 8),
+        t => RollingMinHash.minHash(t.getBytes(UTF_8), 8)),
+      ("TextHashFns.ngramHash60", fns.word_ngram_hash60(col("text"), 3, M),
+        t => TextHashFns.ngramHash60(u(t), 3, M).toLongArray().toSeq),
+      ("TextHashFns.ngrams", fns.word_ngrams(col("text"), 2),
+        t => TextHashFns.ngrams(u(t), 2).toObjectArray(StringType).map(_.toString).toSeq),
+      ("TextHashFns.simhash", fns.simhash_bits(col("text"), 48),
+        t => TextHashFns.simhash(u(t), 48)),
+      ("TextHashFns.ngramMinHash", fns.word_ngram_minhash(col("text"), 3, M, as, bs),
+        t => Option(TextHashFns.ngramMinHash(u(t), 3, M, coefs(as), coefs(bs)))
+          .map(_.toLongArray().toSeq).orNull))
+    for ((kernel, c, direct) <- kernels) {
+      val q = docs.select(col("doc_id"), c.as("v"))
+      val got = q.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+      val stages = collect(q.queryExecution.executedPlan) {
+        case w: WholeStageCodegenExec if w.child.exists {
+          case p: ProjectExec => p.projectList.exists(_.exists(_.isInstanceOf[StaticInvoke]))
+          case _ => false
+        } => w
       }
-    } finally
-      Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      assert(stages.size == 1, s"$kernel: projection not in whole-stage codegen")
+      assert(stages.head.doCodeGen()._2.body.contains(s"graft.functions.$kernel("),
+        s"$kernel: generated code does not call the kernel")
+      adversarial.zipWithIndex.foreach { case (t, i) => // null text: want null
+        val want = if (t == null) null else direct(t)
+        assert(got(i.toLong) == want, s"$kernel on ${Option(t).map(_.take(20))}")
+      }
+    }
   }
 }

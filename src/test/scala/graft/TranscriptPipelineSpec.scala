@@ -31,11 +31,11 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     turns.toDS().coalesce(1).write.mode("append").parquet(dir)
 
   test("full pipeline: valid rows merged ordered, invalid rows in errors table, progress logged, resume converges") {
-    val in = Files.createTempDirectory("tp_in").toString
-    val out = Files.createTempDirectory("tp_out").toString
-    val errs = Files.createTempDirectory("tp_errs").toString
-    val ckpt = Files.createTempDirectory("tp_ckpt").toString
-    val progress = Files.createTempDirectory("tp_progress").toString
+    val in = TestSpark.tempDir("tp_in").toString
+    val out = TestSpark.tempDir("tp_out").toString
+    val errs = TestSpark.tempDir("tp_errs").toString
+    val ckpt = TestSpark.tempDir("tp_ckpt").toString
+    val progress = TestSpark.tempDir("tp_progress").toString
     val cfg = TranscriptPipeline.Config(in, out, errs, ckpt, progress,
       maxFilesPerTrigger = 1)
 
@@ -83,11 +83,11 @@ class TranscriptPipelineSpec extends AnyFunSuite {
   }
 
   private def dirs(prefix: String): TranscriptPipeline.Config =
-    TranscriptPipeline.Config(Files.createTempDirectory(s"${prefix}_in").toString,
-      Files.createTempDirectory(s"${prefix}_out").toString,
-      Files.createTempDirectory(s"${prefix}_errs").toString,
-      Files.createTempDirectory(s"${prefix}_ckpt").toString,
-      Files.createTempDirectory(s"${prefix}_progress").toString)
+    TranscriptPipeline.Config(TestSpark.tempDir(s"${prefix}_in").toString,
+      TestSpark.tempDir(s"${prefix}_out").toString,
+      TestSpark.tempDir(s"${prefix}_errs").toString,
+      TestSpark.tempDir(s"${prefix}_ckpt").toString,
+      TestSpark.tempDir(s"${prefix}_progress").toString)
 
   /** (conv_id, turn_idx, pos, description) of every row in the errors dir. */
   private def errorRows(cfg: TranscriptPipeline.Config): Set[(String, Integer, Long, String)] =
@@ -170,7 +170,7 @@ class TranscriptPipelineSpec extends AnyFunSuite {
     * with modification time `mtimeS`, so the file source's arrival order
     * is the test's. */
   private def writeFileAt(dir: String, name: String, turns: DataFrame, mtimeS: Long): Unit = {
-    val tmp = Files.createTempDirectory("tp_file")
+    val tmp = TestSpark.tempDir("tp_file")
     turns.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("out").toString)
     val part = Files.list(tmp.resolve("out")).toArray.map(_.asInstanceOf[java.nio.file.Path])
       .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -180,11 +180,11 @@ class TranscriptPipelineSpec extends AnyFunSuite {
   }
 
   test("stateful job: order repaired across micro-batches, state counted once per batch, restart converges") {
-    val in = Files.createTempDirectory("tps_in").toString
-    val out = Files.createTempDirectory("tps_out").toString
-    val errs = Files.createTempDirectory("tps_errs").toString
-    val ckpt = Files.createTempDirectory("tps_ckpt").toString
-    val progress = Files.createTempDirectory("tps_progress").toString
+    val in = TestSpark.tempDir("tps_in").toString
+    val out = TestSpark.tempDir("tps_out").toString
+    val errs = TestSpark.tempDir("tps_errs").toString
+    val ckpt = TestSpark.tempDir("tps_ckpt").toString
+    val progress = TestSpark.tempDir("tps_progress").toString
     val cfg = TranscriptPipeline.Config(in, out, errs, ckpt, progress,
       maxFilesPerTrigger = 1)
     val t0 = 1000000L
@@ -237,14 +237,14 @@ class TranscriptPipelineSpec extends AnyFunSuite {
   test("two concurrent jobs: each progress log is valid JSONL of its own query, listeners leave on stop") {
     // a tab and a CR in one input dir reach its source description
     val jobs = Seq("tp_in\t\r", "tp_in").map { inName =>
-      val in = Files.createTempDirectory(inName).toString
+      val in = TestSpark.tempDir(inName).toString
       writeBatchFile(in, Seq(
         TurnPos("a", 0, "user", "q0", null, ts(1), 1),
         TurnPos("a", 1, "assistant", "r1", "search", ts(2), 2)), 1)
-      TranscriptPipeline.Config(in, Files.createTempDirectory("tpc_out").toString,
-        Files.createTempDirectory("tpc_errs").toString,
-        Files.createTempDirectory("tpc_ckpt").toString,
-        Files.createTempDirectory("tpc_progress").toString)
+      TranscriptPipeline.Config(in, TestSpark.tempDir("tpc_out").toString,
+        TestSpark.tempDir("tpc_errs").toString,
+        TestSpark.tempDir("tpc_ckpt").toString,
+        TestSpark.tempDir("tpc_progress").toString)
     }
     val before = spark.streams.listListeners().toSet
     val (qa, _) = TranscriptPipeline.startStateful(spark, jobs(0))
@@ -283,11 +283,11 @@ class TranscriptPipelineSpec extends AnyFunSuite {
   }
 
   test("stateful job plan: one micro-batch runs one state operator over one scan of the input dir") {
-    val in = Files.createTempDirectory("tpp_in").toString
-    val cfg = TranscriptPipeline.Config(in, Files.createTempDirectory("tpp_out").toString,
-      Files.createTempDirectory("tpp_errs").toString,
-      Files.createTempDirectory("tpp_ckpt").toString,
-      Files.createTempDirectory("tpp_progress").toString)
+    val in = TestSpark.tempDir("tpp_in").toString
+    val cfg = TranscriptPipeline.Config(in, TestSpark.tempDir("tpp_out").toString,
+      TestSpark.tempDir("tpp_errs").toString,
+      TestSpark.tempDir("tpp_ckpt").toString,
+      TestSpark.tempDir("tpp_progress").toString)
     // every turn is in order: all six leave the repair in this batch, the
     // blank-text one into the errors dir. Event time stays under the
     // 10-minute watermark delay, so the watermark does not move, no further

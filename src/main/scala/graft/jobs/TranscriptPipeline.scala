@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.Sessions
-import graft.sink.{BatchEffect, ConsoleEventSink, ErrorSplit, EventSink, MergeSink, ProgressListener}
+import graft.sink.{ConsoleEventSink, ErrorSplit, EventSink, MergeSink, ProgressListener}
 import graft.stream.{OrderRepair, TurnPacked}
 import graft.transform._
 
@@ -91,29 +91,28 @@ object TranscriptPipeline {
     (q, sink)
   }
 
-  /** One micro-batch, persisted once so the state operator runs once. Error
-    * rows are written to `cfg.errorsDir` by a [[BatchEffect]] that the sink
-    * runs before its manifest commit, after the merge has read the batch:
-    * the error count is then a scan of the cached batch, a batch without
-    * errors writes nothing, and a replayed batch replaces its own files. */
+  /** One micro-batch, persisted once so the state operator runs once. The
+    * error rows are written to `cfg.errorsDir` before the merge: the error
+    * count is a scan of the cached batch, a batch without errors writes
+    * nothing, and a replayed batch rewrites its own error files while the
+    * sink skips its already committed id. An error write that throws fails
+    * the batch before the merge, so the table stays at its version. */
   private def each(cfg: Config, sink: MergeSink, batch: Dataset[TurnPacked], batchId: Long): Unit = {
     val cached = batch.persist()
     try {
       val (valid, errors) = ErrorSplit.split(cached.toDF(), errorKeys)
-      val errorChannel: BatchEffect = (_, _) => {
-        val nErrors = ErrorSplit.write(errors, cfg.errorsDir, batchId)
-        // per-batch lifecycle notification (the reference's per-record
-        // NotifyRecordCompleted, aggregated to stay driver-cheap)
-        cfg.eventSink.notify(if (nErrors > 0) "WARN" else "INFO",
-          s"batch $batchId: $nErrors error rows written to ${cfg.errorsDir}")
-        // optional per-record fidelity: formatting + level filter run data-
-        // parallel; only the notify loop is driver-side, a partition at a time
-        if (nErrors > 0) cfg.perRecordLevel.foreach { lvl =>
-          ErrorSplit.recordEvents(errors, errorKeys, lvl)
-            .toLocalIterator().forEachRemaining(e => cfg.eventSink.notify(e._1, e._2))
-        }
+      val nErrors = ErrorSplit.write(errors, cfg.errorsDir, batchId)
+      // per-batch lifecycle notification (the reference's per-record
+      // NotifyRecordCompleted, aggregated to stay driver-cheap)
+      cfg.eventSink.notify(if (nErrors > 0) "WARN" else "INFO",
+        s"batch $batchId: $nErrors error rows written to ${cfg.errorsDir}")
+      // optional per-record fidelity: formatting + level filter run data-
+      // parallel; only the notify loop is driver-side, a partition at a time
+      if (nErrors > 0) cfg.perRecordLevel.foreach { lvl =>
+        ErrorSplit.recordEvents(errors, errorKeys, lvl)
+          .toLocalIterator().forEachRemaining(e => cfg.eventSink.notify(e._1, e._2))
       }
-      sink.merge(OrderRepair.unpack(valid), batchId, effects = Seq(errorChannel))
+      sink.merge(OrderRepair.unpack(valid), batchId)
       cfg.eventSink.notify("INFO", s"batch $batchId: merged into ${cfg.outputTable}")
     } finally cached.unpersist()
   }

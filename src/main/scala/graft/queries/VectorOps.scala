@@ -137,28 +137,17 @@ object VectorOps {
     * the Spark result away from the fixed-width DuckDB SQL past 262k rows).
     */
   def embedNearDupAt(e0: DataFrame, nbits: Int, minCos: Double = 0.99): DataFrame = {
-    // both self-join sides read the bucketed/normed corpus — persist it so
-    // the scan + nbits 64-dim hyperplane projections run ONCE, as the
-    // minhash/simhash paths do; MEMORY_AND_DISK spills rather than OOMs
+    // both self-join sides are the same plan: the scan and the nbits
+    // hyperplane projections sit below one shared exchange (or broadcast)
     val e = e0.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"), bucket(col("embedding"), nbits).as("bkt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = e.as("x").join(e.as("y"),
+    e.as("x").join(e.as("y"),
         col("x.bkt") === col("y.bkt") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
         (dot(col("x.embedding"), col("y.embedding")) /
           (col("x.nrm") * col("y.nrm"))).as("cos"))
       .filter(col("cos") >= minCos)
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos_sim"))
-    // The persist must not outlive the call (a `DataFrame.persist` is
-    // registered in the session's CacheManager and is NEVER auto-released, so
-    // repeated calls would accumulate block-manager entries for the session's
-    // life). Materialize the small near-dup pair set eagerly via
-    // localCheckpoint — whose blocks ARE released by the ContextCleaner once
-    // the result is garbage-collected — then drop the corpus cache before
-    // returning. Cost: the query runs here instead of lazily, which is the
-    // call pattern this API has anyway (callers write/collect immediately).
-    try pairs.localCheckpoint() finally e.unpersist()
   }
 
   /** Sign-LSH bucketed ANN top-k: query rows (selected by `isQuery`) are

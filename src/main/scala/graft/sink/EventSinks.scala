@@ -44,10 +44,14 @@ object ErrorSplit {
 
   /** Writes micro-batch `batchId`'s error rows to `dir` as top-level
     * `batch-<batchId>-<n>.parquet` files and returns their count; with none
-    * it writes nothing. A replay replaces the batch's own files, as a
-    * [[BatchEffect]] must: the rows are staged in `dir/_staging/<id>`, an
-    * earlier attempt's files deleted, then the staged ones renamed into
-    * place. `errors` should be cached: it is counted, then written. */
+    * it writes nothing. A replay replaces the batch's own files, so a job
+    * may run it again for a re-delivered batch: the rows are staged in
+    * `dir/_staging/<id>`, an earlier attempt's files deleted, then the
+    * staged ones renamed into place. The files stay at the top level:
+    * readers take the errors with `spark.read.parquet(dir)`, which failed
+    * with UNABLE_TO_INFER_SCHEMA on a layout of one `batch-<id>.parquet/`
+    * dir per batch. `errors` should be cached: it is counted, then
+    * written. */
   def write(errors: DataFrame, dir: String, batchId: Long): Long = {
     val n = errors.count()
     if (n > 0) {

@@ -6,31 +6,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-
-/** A per-batch side effect committed with [[MergeSink]]'s manifest — the
-  * Spark-native analog of the reference `DbCommand`'s ARBITRARY per-record
-  * SQL surface (reference: src/Shipwright.Core/Dataflows/Transformations/
-  * DbCommand.cs:118-144 executes any INSERT/UPDATE/stored-proc; the sink
-  * itself realizes only the keyed upsert/tombstone contract).
-  *
-  * Contract: the sink runs the effect once per batchId it commits, after
-  * the batch's rows are written and before the manifest rename that
-  * commits them — a re-delivered (already committed) micro-batch skips the
-  * effect, and an effect that throws leaves the table at its previous
-  * version. Under checkpointed `foreachBatch` the effect is therefore
-  * exactly-once EXCEPT for the crash window between effect execution and
-  * the rename, where replay re-runs it. The effect must therefore be
-  * idempotent per batchId (same contract a DbCommand upsert needed against
-  * its database).
-  */
-trait BatchEffect extends Serializable {
-  def apply(batch: DataFrame, batchId: Long): Unit
-}
 
 /** Exactly-once keyed MERGE sink — the Spark-native replacement for the
   * reference's per-record `DbCommand` upsert path (reference:
@@ -60,11 +40,12 @@ trait BatchEffect extends Serializable {
   *     already committed batch), so a re-delivered micro-batch after
   *     restart changes nothing: foreachBatch + checkpoint ⇒ exactly-once
   *
-  * All metadata and data IO goes through the Hadoop `FileSystem` /
-  * `FileContext` API resolved from `tableDir`'s scheme, so the same sink
-  * runs on `file:`, HDFS, or any store with atomic rename — and a real
-  * Iceberg catalog drops in behind the same merge(batch, batchId)
-  * interface where the jar exists.
+  * All metadata and data IO goes through the one Hadoop `FileSystem`
+  * resolved from `tableDir`'s scheme, so the same sink runs on `file:`,
+  * HDFS, or any store with atomic rename — and a real Iceberg catalog
+  * drops in behind the same merge(batch, batchId) interface where the jar
+  * exists. Per-batch side effects (the job's error rows) are plain code in
+  * the caller's `foreachBatch`, replay-safe on their own.
   *
   * Concurrency contract: SINGLE WRITER per table (the Iceberg-without-a-
   * catalog-lock reality). Within one JVM, ALL MergeSink instances over the
@@ -138,7 +119,6 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
   private val root: HPath = fs.makeQualified(new HPath(tableDir))
   private val tableLock: Object = MergeSink.lockFor(root.toString)
   fs.mkdirs(root)
-  private lazy val fc: FileContext = FileContext.getFileContext(root.toUri, hconf)
 
   private def manifestPath(v: Long): HPath = new HPath(root, s"_manifest.$v")
 
@@ -181,15 +161,9 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
     * from the table; within a batch the newest row per key (by
     * `versionCol`) decides whether the key survives. Replays converge:
     * deleting an absent key is a no-op.
-    *
-    * `effects`: [[BatchEffect]]s run after the batch's rows are written and
-    * before the commit — a re-delivered batchId skips them along with the
-    * merge, and one that throws leaves the table at its previous version
-    * (see the BatchEffect idempotence contract for the crash window).
     */
   def merge(batch: DataFrame, batchId: Long,
-            deleteCol: Option[String] = None,
-            effects: Seq[BatchEffect] = Nil): Unit = tableLock.synchronized {
+            deleteCol: Option[String] = None): Unit = tableLock.synchronized {
     val m = latest
     if (batchId <= m.batchId) return
 
@@ -221,7 +195,6 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
             .unionByName(rows),
           m.width, s"data_v$next")
       }
-    effects.foreach(_.apply(batch, batchId))
     // a tombstone batch can empty a touched bucket entirely — only buckets
     // that actually wrote rows enter the manifest; emptied ones drop out. A
     // batch that touches no bucket commits the same entries under its id.
@@ -293,8 +266,11 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
 
   /** The commit, one step: `m` lands as `_manifest.{m.version}` via tmp +
     * rename WITHOUT overwrite, so a writer that already published this
-    * version makes the rename fail loudly (optimistic-concurrency check)
-    * instead of being clobbered. Then gc.
+    * version makes the commit fail loudly (optimistic-concurrency check)
+    * instead of being clobbered. HDFS's rename refuses an existing
+    * destination atomically; the local filesystem's would replace it, so
+    * there the `exists` check makes it check-then-rename — as Hadoop's own
+    * no-overwrite rename on the local filesystem is. Then gc.
     *
     * Visible to tests: the collision spec drives this commit step directly
     * to simulate losing the cross-process race, whose timing window (between
@@ -305,15 +281,15 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
     val tmp = new HPath(root, "_manifest.tmp")
     val out = fs.create(tmp, true)
     try out.write(m.text.getBytes(UTF_8)) finally out.close()
-    try fc.rename(tmp, manifestPath(m.version), Options.Rename.NONE)
-    catch { case NonFatal(e) => throw collided(m.version, e) }
+    val dst = manifestPath(m.version)
+    if (fs.exists(dst) || !fs.rename(tmp, dst)) throw collided(m.version)
     gc(m)
   }
 
-  private def collided(version: Long, cause: Throwable) =
+  private def collided(version: Long) =
     new IllegalStateException(
       s"MergeSink at $root: commit of _manifest.$version collided — " +
-        "another writer holds this table (single-writer contract)", cause)
+        "another writer holds this table (single-writer contract)")
 
   /** Removes the manifests below `m` and the data dirs it does not
     * reference. A manifest above `m` means another writer committed past
@@ -322,7 +298,7 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
   private def gc(m: Manifest): Unit = {
     val entries = fs.listStatus(root)
     if (entries.exists(s => versionOf(s.getPath.getName).exists(_ > m.version)))
-      throw collided(m.version, null)
+      throw collided(m.version)
     val liveDirs = m.buckets.values.map(_.split("/").head).toSet
     entries.foreach { s =>
       val name = s.getPath.getName

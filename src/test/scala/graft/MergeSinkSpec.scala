@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sink.{BatchEffect, MergeSink, ProgressListener}
+import graft.sink.{MergeSink, ProgressListener}
 import graft.stream.TurnPos
 
 /** Exactly-once MERGE sink: keyed upsert, newest-wins, idempotent batch
@@ -300,51 +300,28 @@ class MergeSinkSpec extends AnyFunSuite {
     assert(Seq("_current", "_commits", "_commits.d").forall(n => !Files.exists(dir.resolve(n))))
   }
 
-  test("BatchEffect: runs once per committed batch, skipped on re-delivery") {
+  test("files a try left under the next version's data dir before its commit do not survive the retry") {
     import spark.implicits._
-    val dir = TestSpark.tempDir("merge_effect").toString
-    val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos")
-    val runs = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
-    val audit = new BatchEffect {
-      def apply(batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit =
-        runs.merge(batchId, 1, (a, b) => a + b)
-    }
-    val b0 = Seq(turn("a", 0, "v1", 1)).toDF()
-    sink.merge(b0, 0L, effects = Seq(audit))
-    sink.merge(b0, 0L, effects = Seq(audit))               // replay → skipped
-    sink.merge(Seq.empty[TurnPos].toDF(), 1L,
-      effects = Seq(audit))                                // empty batch still commits
-    sink.merge(b0, 1L, effects = Seq(audit))               // replay of empty id → skipped
-    assert(runs.get(0L) == 1 && runs.get(1L) == 1)
-    assert(tableOf(sink) == Set(("a", 0, "v1")))
-  }
-
-  test("BatchEffect that throws leaves the table at its version; the retry applies the batch") {
-    import spark.implicits._
-    val dir = TestSpark.tempDir("merge_effect_fail")
+    val dir = TestSpark.tempDir("merge_dead_try")
     val sink = new MergeSink(dir.toString, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
     sink.merge(Seq(turn("a", 0, "v1", 1)).toDF(), 0L)
-    val runs = new java.util.concurrent.atomic.AtomicInteger()
-    val failing: BatchEffect = (_, _) => {
-      runs.incrementAndGet()
-      throw new IllegalStateException("effect failed")
+    // a try of batch 1 that died before its commit: data_v1 holds files
+    // that no manifest references, written or still in the committer's
+    // scratch dir
+    val planted = Seq("data_v1/__bucket=0/part-00000-dead.parquet",
+      "data_v1/__bucket=3/part-00001-dead.parquet",
+      "data_v1/_temporary/0/_temporary/attempt-dead/part-00002-dead.parquet")
+      .map(dir.resolve)
+    planted.foreach { p =>
+      Files.createDirectories(p.getParent)
+      Files.write(p, "not parquet".getBytes("UTF-8"))
     }
-    val b1 = Seq(turn("a", 0, "v2", 10), turn("b", 0, "v1", 11)).toDF()
-    intercept[IllegalStateException](sink.merge(b1, 1L, effects = Seq(failing)))
     assert(sink.currentVersion == 0L)
     assert(tableOf(sink) == Set(("a", 0, "v1")))
-    def dataFiles(): Set[String] = Files.walk(dir).toArray
-      .map(_.asInstanceOf[java.nio.file.Path])
-      .filter(p => p.getFileName.toString.endsWith(".parquet")).map(_.toString).toSet
-    val failedTry = dataFiles().filter(_.contains("data_v1"))
-    assert(failedTry.nonEmpty)
-    // the retry runs the effect again and commits the batch
-    val counting: BatchEffect = (_, _) => runs.incrementAndGet()
-    sink.merge(b1, 1L, effects = Seq(counting))
-    assert(runs.get == 2)
+    sink.merge(Seq(turn("a", 0, "v2", 10), turn("b", 0, "v1", 11)).toDF(), 1L)
     assert(sink.currentVersion == 1L)
     assert(tableOf(sink) == Set(("a", 0, "v2"), ("b", 0, "v1")))
-    assert(dataFiles().intersect(failedTry).isEmpty)
+    assert(planted.forall(p => !Files.exists(p)), planted.filter(Files.exists(_)))
   }
 
   test("streaming foreachBatch + checkpoint: restart with replay converges (exactly-once)") {

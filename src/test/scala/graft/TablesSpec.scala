@@ -32,8 +32,6 @@ class TablesSpec extends AnyFunSuite {
     "q_dedup_cluster" -> ("connected components: each large-star/small-star round " +
       "checkpoints the rewritten edges, and the next round runs only if an edge moved"),
     "q_cluster_canonical" -> "the same connected-components loop as q_dedup_cluster",
-    "q_embed_neardup" -> ("the near-dup pairs are checkpointed so the persisted corpus " +
-      "is released before the build returns"),
     "q_ann_ivf" -> "the k centroids are collected to the driver and become literals",
     "q_csv_source" -> ("the strict CSV source's preview pass decides at build whether the " +
       "file yields rows or a stop event"))

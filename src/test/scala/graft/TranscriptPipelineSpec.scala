@@ -148,6 +148,85 @@ class TranscriptPipelineSpec extends AnyFunSuite {
       .as[TurnPos].collect().toSet == expected)
   }
 
+  /** Two files of in-order turns with stop-flagged ones, one micro-batch
+    * each. Event time stays under the 10-minute watermark delay, so the
+    * watermark does not move and no batch without data runs: batch 1 is
+    * the job's last. */
+  private val replayFiles: Seq[Seq[TurnPos]] = {
+    def t(conv: String, idx: Int, pos: Long, text: String = "ok") =
+      TurnPos(conv, idx, "user", text, "none", ts(pos), pos)
+    Seq(Seq(t("a", 0, 1), t("a", 1, 2, " "), t("a", 2, 3), t("b", 0, 4)),
+      Seq(t("a", 3, 5), t("b", 1, 6, " "), t("b", 2, 7), t("c", 0, 8, " "), t("c", 1, 9)))
+  }
+
+  private def writeReplayFile(cfg: TranscriptPipeline.Config, i: Int): Unit =
+    writeFileAt(cfg.inputDir, s"f$i", replayFiles(i).toDF(), System.currentTimeMillis() / 1000 - 2 + i)
+
+  private def runToEnd(cfg: TranscriptPipeline.Config) = {
+    val (q, sink) = TranscriptPipeline.startStateful(spark, cfg)
+    try q.processAllAvailable() finally q.stop()
+    (q, sink)
+  }
+
+  /** The job converged over both replay files: the table is the batch
+    * repair of the valid turns, and the errors dir holds each stop-flagged
+    * turn once. */
+  private def assertConverged(cfg: TranscriptPipeline.Config, sink: graft.sink.MergeSink): Unit = {
+    val all = replayFiles.flatten
+    val stopped = all.filter(_.text.trim.isEmpty)
+    val expected = OrderRepair.batch(all.filterNot(stopped.contains).toDS(), strict = false)
+      .collect().toSet
+    assert(sink.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts", "pos")
+      .as[TurnPos].collect().toSet == expected)
+    val errs = spark.read.parquet(cfg.errorsDir).select("conv_id", "turn_idx", "pos")
+      .as[(String, Int, Long)].collect()
+    assert(errs.sorted.toSeq == stopped.map(s => (s.conv_id, s.turn_idx, s.pos)).sorted)
+  }
+
+  test("a batch re-delivered after its foreachBatch ran rewrites its error files; the merge skips it") {
+    val cfg = dirs("tpr").copy(maxFilesPerTrigger = 1)
+    writeReplayFile(cfg, 0)
+    writeReplayFile(cfg, 1)
+    runToEnd(cfg)
+    // a crash after foreachBatch returned, before Spark logged the batch:
+    // the batch's commit-log entry is missing, so the restart runs it again
+    val commits = java.nio.file.Paths.get(cfg.checkpointDir, "commits")
+    val ids = Files.list(commits).toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(_.forall(_.isDigit)).map(_.toLong)
+    assert(ids.max == 1L, ids.mkString(", "))
+    Files.delete(commits.resolve("1"))
+    Files.deleteIfExists(commits.resolve(".1.crc"))
+    val version = new graft.sink.MergeSink(cfg.outputTable, Seq("conv_id", "turn_idx"), "pos")
+      .currentVersion
+    val (q, sink) = runToEnd(cfg)
+    assert(q.recentProgress.exists(p => p.batchId == 1 && p.numInputRows == replayFiles(1).size))
+    assert(sink.currentVersion == version)
+    assertConverged(cfg, sink)
+  }
+
+  test("an error write that throws fails the batch before the merge; the restart converges") {
+    val cfg = dirs("tpb").copy(maxFilesPerTrigger = 1)
+    writeReplayFile(cfg, 0)
+    val (_, sink) = runToEnd(cfg)
+    val version = sink.currentVersion
+    // a plain file where the errors dir was: the next error write throws
+    val errs = java.nio.file.Paths.get(cfg.errorsDir)
+    val aside = TestSpark.tempDir("tpb_aside").resolve("errs")
+    Files.move(errs, aside)
+    Files.write(errs, "blocked".getBytes("UTF-8"))
+    writeReplayFile(cfg, 1)
+    val (q, _) = TranscriptPipeline.startStateful(spark, cfg)
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+    finally q.stop()
+    assert(q.exception.isDefined)
+    assert(sink.currentVersion == version)
+    Files.delete(errs)
+    Files.move(aside, errs)
+    val (_, restarted) = runToEnd(cfg)
+    assert(restarted.currentVersion == version + 1)
+    assertConverged(cfg, restarted)
+  }
+
   test("a micro-batch of only malformed rows for a conversation keeps its buffered turns' timeout") {
     val cfg = dirs("tpt").copy(maxFilesPerTrigger = 1)
     val t0 = 1000000L
